@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-run benchmark: one JSON line with per-query wall seconds at
   * SPARK_GRAFT_SF_DIR. Queries execute fully via the noop sink
@@ -27,16 +27,12 @@ object Bench {
     // Movement bytes are measured post-codec, so artifacts produced
     // under a non-default codec say so in their filename.
     val ioCodec = sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    val spark = Session.local(cpus.toInt,
+      "spark.sql.shuffle.partitions" -> shufflePartitions,
       // belt to the per-query System.gc() braces: the cleaner's own
       // periodic GC defaults to 30 min — longer than an entire batch
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.io.compression.codec", ioCodec)
+      "spark.cleaner.periodicGC.interval" -> "2min",
+      "spark.io.compression.codec" -> ioCodec,
       // ObjectHashAggregate (typed Aggregators / udaf on the SQL
       // surface) falls back to SORT-based aggregation after 128
       // distinct keys per task BY DEFAULT — at sf100 that turned
@@ -46,18 +42,11 @@ object Bench {
       // p512), so a 4M-key hash map threshold keeps the partial
       // aggregate map-combinable; state is per-key bounded (64-int
       // simhash vector). Execution knob only — results unchanged.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4194304")
     // presentation sorts detach (lazy localCheckpoint): the range
     // sampling pass reads materialized blocks instead of re-executing
     // the query DAG — execution knob only (SparkEntry.presentBy).
-    // SPARK_GRAFT_PRESENT_DETACH=0 disables for A/B soaks: for a
-    // cheap-map row-preserving child, re-executing the scan twice
-    // can beat storing the full result.
-    if (!sys.env.get("SPARK_GRAFT_PRESENT_DETACH").contains("0"))
-      spark.conf.set("graft.present.detach", "true")
+    spark.conf.set("graft.present.detach", "true")
 
     // Data-movement accounting: task-level shuffle/spill/input bytes
     // accumulated via a SparkListener, snapshotted per query — wall
@@ -76,15 +65,6 @@ object Bench {
     // per-query slot reads -1 (never summed into total), and the
     // process exits nonzero — a broken query must not make the bench
     // look faster or the JSON look complete.
-    // SPARK_GRAFT_BENCH_CORE=1: swap in SparkEntry.coreQueries where
-    // one exists — the analytic-core rendering (no presentation sort)
-    // a 100 TB run executes. Soak knob only; the driver contract and
-    // Verify always run the presentation-exact `queries` map.
-    val coreMode = sys.env.get("SPARK_GRAFT_BENCH_CORE").contains("1")
-    def queryFor(name: String): (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      if (coreMode) SparkEntry.coreQueries.getOrElse(name, SparkEntry.queries(name))
-      else SparkEntry.queries(name)
-
     def execute(name: String): Double = {
       // Shuffle files of FINISHED queries are only deleted when the
       // ContextCleaner's weak refs get GC'd — with a large soak heap
@@ -97,7 +77,7 @@ object Bench {
       // retention policy.
       System.gc()
       val t0 = System.nanoTime()
-      try queryFor(name)(spark, sfDir)
+      try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -123,7 +103,7 @@ object Bench {
     // through Tables.* (events is TIMESTAMP(NANOS) parquet and needs
     // its reader's legacy conf); each table warms in its own try so
     // one failure can't skip the rest.
-    val warmReaders: Seq[(SparkSession, String) => org.apache.spark.sql.DataFrame] = Seq(
+    val warmReaders: Seq[(SparkSession, String) => DataFrame] = Seq(
       Tables.region, Tables.nation, Tables.customer, Tables.supplier,
       Tables.part, Tables.orders, Tables.lineitem, Tables.events,
       Tables.documents, Tables.embeddings)
@@ -156,17 +136,7 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // SPARK_GRAFT_BENCH_REPS > 1 (targeted tuning only): run each
-    // query N times and report the minimum — isolates plan cost from
-    // first-run JIT/codegen-compile noise when comparing variants.
-    // The driver contract stays reps=1 (cold, one pass).
-    val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(1)
-    val results = names.map { n =>
-      // movement is attributed on the FIRST rep (cold, the driver
-      // contract); min-time still comes from all reps
-      val ts = executeTracked(n) +: Seq.fill(reps - 1)(execute(n))
-      n -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
-    }
+    val results = names.map(n => n -> executeTracked(n))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
@@ -182,7 +152,7 @@ object Bench {
       if (p.waitFor() == 0 && s.matches("[0-9a-f]+")) s else "unknown"
     } catch { case _: Throwable => "unknown" }
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","sha":"$sha","queries":$qs,"probe":$probeJson,"failed":${failed.mkString("[", ",", "]")},"core":$coreMode,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sha":"$sha","queries":$qs,"probe":$probeJson,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""
     println(json)
     // The driver archives only the LAST 2000 chars of stdout, and the
     // per-query map alone exceeds that — so the full line above loses
@@ -191,7 +161,7 @@ object Bench {
     // map) so the archived tail always contains one complete,
     // parseable JSON record with the headline numbers.
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","sha":"$sha","n_queries":${names.size},"probe":$probeJson,"failed":${failed.mkString("[", ",", "]")},"core":$coreMode,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","sha":"$sha","n_queries":${names.size},"probe":$probeJson,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir"}"""
     println(compact)
     // stdout is wrapped in sbt [info] noise, so also write the bare
     // JSON where tooling can parse it without de-prefixing. The full

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Records the healthy per-query shuffle-write BYTES of the entire
   * driver-contract surface at one scale factor — the generator for
   * `tools/movement_baseline_sf0001.json`, which MovementSpec turns
@@ -9,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * (the curated family budgets in that spec encode intent; this
   * baseline gives the long tail a regression net too).
   *
-  * The session deliberately mirrors the TEST session (local[4],
-  * 4 shuffle partitions) rather than Bench's local[32]: shuffle
+  * The session is the TEST session — the same `Session.local(4)`
+  * call `TestSpark` makes — rather than Bench's local[32]: shuffle
   * bytes are deterministic for a fixed plan + data + partition
   * count, and the budgets are enforced under the test session.
   *
@@ -22,13 +20,7 @@ object MovementBaseline {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "tools/movement_baseline_sf0001.json"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(4)
     graft.plans.GraftFunctions.register(spark)
     graft.plans.GraftFunctions.installOptimizations(spark)
 

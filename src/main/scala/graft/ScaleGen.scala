@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the sf1 / sf10 soaks (VERDICT r4 item #5;
@@ -67,13 +67,7 @@ object ScaleGen {
     require(factor <= 4096,
       s"factor $factor exceeds the 4096 distinct embedding isometries " +
         "— extend the transform families before scaling further")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(32)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def in(name: String): DataFrame = spark.read.parquet(s"$inDir/$name.parquet")

@@ -1,17 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratchpad main — also the driver-contract smoke check:
   * prints ENTRY-ROWS=<n> for SparkEntry.entry.
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "8")
-      .getOrCreate()
+    val spark = Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY-ROWS=$n")

@@ -302,46 +302,6 @@ object SparkEntry {
       present(Ann.embSemanticIncremental(s, d), "vec_id", "hist_id")),
   )
 
-  /** ANALYTIC-CORE renderings of the row-preserving heavies:
-    * identical operator output, NO presentation sort — the shape a
-    * 100 TB run actually executes (write-partitioned output, no
-    * global ordering). Round 12 removed the HONESTY role this map
-    * used to carry: the contract rendering's single-partition funnel
-    * (the round-9/11 ×25-×130 decade on these queries) is gone —
-    * [[presentScan]] sorts in parallel, and the contract/core gap is
-    * now just the true cost of one extra map pass + a parallel
-    * global sort (mm_tile sf100: 444.8 s funnel → 67.1 s contract vs
-    * 3.4 s core). The map stays as the PURE-ENGINE measurement seam:
-    * Bench swaps these in under SPARK_GRAFT_BENCH_CORE=1; Verify
-    * never reads it, so the oracle contract is untouched.
-    */
-  def coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_anomaly" -> ((s, d) => Relational.qAnomaly(s, d)),
-    "q_attribution" -> ((s, d) => Relational.qAttribution(s, d)),
-    "dedup_passthrough" -> ((s, d) => withTsMs(Dedup.dedupPassthrough(s, d))),
-    "docs_pii_scrub" -> ((s, d) => TextAnalysis.piiScrub(s, d)),
-    "text_charclass" -> ((s, d) => TextAnalysis.textCharClass(s, d)),
-    // round-11 widen found the per-tile exploded output spilling
-    // 1.3 GB through the presentation sort at sf100 (x23/decade);
-    // the engine pass itself is a map-only explode (3.4 s core wall)
-    "mm_tile" -> ((s, d) => Multimodal.tilePlan(
-      Multimodal.decodeFeatures(Multimodal.mediaFromDocuments(s, d))).toDF()),
-    // the round-11 widen's other >x14/decade walls: all row-preserving
-    // outputs (100 M rows at sf100) whose growth lives in the
-    // presentation sort, not the engine pass — same q_anomaly class
-    "q_range_frame" -> ((s, d) => Relational.qRangeFrame(s, d)),
-    "q_rank_family" -> ((s, d) => Relational.qRankFamily(s, d)),
-    "q_scd2" -> ((s, d) => Relational.qScd2(s, d)),
-    "q_scalar_subq" -> ((s, d) => Relational.qScalarSubquery(s, d)),
-    "q_corr_subq" -> ((s, d) => Relational.qCorrSubquery(s, d)),
-    // round-13 re-measure: the winnowed-fingerprint flatMap is
-    // map-only and shuffle-free; the contract row's 1.2 GB shuffle +
-    // 2.7 GB spill at sf100 is ENTIRELY the parallel presentation
-    // sort of the ~100 M-row (doc_id, fp) output (82.5 s contract —
-    // already 3.7x down from r11's single-partition funnel)
-    "text_fingerprint" -> ((s, d) => TextAnalysis.textFingerprint(s, d)),
-  )
-
   private def qRangeJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
     val purchases = ev.filter(col("event_type") === "purchase")
@@ -385,7 +345,7 @@ object SparkEntry {
     * detaches, in any context. The detach exists to protect an
     * expensive-small child from the range sampler's re-execution;
     * these queries are the opposite quadrant (output ≈ corpus-sized,
-    * child a cheap map pass — the coreQueries membership), where the
+    * child a cheap map pass), where the
     * sf100 A/B measured the checkpoint of the 100 M-row result as
     * the dominant cost: mm_tile 200.4 s detached (2.2 GB spill via
     * the MemoryStore, 346.8 s with SER blocks) vs **81.2 s** letting

@@ -1541,20 +1541,17 @@ object Ann {
     * monitor shape: navigation loss measured ON the graph a 100 TB
     * run actually serves, at a cost proportional to one corpus scan.
     * Same per-query (q_id, n_match, recall) output shape as the full
-    * monitor, which stays as the small-sf equality anchor.
-    *
-    * `multiEntry = false` keeps the pre-round-13 single global
-    * min-vec_id seeding — the legacy control for the seeding A/B
-    * (GraphBuildProbe `recall_s` + SPARK_GRAFT_GRAPH_SEED=single),
-    * never the production path.
+    * monitor, which stays as the small-sf equality anchor. The beam
+    * is seeded from the entry node of every cell a query probed; the
+    * single global min-vec_id seeding it replaced is measured against
+    * it in BASELINE.md round-13 (multi-entry beam seeding A/B).
     */
   def annRecallGraphSampled(spark: SparkSession, dir: String, nQ: Int = 32,
                             k: Int = 5, beam: Int = 4, rounds: Int = 3,
                             graphK: Int = 3, rate: Double = 0.1,
                             clusters: Int = 0, iters: Int = 1,
                             nprobe: Int = 2, gprobe: Int = 2,
-                            trainSampleTarget: Long = 0L,
-                            multiEntry: Boolean = true): DataFrame = {
+                            trainSampleTarget: Long = 0L): DataFrame = {
     val nodes = knnSampleFrame(spark, dir, rate)
     val qs = knnQuerySample(nodes, nQ)
     val q = nodes.join(broadcast(qs), col("vec_id") === col("q_id"))
@@ -1571,13 +1568,11 @@ object Ann {
     val edges = cellEdgesOn(spark, a, graphK)
       .select(col("vec_id").as("src"), col("n_id").as("dst"))
     val entries = a.groupBy("cid").agg(min("vec_id").as("vec_id"))
-    val seeds =
-      if (!multiEntry) None
-      else Some(a.join(broadcast(qs), col("vec_id") === col("q_id"))
-        .select(col("q_id"), col("cid"))
-        .join(broadcast(entries), "cid")
-        .select(col("q_id"), col("vec_id")).distinct())
-    val approx = beamSearchOn(edges, nodes, q, k, beam, rounds, seeds)
+    val seeds = a.join(broadcast(qs), col("vec_id") === col("q_id"))
+      .select(col("q_id"), col("cid"))
+      .join(broadcast(entries), "cid")
+      .select(col("q_id"), col("vec_id")).distinct()
+    val approx = beamSearchOn(edges, nodes, q, k, beam, rounds, Some(seeds))
       .select(col("q_id"), col("n_id")).withColumn("m", lit(1))
     val sim = V.cosineWithNorms(
       V.dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
@@ -1754,29 +1749,23 @@ object Ann {
     * the IVF probe/recall trade [[annRecall]] monitors on the search
     * side.
     */
-  /** The (vec_id, cid) coarse-cell assignment behind
-    * [[embSemanticPairs]] — top-nprobe cells per vector, the
-    * embRouter struct-sort shape, map-only (ties break to the larger
-    * cid, matching the oracle's score DESC, cid DESC order). Past
-    * [[literalKMax]] the same sort/slice runs over the FOLDED
-    * broadcast centroid array instead of K inlined literal structs
-    * (identical scores and tie semantics — equality spec-pinned),
-    * which is what lets auto-K grow with the corpus without hitting
-    * the plan-literal wall. Package-visible for balance diagnostics
-    * (SemDedupProbe).
-    */
-  private[graft] def semanticAssignments(e: DataFrame, k: Int,
-                                         iters: Int, nprobe: Int): DataFrame =
-    semanticAssignmentsFull(e, k, iters, nprobe).select("vec_id", "cid")
-
-  /** [[semanticAssignments]] CARRYING the vector payload
-    * (vec_id, cid, embedding, n2): the assignment is map-only over
-    * the norm frame, so the payload rides for free — and the pair
-    * join verifies IN-JOIN on the cid-shuffled sides, so the shuffle
-    * volume is n·nprobe·(dim payload), linear in the corpus, instead
-    * of Σn_k² candidate rows re-fetching their embeddings through
-    * id-keyed joins (the round-8 sf10 movement net measured that
-    * shape at 2.7 GB where this one moves ~0.1 GB).
+  /** The coarse-cell assignment behind [[embSemanticPairs]] —
+    * top-nprobe cells per vector, the embRouter struct-sort shape,
+    * map-only (ties break to the larger cid, matching the oracle's
+    * score DESC, cid DESC order). Past [[literalKMax]] the same
+    * sort/slice runs over the FOLDED broadcast centroid array instead
+    * of K inlined literal structs (identical scores and tie semantics
+    * — equality spec-pinned), which is what lets auto-K grow with the
+    * corpus without hitting the plan-literal wall.
+    *
+    * Rows CARRY the vector payload (vec_id, cid, embedding, n2): the
+    * assignment is map-only over the norm frame, so the payload rides
+    * for free — and the pair join verifies IN-JOIN on the
+    * cid-shuffled sides, so the shuffle volume is n·nprobe·(dim
+    * payload), linear in the corpus, instead of Σn_k² candidate rows
+    * re-fetching their embeddings through id-keyed joins (the
+    * round-8 sf10 movement net measured that shape at 2.7 GB where
+    * this one moves ~0.1 GB).
     */
   private[graft] def semanticAssignmentsFull(e: DataFrame, k: Int,
                                              iters: Int, nprobe: Int): DataFrame =
@@ -2471,7 +2460,7 @@ object Ann {
     * redistributes its full floored mass instead of shedding the
     * missing edges' share. On the exact feed out-degree ≡ k by the
     * kNN construction, so the contract output is provably unchanged.
-    * Measured: GraphBuildProbe `rank` mode (BASELINE round-12).
+    * Measured: the routed-feed rank loop in BASELINE.md round-12.
     */
   def embGraphRankOn(rawEdges: DataFrame, k: Int = 3, iters: Int = 2,
                      checkpointDir: Option[String] = None): DataFrame = {

@@ -525,20 +525,21 @@ object Multimodal {
       import scala.concurrent.duration.Duration
       import scala.util.Try
       val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val ef = Future(d.join(
-        d.groupBy("h").agg(count(lit(1)).as("c")), "h")
-        .select(col("doc_id"), (col("c") > 1).as("f_exact"))
-        .localCheckpoint())
-      // the COLLAPSED components path (phashGroupsOf): the planted
-      // corpus is dup-heavy by construction, so per-doc pair
-      // enumeration is Σ m_fp² — the sf100 solo wrote ~60 GB of pair
-      // exchange into ENOSPC before this leg switched to
-      // distinct-fingerprint components (result-identical, spec-pinned)
-      val pgTry = Try(phashGroupsOf(media, maxDist, maxRounds))
-      val exTry = Try(Await.result(ef, Duration.Inf))
-      pool.shutdown()
-      (exTry.get, pgTry.get)
+      try {
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        val ef = Future(d.join(
+          d.groupBy("h").agg(count(lit(1)).as("c")), "h")
+          .select(col("doc_id"), (col("c") > 1).as("f_exact"))
+          .localCheckpoint())
+        // the COLLAPSED components path (phashGroupsOf): the planted
+        // corpus is dup-heavy by construction, so per-doc pair
+        // enumeration is Σ m_fp² — the sf100 solo wrote ~60 GB of pair
+        // exchange into ENOSPC before this leg switched to
+        // distinct-fingerprint components (result-identical, spec-pinned)
+        val pgTry = Try(phashGroupsOf(media, maxDist, maxRounds))
+        val exTry = Try(Await.result(ef, Duration.Inf))
+        (exTry.get, pgTry.get)
+      } finally pool.shutdown() // even when a fatal error escapes the Trys
     }
     val phash = pg.join(
       pg.groupBy("group_id").agg(count(lit(1)).as("gsz")), "group_id")

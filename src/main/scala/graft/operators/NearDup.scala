@@ -256,18 +256,19 @@ object NearDup {
       import scala.concurrent.duration.Duration
       import scala.util.Try
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val jf = Future(jacPairs.getOrElse(
-        jaccardPairs(spark, dir, threshold).select("a_id", "b_id").localCheckpoint()))
-      val sf = Future(simPairs.getOrElse(
-        simhashPairs(spark, dir, maxHamming).select("a_id", "b_id").localCheckpoint()))
-      // round-14 (ADVICE): settle BOTH futures before rethrowing
-      // either failure — an early rethrow on one leg left the other
-      // leg's in-flight Spark jobs running past the exception.
-      val jTry = Try(Await.result(jf, Duration.Inf))
-      val sTry = Try(Await.result(sf, Duration.Inf))
-      pool.shutdown()
-      (jTry.get, sTry.get)
+      try {
+        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+        val jf = Future(jacPairs.getOrElse(
+          jaccardPairs(spark, dir, threshold).select("a_id", "b_id").localCheckpoint()))
+        val sf = Future(simPairs.getOrElse(
+          simhashPairs(spark, dir, maxHamming).select("a_id", "b_id").localCheckpoint()))
+        // round-14 (ADVICE): settle BOTH futures before rethrowing
+        // either failure — an early rethrow on one leg left the other
+        // leg's in-flight Spark jobs running past the exception.
+        val jTry = Try(Await.result(jf, Duration.Inf))
+        val sTry = Try(Await.result(sf, Duration.Inf))
+        (jTry.get, sTry.get)
+      } finally pool.shutdown() // even when a fatal error escapes the Trys
     }
     val jac = endpoints(jacFrame, "a_id", "b_id")
       .withColumn("f_jaccard", lit(true))
@@ -873,10 +874,11 @@ object NearDup {
     * (E[matches/PERMS] = J), intersection and union sizes, and both
     * ratios as ×10⁴ integer floors — no float compare anywhere.
     *
-    * Shape: the [[minhashLshPairs]] pair set (bounded candidates) +
-    * two broadcast-scale joins onto the signature table and the
-    * shingle sets; per-pair work is one PERMS-wide zip and one array
-    * intersect on candidates only.
+    * Shape: the [[verifiedJaccardSets]] pair set (the LSH
+    * candidates' verified pairs, each arriving with both shingle
+    * arrays) + two joins onto one lazily checkpointed signature
+    * table; per-pair work is one array intersect and one PERMS-wide
+    * zip on verified pairs only.
     */
   def minhashEstimate(spark: SparkSession, dir: String,
                       threshold: Double = 0.5): DataFrame = {
@@ -1165,7 +1167,7 @@ object NearDup {
         .unionByName(viaEdges)
         .groupBy("doc_id").agg(min("label").as("label"),
           max(when(col("own"), col("label"))).as("prev"))
-        .observe(obs, count(when(col("label") =!= col("prev"), 1)).as("changed"))
+        .observe(obs, count(when(not(col("label") <=> col("prev")), 1)).as("changed"))
         .localCheckpoint()
       converged = obs.get.apply("changed").asInstanceOf[Long] == 0L
       labels = next.select("doc_id", "label")

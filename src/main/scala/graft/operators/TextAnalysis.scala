@@ -269,10 +269,10 @@ object TextAnalysis {
     * DETACHED (lazy localCheckpoint) before the join: left fused
     * under the join, the aggregate makes AQE's skew split
     * structurally ineligible — OptimizeSkewedJoin only matches
-    * bare-shuffle join children (measured: SkewBench/BASELINE
-    * round-7) — so the hot-hash partitions would straggle
-    * unmitigated; detached, both children are fresh exchanges and
-    * the split fires. The detach costs one |distinct-hash|-table
+    * bare-shuffle join children (measured: the skew-mitigation A/B,
+    * BASELINE.md round-7) — so the hot-hash partitions would
+    * straggle unmitigated; detached, both children are fresh
+    * exchanges and the split fires. The detach costs one |distinct-hash|-table
     * materialization + re-exchange, orders below the corpus-sized
     * left side it protects.
     */
@@ -779,9 +779,9 @@ object TextAnalysis {
     * LEFT side, and AQE's skew split only fires when the join's
     * children are bare shuffle stages — fused LM aggregates would
     * silently disable it ([[docsChunkDedup]]'s shape note; measured
-    * in SkewBench/BASELINE round-7). The detach also materializes
-    * cBg ONCE for its two consumers (the doc join and the prefix
-    * re-aggregate). Docs under 2 tokens have no bigrams and are
+    * in the skew-mitigation A/B, BASELINE.md round-7). The detach
+    * also materializes cBg ONCE for its two consumers (the doc join
+    * and the prefix re-aggregate). Docs under 2 tokens have no bigrams and are
     * absent by construction.
     */
   def textBigramLm(spark: SparkSession, dir: String): DataFrame = {
@@ -1041,7 +1041,7 @@ object TextAnalysis {
     // Zipf-hot join keys: the detach materializes it once AND keeps
     // AQE's skew split eligible (see docsChunkDedup's shape note) —
     // which is exactly the regime where the salted variant's ×S
-    // replication stops paying (SkewBench: eligible AQE beat salting)
+    // replication stops paying (BASELINE.md round-7: eligible AQE beat salting)
     val marg = toks.groupBy("tok").agg(count(lit(1)).as("c"))
       .withColumn("ht", xxhash64(col("tok")))
       .localCheckpoint()
@@ -1099,8 +1099,8 @@ object TextAnalysis {
     * plain variant's row-for-row (equality spec).
     *
     * LIB SEAM, not a contract query (demoted round 8): the round-7
-    * SkewBench A/B showed that once the marginal is detached (see
-    * [[coocParts]]), AQE's skew split is ELIGIBLE and beats this ×S
+    * skew-mitigation A/B (BASELINE.md) showed that once the marginal
+    * is detached (see [[coocParts]]), AQE's skew split is ELIGIBLE and beats this ×S
     * replication — which costs ~9.7× at 10× data when no key is
     * actually hot. Use the plain variant by default; select this
     * rendering only on q_skew_profile evidence of a hot join key in

@@ -71,6 +71,22 @@ object DedupStream {
     (out, w.anchorMs)
   }
 
+  /** Keeps `s` until its event-time timeout `expiresMs`. When that is
+    * already below the watermark — a row that passed the late-row
+    * filter met an anchor the watermark has outrun, as when one merged
+    * feed trails another by more than the ttl — the state is removed
+    * instead: Spark rejects a timeout earlier than the watermark, and
+    * removing is exact, because every later row that reaches this key
+    * has ts ≥ the watermark > `expiresMs`, so the anchor can no longer
+    * suppress anything.
+    */
+  private def keepUntil[S](state: GroupState[S], s: S, expiresMs: Long): Unit =
+    if (expiresMs < state.getCurrentWatermarkMs()) state.remove()
+    else {
+      state.update(s)
+      state.setTimeoutTimestamp(expiresMs)
+    }
+
   /** Multi-topic MERGE ahead of dedup — the streaming rendering of
     * the reference's `multipleTopics` / `topicsPattern` consumer
     * (environment.conf:7-10; a Pulsar connector surfaces the merged
@@ -183,10 +199,7 @@ object DedupStream {
           } else {
             val (emitted, anchor) =
               chainPrimes(batch.toSeq, ttlMs, state.getOption.map(_.primeTsMs))
-            anchor.foreach { p =>
-              state.update(PrimeAnchor(p))
-              state.setTimeoutTimestamp(p + ttlMs)
-            }
+            anchor.foreach(p => keepUntil(state, PrimeAnchor(p), p + ttlMs))
             emitted.iterator
           }
       }
@@ -494,10 +507,7 @@ object DedupStream {
                   out += e
               }
             }
-            st.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.primeTsMs + ttlMs)
-            }
+            st.foreach(s => keepUntil(state, s, s.primeTsMs + ttlMs))
             out.result().iterator
           }
       }
@@ -649,41 +659,19 @@ object DedupStream {
             state.remove()
             Iterator.empty
           } else {
-            var a = state.getOption.map(_.primeTsMs)
-            val out = Seq.newBuilder[Annotated]
+            val w = new ChainWalker(ttlMs, state.getOption.map(_.primeTsMs))
             // one key's micro-batch slice (bounded, see dedupBounded)
-            batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
+            val out = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).map { e =>
               val t = e.ts.getTime
-              a match {
-                case Some(p) if t - p <= ttlMs =>
-                  out += Annotated(e.event_id, e.ts, is_dup = true, t - p)
-                case _ =>
-                  a = Some(t)
-                  out += Annotated(e.event_id, e.ts, is_dup = false, 0L)
-              }
+              val prior = w.anchorMs // read before admit: the delay's anchor
+              if (w.admit(t)) Annotated(e.event_id, e.ts, is_dup = false, 0L)
+              else Annotated(e.event_id, e.ts, is_dup = true, t - prior.get)
             }
-            a.foreach { p =>
-              state.update(PrimeAnchor(p))
-              state.setTimeoutTimestamp(p + ttlMs)
-            }
-            out.result().iterator
+            w.anchorMs.foreach(p => keepUntil(state, PrimeAnchor(p), p + ttlMs))
+            out.iterator
           }
       }
   }
-
-  /** NOTE on Spark 4's `transformWithState`: the reference cache maps
-    * 1:1 onto it — a per-content-key `ValueState[Long]` with
-    * `TTLConfig(ttl)` is literally Guava's `expireAfterWrite`
-    * (wall-clock TTL; put-on-miss-only means duplicates never call
-    * `update` and so never refresh). That rendering is NOT shipped
-    * here: transformWithState mandates the RocksDB state store
-    * provider, whose per-batch snapshot/zip cycle is pathologically
-    * slow on this sandbox's filesystem (a single micro-batch did not
-    * commit in minutes). The flatMapGroupsWithState operators above
-    * carry the same semantics on the default HDFS-backed store and
-    * are the tested surface; swap to transformWithState + TTLConfig
-    * where RocksDB is the store of record.
-    */
 
   /** Streaming sessionization — the streaming analog of the batch
     * gaps-and-islands q_sessionize: the built-in `session_window`

@@ -7,16 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * suites sequentially in one forked JVM).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4) // MovementBaseline's session too
   val sf: String = "/root/testdata/sf0.001"
 
   /** Recursive temp-dir cleanup with the directory stream CLOSED

@@ -2,6 +2,7 @@ package graft
 
 import graft.streaming.DedupStream
 import graft.streaming.DedupStream.Ev
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, lit, map, timestamp_millis}
 import org.apache.spark.sql.streaming.OutputMode
@@ -265,6 +266,87 @@ class StreamingSpec extends SparkSpec {
       assert(got === batchFirst)
       assert(got === Set(1L, 2L, 4L))
     } finally q.stop()
+  }
+
+  test("a merged feed trailing the other by more than the ttl: ttl chain, bounded cache " +
+    "and annotate each equal the replay of the same trigger split") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = 1700000000000L
+    val ttl = 60000L
+    // (feed, rows) per trigger. Feed 0 runs 30 min of event time ahead,
+    // so trigger 3's rows from feed 1 pass the late-row filter (the
+    // previous trigger's watermark) yet sit more than the ttl below the
+    // current one: their anchors expire before they are stored
+    val triggers: Seq[(Int, Seq[Ev])] = Seq(
+      0 -> Seq(ev(1, base), ev(2, base + 1000, user = 2)),
+      0 -> Seq(ev(3, base + 1800000, user = 3)),
+      1 -> Seq(ev(4, base + 10000), // dup of 1 against an expired anchor
+        ev(5, base + 20000, user = 4), // new key, expired on arrival
+        ev(6, base + 90000, user = 2)), // 2's anchor is past the ttl: prime
+      0 -> Seq(ev(7, base + 1805000, user = 3)), // dup of 3
+      1 -> Seq(ev(8, base + 1500000), ev(9, base + 1500500))) // 1 readmitted, then its dup
+    // a continuously fed stream never idles, so no empty trigger runs
+    // between two adds to advance the watermark on its own
+    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val ndPrev = spark.conf.getOption(ndKey)
+    spark.conf.set(ndKey, "false")
+    def run(name: String)(op: Dataset[Ev] => Dataset[_]): Array[Row] = {
+      val feeds = Seq(MemoryStream[Ev], MemoryStream[Ev])
+      val q = op(DedupStream.mergeTopics(feeds.map(_.toDS()))).writeStream
+        .format("memory").queryName(name).outputMode(OutputMode.Append).start()
+      try {
+        triggers.foreach { case (f, rows) =>
+          feeds(f).addData(rows: _*); q.processAllAvailable()
+        }
+        spark.table(name).collect()
+      } finally q.stop()
+    }
+    try {
+      // chainPrimes replay, per trigger, anchors carried across triggers
+      val anchors = scala.collection.mutable.Map.empty[String, Long]
+      val primes = triggers.flatMap { case (_, rows) =>
+        rows.groupBy(DedupStream.contentKeyOf).toSeq.flatMap { case (k, g) =>
+          val (out, a) = DedupStream.chainPrimes(g, ttl, anchors.get(k))
+          a.foreach(anchors(k) = _)
+          out
+        }
+      }
+      val chain = run("trail_chain")(DedupStream.dedupTtlChain(_, ttl))
+        .map(_.getLong(0)).toSet
+      assert(chain === primes.map(_.event_id).toSet)
+      assert(chain === Set(1L, 2L, 3L, 5L, 6L, 8L))
+
+      // slot replay at maxEntries = 1: every key shares the one slot
+      var slot = Option.empty[(String, Long)]
+      val slotPrimes = triggers.flatMap { case (_, rows) =>
+        rows.sortBy(e => (e.ts.getTime, e.event_id)).filter { e =>
+          val (k, t) = (DedupStream.contentKeyOf(e), e.ts.getTime)
+          val dup = slot.exists { case (sk, p) => sk == k && t - p <= ttl }
+          if (!dup) slot = Some((k, t))
+          !dup
+        }.map(_.event_id)
+      }.toSet
+      val bounded = run("trail_bounded")(DedupStream.dedupBounded(_, ttl, maxEntries = 1))
+        .map(_.getLong(0)).toSet
+      assert(bounded === slotPrimes)
+      assert(bounded === Set(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L))
+
+      // annotate: a duplicate's delay runs from its key's latest prime
+      val expectAnn = triggers.flatMap(_._2).map { e =>
+        val t = e.ts.getTime
+        if (primes.exists(_.event_id == e.event_id)) (e.event_id, false, 0L)
+        else (e.event_id, true, t - primes.filter(p => DedupStream.contentKeyOf(p) ==
+          DedupStream.contentKeyOf(e) && p.ts.getTime <= t).map(_.ts.getTime).max)
+      }.sortBy(_._1)
+      val ann = run("trail_annotate")(DedupStream.annotate(_, ttl))
+        .map(r => (r.getLong(0), r.getBoolean(2), r.getLong(3))).sortBy(_._1).toSeq
+      assert(ann === expectAnn)
+      assert(ann.filter(_._2) === Seq((4L, true, 10000L), (7L, true, 5000L), (9L, true, 500L)))
+    } finally {
+      ndPrev match { case Some(v) => spark.conf.set(ndKey, v)
+        case None => spark.conf.unset(ndKey) }
+    }
   }
 
   test("stream-stream interval correlate equals the batch interval join across uneven splits") {

@@ -5,6 +5,15 @@
 # operator done — this script is the floor, not the ceiling.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# One session builder: every main builds its session through
+# graft.Session.local, so a copied session config cannot grow back.
+stray=$(grep -rn 'SparkSession\.builder' src/main/scala \
+  | grep -v '^src/main/scala/graft/Session\.scala:' || true)
+if [ -n "$stray" ]; then
+  echo "[precommit] SparkSession.builder outside graft.Session:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile
 sbt -batch 'runMain graft.Scratch'
 echo "[precommit] OK"
