@@ -125,8 +125,8 @@ object Dedup {
     * hours`; 10 min here to exercise the data's 30-day span). Bucketed
     * TTL is the scalable batch rendering — the exact prime-anchored
     * chain (a duplicate refreshes nothing; a prime older than TTL
-    * readmits) is inherently sequential per key and lives in
-    * [[graft.streaming.DedupStream]].
+    * readmits) is inherently sequential per key: [[dedupTtlChain]] in
+    * batch, [[graft.streaming.DedupStream.dedupTtlChain]] on a stream.
     */
   def dedupTtlBucket(spark: SparkSession, dir: String, ttlMinutes: Int = 10): DataFrame = {
     val w = Window.partitionBy(contentKey :+ col("_bucket"): _*)

@@ -624,13 +624,6 @@ object NearDup {
       .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
       .filter(_ > 0L).getOrElse(12L << 30)
 
-  /** Explicit band-count override (SPARK_GRAFT_VERIFY_BANDS ≥ 1);
-    * absent → the auto path decides.
-    */
-  private def envVerifyBands: Option[Int] =
-    sys.env.get("SPARK_GRAFT_VERIFY_BANDS")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption).filter(_ >= 1)
-
   /** Docs-count gate below which the auto path NEVER bands (the plan
     * stays byte-identical to the unbanded rendering — no candidate
     * checkpoint, no count job). 1M docs ≈ the 2×-sf10 point; every
@@ -662,17 +655,15 @@ object NearDup {
   private val BAND_GATE_BYTES = 100L << 20
 
   /** Band count for a phase-1 verify over `raw` documents:
-    * `requested` ≥ 1 wins, then the env override, then the gate
-    * (small corpus → 1), else −1 = "derive from the candidate count"
-    * (resolved inside [[phase1Banded]] where the candidates are
-    * materialized anyway).
+    * `requested` ≥ 1 wins, then the gate (small corpus → 1), else
+    * −1 = "derive from the candidate count" (resolved inside
+    * [[phase1Banded]] where the candidates are materialized anyway).
     */
   private[operators] def verifyBandsFor(raw: DataFrame, requested: Int): Int =
     if (requested >= 1) requested
-    else envVerifyBands.getOrElse {
-      if (raw.queryExecution.optimizedPlan.stats.sizeInBytes
-          < BAND_GATE_BYTES) 1 else -1
-    }
+    else if (raw.queryExecution.optimizedPlan.stats.sizeInBytes
+        < BAND_GATE_BYTES) 1
+    else -1
 
   /** Phase-1 verify, SCRATCH-BOUNDED: the candidate set is split into
     * `bands` disjoint pair-hash bands and `phase1` runs once per band

@@ -974,10 +974,9 @@ object TextAnalysis {
     *    its ha axis, so the union equals the unbanded aggregate
     *    row-for-row (equality spec).
     *
-    * Defaults (−1) resolve explicit arg > SPARK_GRAFT_COOC_MINDF /
-    * SPARK_GRAFT_COOC_BANDS env > AUTO-GATE: below [[COOC_GATE_DOCS]]
-    * documents the plan is byte-identical to the historical contract
-    * plan (minDf 0, 1 band); past the gate the provably-exact minDf=2
+    * Defaults (−1) resolve explicit arg > AUTO-GATE: below
+    * [[COOC_GATE_DOCS]] documents the plan is byte-identical to the
+    * historical contract plan (minDf 0, 1 band); past the gate the provably-exact minDf=2
     * prune engages and bands derive from the document count (~1 band
     * per 1.25M docs, clamped to [2, 32] — the round-10 sf100 soak's
     * 0-spill operating point at 5M docs was 4). One metadata-only
@@ -993,14 +992,10 @@ object TextAnalysis {
     // gate and band formula are unchanged
     lazy val nDocs = graft.Tables.parquetRowCount(spark, dir, "documents")
     val mdf = if (minDf >= 0L) minDf
-      else sys.env.get("SPARK_GRAFT_COOC_MINDF")
-        .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-        .getOrElse(if (nDocs < COOC_GATE_DOCS) 0L else 2L)
+      else if (nDocs < COOC_GATE_DOCS) 0L else 2L
     val bnd = if (bands >= 1) bands
-      else sys.env.get("SPARK_GRAFT_COOC_BANDS")
-        .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-        .getOrElse(if (nDocs < COOC_GATE_DOCS) 1
-          else math.min(32L, math.max(2L, (nDocs + 1249999L) / 1250000L)).toInt)
+      else if (nDocs < COOC_GATE_DOCS) 1
+      else math.min(32L, math.max(2L, (nDocs + 1249999L) / 1250000L)).toInt
     val (pairs, marg, total) = coocParts(spark, dir, mdf, bnd)
     pairs
       .join(marg.select(col("ht").as("ha"), col("tok").as("a"), col("c").as("c_a")), "ha")

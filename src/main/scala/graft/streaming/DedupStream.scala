@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -10,17 +10,22 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * stateful dedup → writeStream with per-key state and watermark-
   * bounded cleanup (the cacheTTL, environment.conf).
   *
-  * Two renderings:
-  *  - [[dedupWithinWatermark]]: built-in `dropDuplicatesWithinWatermark`
-  *    — Spark manages state + eviction; first-seen-wins within the
-  *    watermark horizon. The production default.
-  *  - [[dedupTtlChain]]: exact reference chain semantics via
-  *    flatMapGroupsWithState — a duplicate is an event whose content
-  *    key saw a PRIME within ttl; duplicates do NOT refresh the
-  *    anchor (cache.put only happens on miss, Deduplicator.java:51);
-  *    a prime older than ttl readmits. Event-time timeout evicts
-  *    state, so state size is bounded by keys-per-ttl-window, not
-  *    total keys.
+  * Operators by state shape:
+  *  - Spark-managed: [[dedupWithinWatermark]], [[dedupAgainstHistory]]
+  *    (+ Bloom) on `dropDuplicatesWithinWatermark` (first-seen-wins
+  *    within the watermark, the production default); [[sessionStats]],
+  *    [[windowedStats]], [[correlate]] on watermarked aggs and joins.
+  *  - One value per key through [[walkKeyed]] (flatMapGroupsWithState,
+  *    event-time timeout): [[dedupTtlChain]] and [[annotate]] keep a
+  *    [[PrimeAnchor]] per content key — the exact reference chain: a
+  *    duplicate is an event whose key saw a PRIME within ttl;
+  *    duplicates do NOT refresh the anchor (cache.put only on miss,
+  *    Deduplicator.java:51); a prime older than ttl readmits.
+  *    [[dedupBounded]] keeps a [[SlotState]] per cache slot. State is
+  *    bounded by keys (or slots) per ttl window, not total keys.
+  *  - Typed handles on transformWithState: [[heavyHitters]] and
+  *    [[dedupBoundedLru]] (MapState per shard), [[compactLatest]]
+  *    (ValueState + event-time timer per key).
   */
 object DedupStream {
 
@@ -57,11 +62,10 @@ object DedupStream {
 
   /** Walk a content-key group, continuing from an optional anchor:
     * emit primes, drop duplicates. Returns (emitted primes, final
-    * anchor). Seq-based — for the STREAMING operators, whose per-key
-    * input is one micro-batch's worth of events (bounded by the
-    * trigger interval, must be sorted before the walk anyway). The
-    * batch operator walks pre-sorted partitions with a bare
-    * [[ChainWalker]] instead and never materializes a group.
+    * anchor). Seq-based, for [[dedupTtlChain]]'s bounded per-key slice
+    * and the replay oracles; the batch operator walks pre-sorted
+    * partitions with a bare [[ChainWalker]] and never materializes a
+    * group.
     */
   def chainPrimes(events: Seq[Ev], ttlMs: Long,
                   anchor: Option[Long]): (Seq[Ev], Option[Long]) = {
@@ -86,6 +90,33 @@ object DedupStream {
       state.update(s)
       state.setTimeoutTimestamp(expiresMs)
     }
+
+  /** The one per-key state protocol of the flatMapGroupsWithState
+    * operators: watermark `ts`, group by `key`, and hand `walk` each
+    * key's micro-batch slice (bounded by the trigger interval, not the
+    * corpus) sorted by (ts ms, event_id), with the stored state.
+    * `walk` returns the rows to emit and the state to keep with its
+    * event-time expiry, stored through [[keepUntil]]; a key whose
+    * timeout fires with no new rows is removed.
+    */
+  private def walkKeyed[K: Encoder, S: Encoder, O: Encoder](
+      events: Dataset[Ev], watermark: String, key: Ev => K)(
+      walk: (Seq[Ev], Option[S]) => (Seq[O], Option[(S, Long)])): Dataset[O] =
+    events
+      .withWatermark("ts", watermark)
+      .groupByKey(key)
+      .flatMapGroupsWithState[S, O](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (_: K, batch: Iterator[Ev], state: GroupState[S]) =>
+          if (batch.isEmpty && state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            val (out, next) =
+              walk(batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)), state.getOption)
+            next.foreach { case (s, expiresMs) => keepUntil(state, s, expiresMs) }
+            out.iterator
+          }
+      }
 
   /** Multi-topic MERGE ahead of dedup — the streaming rendering of
     * the reference's `multipleTopics` / `topicsPattern` consumer
@@ -181,90 +212,17 @@ object DedupStream {
   }
 
   /** Streaming exact-chain TTL dedup (reference cache semantics).
-    * State per content key = the anchor prime's ts; event-time
-    * timeout at anchor + ttl + watermark slack evicts it.
+    * State per content key = the anchor prime's ts, evicted once the
+    * watermark passes anchor + ttl. Runs unchanged on the default and
+    * the RocksDB state store.
     */
   def dedupTtlChain(events: Dataset[Ev], ttlMs: Long,
                     watermark: String = "10 minutes"): Dataset[Ev] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(contentKeyOf)
-      .flatMapGroupsWithState[PrimeAnchor, Ev](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, batch: Iterator[Ev], state: GroupState[PrimeAnchor]) =>
-          if (batch.isEmpty && state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val (emitted, anchor) =
-              chainPrimes(batch.toSeq, ttlMs, state.getOption.map(_.primeTsMs))
-            anchor.foreach(p => keepUntil(state, PrimeAnchor(p), p + ttlMs))
-            emitted.iterator
-          }
-      }
-  }
-
-  /** [[dedupTtlChain]]'s chain walk as a Spark 4 `StatefulProcessor`
-    * — the arbitrary-state API that supersedes
-    * flatMapGroupsWithState: typed state HANDLES (ValueState) instead
-    * of one opaque state blob, and explicit event-time TIMERS instead
-    * of a single timeout slot. Same [[ChainWalker]] semantics, same
-    * eviction horizon (the anchor dies once `anchor + ttl` falls
-    * below the watermark and can no longer suppress anything — a
-    * stale timer from a superseded anchor is ignored by the
-    * expiry-time guard). Requires the RocksDB state-store provider,
-    * which is the 100 TB deployment's store anyway.
-    */
-  final class TtlChainProcessor(ttlMs: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, Ev, Ev] {
-    @transient private var anchor: org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      anchor = getHandle.getValueState[Long]("anchor",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[Ev],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[Ev] = {
-      val prior = if (anchor.exists()) Some(anchor.get()) else None
-      val (emitted, a) = chainPrimes(rows.toSeq, ttlMs, prior)
-      a.filter(!prior.contains(_)).foreach { p =>
-        anchor.update(p)
-        getHandle.registerTimer(p + ttlMs)
-      }
-      emitted.iterator
+    walkKeyed[String, PrimeAnchor, Ev](events, watermark, contentKeyOf) { (batch, st) =>
+      val (emitted, anchor) = chainPrimes(batch, ttlMs, st.map(_.primeTsMs))
+      (emitted, anchor.map(p => (PrimeAnchor(p), p + ttlMs)))
     }
-
-    override def handleExpiredTimer(key: String,
-        timers: org.apache.spark.sql.streaming.TimerValues,
-        expired: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Ev] = {
-      // clear only if the CURRENT anchor is the one whose horizon
-      // expired — a newer prime re-registered its own timer
-      if (anchor.exists() && anchor.get() + ttlMs <= expired.getExpiryTimeInMs)
-        anchor.clear()
-      Iterator.empty
-    }
-  }
-
-  /** [[dedupTtlChain]] rendered on `transformWithState` (Spark 4's
-    * arbitrary-state API). Output is pinned equal to the
-    * flatMapGroupsWithState rendering by StreamingSpec — one
-    * [[ChainWalker]] drives both, so the semantics CANNOT drift; what
-    * this buys at scale is the new API's operational surface (typed
-    * state handles, per-key timers, state-v2 schema evolution) on the
-    * RocksDB store.
-    */
-  def dedupTtlChainTws(events: Dataset[Ev], ttlMs: Long,
-                       watermark: String = "10 minutes"): Dataset[Ev] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(contentKeyOf)
-      .transformWithState(new TtlChainProcessor(ttlMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append)
   }
 
   /** One heavy-hitter summary row: `count` overestimates the item's
@@ -273,6 +231,25 @@ object DedupStream {
     * rows per shard for the current summary.
     */
   case class HitterRow(shard: Int, gen: Long, item: String, count: Long, err: Long)
+
+  /** One SpaceSaving arrival against counter map `m` (item →
+    * (count, err)): tracked items increment; an untracked item fills
+    * a free slot or evicts the (count, item)-lexicographic minimum
+    * and inherits its count as the error bound. `onEvict` lets the
+    * stateful caller mirror the removal into its store. Shared by the
+    * processor and the PropertySpec invariant replay — the algorithm
+    * cannot drift from its test.
+    */
+  def spaceSavingStep(m: scala.collection.mutable.HashMap[String, (Long, Long)],
+                      x: String, k: Int, onEvict: String => Unit = _ => ()): Unit =
+    m.get(x) match {
+      case Some((c, e)) => m(x) = (c + 1, e)
+      case None if m.size < k => m(x) = (1L, 0L)
+      case None =>
+        val (mi, (mc, _)) = m.minBy { case (it, (c, _)) => (c, it) }
+        m.remove(mi); onEvict(mi)
+        m(x) = (mc + 1, mc)
+    }
 
   /** SpaceSaving heavy hitters (Metwally, Agrawal, El Abbadi,
     * "Efficient Computation of Frequent and Top-k Elements in Data
@@ -295,25 +272,6 @@ object DedupStream {
     * contract (the CleanStream precedent) and the order-free
     * guarantees separately.
     */
-  /** One SpaceSaving arrival against counter map `m` (item →
-    * (count, err)): tracked items increment; an untracked item fills
-    * a free slot or evicts the (count, item)-lexicographic minimum
-    * and inherits its count as the error bound. `onEvict` lets the
-    * stateful caller mirror the removal into its store. Shared by the
-    * processor and the PropertySpec invariant replay — the algorithm
-    * cannot drift from its test.
-    */
-  def spaceSavingStep(m: scala.collection.mutable.HashMap[String, (Long, Long)],
-                      x: String, k: Int, onEvict: String => Unit = _ => ()): Unit =
-    m.get(x) match {
-      case Some((c, e)) => m(x) = (c + 1, e)
-      case None if m.size < k => m(x) = (1L, 0L)
-      case None =>
-        val (mi, (mc, _)) = m.minBy { case (it, (c, _)) => (c, it) }
-        m.remove(mi); onEvict(mi)
-        m(x) = (mc + 1, mc)
-    }
-
   final class SpaceSavingProcessor(k: Int)
     extends org.apache.spark.sql.streaming.StatefulProcessor[Int, (Int, String), HitterRow] {
     @transient private var counters:
@@ -377,8 +335,9 @@ object DedupStream {
     * the TTL chain's in-order contract) — and an event-time TIMER at
     * latest_ts + flushMs emits the compacted row once the key has
     * been quiet past the horizon, then clears state. A superseded
-    * timer (newer event arrived after it was registered) is ignored
-    * by the same expiry-time guard as [[TtlChainProcessor]]. A key
+    * timer (newer event arrived after it was registered) is deleted
+    * on update, and the expiry-time guard in `handleExpiredTimer`
+    * ignores one that fires anyway. A key
     * updated again AFTER its flush opens a new compaction epoch and
     * will emit a second row — CDC upsert semantics downstream.
     * State: one (long, long, double) per live key, watermark-bounded.
@@ -481,36 +440,22 @@ object DedupStream {
   def dedupBounded(events: Dataset[Ev], ttlMs: Long, maxEntries: Int,
                    watermark: String = "10 minutes"): Dataset[Ev] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e => math.floorMod(contentKeyHash(e), maxEntries.toLong))
-      .flatMapGroupsWithState[SlotState, Ev](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, batch: Iterator[Ev], state: GroupState[SlotState]) =>
-          if (batch.isEmpty && state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption
-            val out = Seq.newBuilder[Ev]
-            // one key's slice of ONE micro-batch — bounded by the
-            // trigger interval, not the corpus (cf. the batch
-            // operator's constant-memory partition walk)
-            batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-              val kh = contentKeyHash(e)
-              val t = e.ts.getTime
-              st match {
-                case Some(SlotState(h, p)) if h == kh && t - p <= ttlMs =>
-                // duplicate of the slot occupant: dropped, anchor kept
-                case _ =>
-                  st = Some(SlotState(kh, t)) // prime; claims (or evicts) the slot
-                  out += e
-              }
-            }
-            st.foreach(s => keepUntil(state, s, s.primeTsMs + ttlMs))
-            out.result().iterator
-          }
+    walkKeyed[Long, SlotState, Ev](events, watermark,
+        e => math.floorMod(contentKeyHash(e), maxEntries.toLong)) { (batch, prior) =>
+      var st = prior
+      val out = batch.filter { e =>
+        val kh = contentKeyHash(e)
+        val t = e.ts.getTime
+        st match {
+          case Some(SlotState(h, p)) if h == kh && t - p <= ttlMs =>
+            false // duplicate of the slot occupant: dropped, anchor kept
+          case _ =>
+            st = Some(SlotState(kh, t)) // prime; claims (or evicts) the slot
+            true
+        }
       }
+      (out, st.map(s => (s, s.primeTsMs + ttlMs)))
+    }
   }
 
   /** One LRU-cache arrival against entry map `m` (content key →
@@ -637,40 +582,29 @@ object DedupStream {
         OutputMode.Append)
   }
 
-  /** Streaming dedup analytics (Analytics.java:47-79): per 1-minute
-    * event-time window — primes, duplicates, ratio, mean dup delay.
-    * The stateful pass annotates each event (is_dup, delay vs the
-    * anchor prime) in one flatMapGroupsWithState; the windowed agg
-    * downstream is a plain watermarked groupBy.
+  /** One event annotated by the chain walk: whether it is a duplicate
+    * and, if so, its delay behind the anchor prime.
     */
   case class Annotated(event_id: Long, ts: java.sql.Timestamp,
                        is_dup: Boolean, delay_ms: Long)
 
+  /** Every event of the stream tagged by the [[dedupTtlChain]] walk
+    * (same key, same [[PrimeAnchor]] state) instead of filtered — the
+    * input of [[windowedStats]].
+    */
   def annotate(events: Dataset[Ev], ttlMs: Long,
                watermark: String = "10 minutes"): Dataset[Annotated] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(contentKeyOf)
-      .flatMapGroupsWithState[PrimeAnchor, Annotated](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, batch: Iterator[Ev], state: GroupState[PrimeAnchor]) =>
-          if (batch.isEmpty && state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val w = new ChainWalker(ttlMs, state.getOption.map(_.primeTsMs))
-            // one key's micro-batch slice (bounded, see dedupBounded)
-            val out = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).map { e =>
-              val t = e.ts.getTime
-              val prior = w.anchorMs // read before admit: the delay's anchor
-              if (w.admit(t)) Annotated(e.event_id, e.ts, is_dup = false, 0L)
-              else Annotated(e.event_id, e.ts, is_dup = true, t - prior.get)
-            }
-            w.anchorMs.foreach(p => keepUntil(state, PrimeAnchor(p), p + ttlMs))
-            out.iterator
-          }
+    walkKeyed[String, PrimeAnchor, Annotated](events, watermark, contentKeyOf) { (batch, st) =>
+      val w = new ChainWalker(ttlMs, st.map(_.primeTsMs))
+      val out = batch.map { e =>
+        val t = e.ts.getTime
+        val prior = w.anchorMs // read before admit: the delay's anchor
+        if (w.admit(t)) Annotated(e.event_id, e.ts, is_dup = false, 0L)
+        else Annotated(e.event_id, e.ts, is_dup = true, t - prior.get)
       }
+      (out, w.anchorMs.map(p => (PrimeAnchor(p), p + ttlMs)))
+    }
   }
 
   /** Streaming sessionization — the streaming analog of the batch
@@ -692,26 +626,48 @@ object DedupStream {
         col("session_window.end").as("session_end"),
         col("n_events"), col("total_value"))
 
-  /** NOTE: chaining a flatMapGroupsWithState with a downstream
+  /** Streaming dedup analytics (Analytics.java:47-79): per 1-minute
+    * event-time window — primes, duplicates, ratio, mean dup delay —
+    * over [[annotate]]'s output, with a plain watermarked groupBy.
+    *
+    * NOTE: chaining annotate's flatMapGroupsWithState with this
     * windowed aggregate is a multi-stateful-operator pipeline; Spark
     * blocks it by default (global-watermark late-row risk). Run with
     * `spark.sql.streaming.statefulOperator.checkCorrectness.enabled=
     * false` and keep the watermark ≥ the annotate ttl so annotated
     * rows can't be late for the window state.
-    */
-  /** NOTE — error-path analytics flush (Deduplicator.java:63-66): on
+    *
+    * NOTE — error-path analytics flush (Deduplicator.java:63-66): on
     * a handler exception the reference fires `calcStats()` BEFORE
     * rethrowing so in-memory counters aren't lost with the crash.
-    * graft needs no explicit flush for the COUNTS: windowedStats
-    * state lives in the checkpointed state store, so a failed query
-    * resumes from the last committed micro-batch with nothing lost —
-    * stronger than the reference's best-effort flush. The analog of
-    * the reference's "report at death" side channel is a
+    * graft needs no explicit flush for the COUNTS: this state lives
+    * in the checkpointed state store, so a failed query resumes from
+    * the last committed micro-batch with nothing lost — stronger than
+    * the reference's best-effort flush. The analog of the reference's
+    * "report at death" side channel is a
     * `StreamingQueryListener.onQueryTerminated` registered via
     * `spark.streams.addListener`, which receives the terminal event
     * (with the exception) after the final progress and is the place
     * to emit last-progress counters to an external monitor.
     */
+  def windowedStats(annotated: Dataset[Annotated],
+                    alertThreshold: Double = 0.97): DataFrame =
+    annotated
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "1 minute"))
+      .agg(
+        sum(when(!col("is_dup"), 1).otherwise(0)).cast("long").as("primes"),
+        sum(when(col("is_dup"), 1).otherwise(0)).cast("long").as("duplicates"),
+        avg(when(col("is_dup"), col("delay_ms"))).as("avg_delay_ms"))
+      // Analytics.java:50-61 alert semantics: high-dup when ratio >
+      // 1.0, ELSE feed-down when below the configured threshold
+      // (duplicateRatioThreshold = 0.97, environment.conf)
+      .withColumn("dup_ratio",
+        col("duplicates").cast("double") / nullif(col("primes"), lit(0)))
+      .withColumn("alert_high_dup", col("dup_ratio") > 1.0)
+      .withColumn("alert_feed_down",
+        !(col("dup_ratio") > 1.0) && col("dup_ratio") < alertThreshold)
+
   /** The durable ALERT side-channel — the reference reports alerts by
     * LOGGING them (Analytics.java:50-61, log.error on high-dup /
     * feed-down); the Spark rendering makes the side-channel a
@@ -734,24 +690,6 @@ object DedupStream {
         col("window.end").as("window_end"),
         col("primes"), col("duplicates"), col("dup_ratio"),
         col("alert_high_dup"), col("alert_feed_down"))
-
-  def windowedStats(annotated: Dataset[Annotated],
-                    alertThreshold: Double = 0.97): DataFrame =
-    annotated
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 minute"))
-      .agg(
-        sum(when(!col("is_dup"), 1).otherwise(0)).cast("long").as("primes"),
-        sum(when(col("is_dup"), 1).otherwise(0)).cast("long").as("duplicates"),
-        avg(when(col("is_dup"), col("delay_ms"))).as("avg_delay_ms"))
-      // Analytics.java:50-61 alert semantics: high-dup when ratio >
-      // 1.0, ELSE feed-down when below the configured threshold
-      // (duplicateRatioThreshold = 0.97, environment.conf)
-      .withColumn("dup_ratio",
-        col("duplicates").cast("double") / nullif(col("primes"), lit(0)))
-      .withColumn("alert_high_dup", col("dup_ratio") > 1.0)
-      .withColumn("alert_feed_down",
-        !(col("dup_ratio") > 1.0) && col("dup_ratio") < alertThreshold)
 
   /** Stream-STREAM event-time interval join — the cross-feed
     * correlation the reference's multi-topic deployment implies but

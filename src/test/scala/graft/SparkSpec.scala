@@ -27,4 +27,18 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf
+
+  /** Runs `body` with the session confs in `pairs` set, then restores
+    * each key's previous value (or unsets it) — the session is shared
+    * by every suite.
+    */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

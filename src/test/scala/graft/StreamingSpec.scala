@@ -9,6 +9,12 @@ import org.apache.spark.sql.streaming.OutputMode
 
 class StreamingSpec extends SparkSpec {
 
+  private val rocksDbStore = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  // annotate feeding windowedStats chains two stateful operators
+  private val noCorrectnessCheck =
+    "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false"
+
   private def ev(id: Long, tMs: Long, user: Long = 1L, props: String = "{}") =
     Ev(id, new java.sql.Timestamp(tMs), user, "x", 1.0, props)
 
@@ -37,51 +43,11 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState ttl-chain dedup equals the flatMapGroupsWithState rendering " +
-    "(RocksDB store)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = 1700000000000L
-    val ttl = 60000L
-    val batch1 = Seq(ev(1, base), ev(2, base + 1000), ev(10, base, user = 2))
-    val batch2 = Seq(ev(3, base + 30000), // dup of 1 (within ttl)
-      ev(4, base + 70000), // prime (anchor base, 70s > ttl)
-      ev(11, base + 5000, user = 2)) // dup of 10
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[Ev]
-      val out = DedupStream.dedupTtlChainTws(input.toDS(), ttl)
-      val q = out.writeStream.format("memory").queryName("tws_out")
-        .outputMode(OutputMode.Append).start()
-      try {
-        input.addData(batch1: _*); q.processAllAvailable()
-        input.addData(batch2: _*); q.processAllAvailable()
-        val got = spark.table("tws_out").collect().map(_.getLong(0)).toSet
-        // same chain replay that pins the fMGWS rendering — ONE
-        // ChainWalker drives both operators
-        val expectIds = (batch1 ++ batch2).groupBy(DedupStream.contentKeyOf)
-          .values.flatMap(g => DedupStream.chainPrimes(g, ttl, None)._1.map(_.event_id)).toSet
-        assert(got === expectIds)
-        assert(got === Set(1L, 4L, 10L))
-      } finally q.stop()
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key) }
-    }
-  }
-
   test("space-saving heavy hitters: exact when distinct items fit, bounded overestimate " +
     "under eviction (RocksDB store)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(rocksDbStore) {
       // regime 1 — k larger than distinct items per shard: the sketch
       // IS the exact count, across uneven micro-batches
       val words = Seq("a", "b", "a", "c", "a", "b", "d", "a", "c", "e")
@@ -125,9 +91,6 @@ class StreamingSpec extends SparkSpec {
           assert(c >= t && c - e <= t, s"$it count $c err $e true $t")
         }
       } finally q2.stop()
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key) }
     }
   }
 
@@ -151,11 +114,7 @@ class StreamingSpec extends SparkSpec {
       val m = g.maxBy(x => (x.ts.getTime, x.event_id))
       (k._1, k._2, m.event_id, m.ts.getTime, m.value)
     }.toSet
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(rocksDbStore) {
       // max is commutative, so the emitted set must be identical for
       // ANY micro-batch split of the same input
       for (cut <- Seq(2, 4)) {
@@ -173,9 +132,6 @@ class StreamingSpec extends SparkSpec {
           assert(got.toSet === expect, s"split at $cut")
         } finally q.stop()
       }
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key) }
     }
   }
 
@@ -288,9 +244,6 @@ class StreamingSpec extends SparkSpec {
       1 -> Seq(ev(8, base + 1500000), ev(9, base + 1500500))) // 1 readmitted, then its dup
     // a continuously fed stream never idles, so no empty trigger runs
     // between two adds to advance the watermark on its own
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndPrev = spark.conf.getOption(ndKey)
-    spark.conf.set(ndKey, "false")
     def run(name: String)(op: Dataset[Ev] => Dataset[_]): Array[Row] = {
       val feeds = Seq(MemoryStream[Ev], MemoryStream[Ev])
       val q = op(DedupStream.mergeTopics(feeds.map(_.toDS()))).writeStream
@@ -302,7 +255,7 @@ class StreamingSpec extends SparkSpec {
         spark.table(name).collect()
       } finally q.stop()
     }
-    try {
+    withConf("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
       // chainPrimes replay, per trigger, anchors carried across triggers
       val anchors = scala.collection.mutable.Map.empty[String, Long]
       val primes = triggers.flatMap { case (_, rows) =>
@@ -343,9 +296,6 @@ class StreamingSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getBoolean(2), r.getLong(3))).sortBy(_._1).toSeq
       assert(ann === expectAnn)
       assert(ann.filter(_._2) === Seq((4L, true, 10000L), (7L, true, 5000L), (9L, true, 500L)))
-    } finally {
-      ndPrev match { case Some(v) => spark.conf.set(ndKey, v)
-        case None => spark.conf.unset(ndKey) }
     }
   }
 
@@ -644,40 +594,33 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val base = 1700000000000L - (1700000000000L % 60000L) // minute-aligned
-    // chained stateful ops (see windowedStats scaladoc); restored below
-    val ccKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val ccPrev = spark.conf.getOption(ccKey)
-    spark.conf.set(ccKey, "false")
-    val input = MemoryStream[Ev]
-    val stats = DedupStream.windowedStats(DedupStream.annotate(input.toDS(), ttlMs = 600000L))
-    val q = stats.writeStream.format("memory").queryName("stats_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // minute 0: prime + 2 dups (ratio 2.0 → high-dup alert,
-      // Analytics.java:50); minute 1: lone prime (ratio 0 < 0.97 →
-      // feed-down alert, Analytics.java:56)
-      input.addData(ev(1, base), ev(2, base + 9000), ev(5, base + 18000),
-        ev(3, base + 60000, user = 9))
-      q.processAllAvailable()
-      // advance watermark far enough to close both windows
-      input.addData(ev(99, base + 3600000, user = 99))
-      q.processAllAvailable()
-      val rows = spark.table("stats_out")
-        .selectExpr("window.start", "primes", "duplicates", "avg_delay_ms",
-          "dup_ratio", "alert_high_dup", "alert_feed_down")
-        .collect().map(r => (r.getTimestamp(0).getTime, r.getLong(1), r.getLong(2),
-          Option(r.get(3)).map(_.asInstanceOf[Double]),
-          r.getDouble(4), r.getBoolean(5), r.getBoolean(6)))
-        .sortBy(_._1).toList
-      assert(rows.take(2) === List(
-        (base, 1L, 2L, Some(13500.0), 2.0, true, false),
-        (base + 60000, 1L, 0L, None, 0.0, false, true)))
-    } finally {
-      q.stop()
-      ccPrev match {
-        case Some(v) => spark.conf.set(ccKey, v)
-        case None => spark.conf.unset(ccKey)
-      }
+    // chained stateful ops (see windowedStats scaladoc)
+    withConf(noCorrectnessCheck) {
+      val input = MemoryStream[Ev]
+      val stats = DedupStream.windowedStats(DedupStream.annotate(input.toDS(), ttlMs = 600000L))
+      val q = stats.writeStream.format("memory").queryName("stats_out")
+        .outputMode(OutputMode.Append).start()
+      try {
+        // minute 0: prime + 2 dups (ratio 2.0 → high-dup alert,
+        // Analytics.java:50); minute 1: lone prime (ratio 0 < 0.97 →
+        // feed-down alert, Analytics.java:56)
+        input.addData(ev(1, base), ev(2, base + 9000), ev(5, base + 18000),
+          ev(3, base + 60000, user = 9))
+        q.processAllAvailable()
+        // advance watermark far enough to close both windows
+        input.addData(ev(99, base + 3600000, user = 99))
+        q.processAllAvailable()
+        val rows = spark.table("stats_out")
+          .selectExpr("window.start", "primes", "duplicates", "avg_delay_ms",
+            "dup_ratio", "alert_high_dup", "alert_feed_down")
+          .collect().map(r => (r.getTimestamp(0).getTime, r.getLong(1), r.getLong(2),
+            Option(r.get(3)).map(_.asInstanceOf[Double]),
+            r.getDouble(4), r.getBoolean(5), r.getBoolean(6)))
+          .sortBy(_._1).toList
+        assert(rows.take(2) === List(
+          (base, 1L, 2L, Some(13500.0), 2.0, true, false),
+          (base + 60000, 1L, 0L, None, 0.0, false, true)))
+      } finally q.stop()
     }
   }
 
@@ -711,11 +654,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val base = 1700000000000L
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(rocksDbStore) {
       // one segment (shards=1), capacity 2 — the smallest cache where
       // LRU order is observable: A=user1, B=user2, C=user3
       val batch1 = Seq(
@@ -774,9 +713,6 @@ class StreamingSpec extends SparkSpec {
           .toSet
         assert(got2 === expect2)
       } finally q2.stop()
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key) }
     }
   }
 
@@ -939,11 +875,7 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     val (b1, b2) = docs.splitAt(docs.length / 2)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(rocksDbStore) {
       val input = MemoryStream[(Long, String)]
       val q = CleanStream.ingestPipeline(input.toDF().toDF("doc_id", "text"))
         .writeStream.format("memory").queryName("rocksdb_pipe")
@@ -960,9 +892,6 @@ class StreamingSpec extends SparkSpec {
           .groupBy(_._2).values.map(_.map(_._1).min).toSeq.sorted
         assert(got === expect)
       } finally q.stop()
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v)
-                   case None => spark.conf.unset(key) }
     }
   }
 
@@ -972,53 +901,46 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val base = 1700000000000L - (1700000000000L % 60000L) // minute-aligned
-    val ccKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val ccPrev = spark.conf.getOption(ccKey)
-    spark.conf.set(ccKey, "false")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_alerts_").toString
-    val outPath = s"$tmp/alerts"; val ckpt = s"$tmp/ckpt"
-    val input = MemoryStream[Ev]
-    def freshQuery() = GraftSink.startDatePartitionedSink(
-      DedupStream.alerts(DedupStream.windowedStats(
-        DedupStream.annotate(input.toDS(), ttlMs = 3600000L))),
-      outPath, ckpt, tsCol = "window_start")
-    val q1 = freshQuery()
-    try {
-      // minute 0: 1 prime + 2 dups (ratio 2.0 → high-dup); minute 1:
-      // lone prime (ratio 0 → feed-down); minute 20: watermark
-      // advancer (its own lone-prime window alerts feed-down later)
-      input.addData(ev(1, base), ev(2, base + 9000), ev(5, base + 18000),
-        ev(3, base + 60000, user = 9), ev(20, base + 1200000, user = 99))
-      q1.processAllAvailable()
-      q1.stop() // forced shutdown after minutes 0-1 were committed
-      // arrivals while down: minute 21 repeats minute-0 CONTENT — the
-      // restarted query can only flag these as duplicates (ratio 2.0
-      // high-dup, not 0.5 feed-down) if the anchor state survived in
-      // the checkpoint; plus a far-future advancer to flush all
-      input.addData(ev(30, base + 1260000), ev(31, base + 1269000),
-        ev(32, base + 1278000, user = 77), ev(99, base + 7200000, user = 55))
-      val q2 = freshQuery()
-      try q2.processAllAvailable() finally q2.stop()
-      val got = spark.read.parquet(outPath)
-        .select("window_start", "primes", "duplicates", "alert_high_dup", "alert_feed_down")
-        .collect().map(r => (r.getTimestamp(0).getTime, r.getLong(1), r.getLong(2),
-          r.getBoolean(3), r.getBoolean(4))).sortBy(_._1).toSeq
-      // exactly-once: the pre-kill windows appear exactly once
-      assert(got.map(_._1).distinct.size === got.size, "restart duplicated alert output")
-      assert(got === Seq(
-        (base, 1L, 2L, true, false),
-        (base + 60000, 1L, 0L, false, true),
-        (base + 1200000, 1L, 0L, false, true),
-        (base + 1260000, 1L, 2L, true, false)))
-      // the sink really is date-partitioned (downstream prunes on dir)
-      val dirs = new java.io.File(outPath).listFiles().map(_.getName).filter(_.startsWith("p_date="))
-      assert(dirs.nonEmpty, s"no p_date partition dirs under $outPath")
-    } finally {
-      ccPrev match {
-        case Some(v) => spark.conf.set(ccKey, v)
-        case None => spark.conf.unset(ccKey)
-      }
-      TestSpark.deleteRecursively(java.nio.file.Paths.get(tmp))
+    withConf(noCorrectnessCheck) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_alerts_").toString
+      val outPath = s"$tmp/alerts"; val ckpt = s"$tmp/ckpt"
+      val input = MemoryStream[Ev]
+      def freshQuery() = GraftSink.startDatePartitionedSink(
+        DedupStream.alerts(DedupStream.windowedStats(
+          DedupStream.annotate(input.toDS(), ttlMs = 3600000L))),
+        outPath, ckpt, tsCol = "window_start")
+      val q1 = freshQuery()
+      try {
+        // minute 0: 1 prime + 2 dups (ratio 2.0 → high-dup); minute 1:
+        // lone prime (ratio 0 → feed-down); minute 20: watermark
+        // advancer (its own lone-prime window alerts feed-down later)
+        input.addData(ev(1, base), ev(2, base + 9000), ev(5, base + 18000),
+          ev(3, base + 60000, user = 9), ev(20, base + 1200000, user = 99))
+        q1.processAllAvailable()
+        q1.stop() // forced shutdown after minutes 0-1 were committed
+        // arrivals while down: minute 21 repeats minute-0 CONTENT — the
+        // restarted query can only flag these as duplicates (ratio 2.0
+        // high-dup, not 0.5 feed-down) if the anchor state survived in
+        // the checkpoint; plus a far-future advancer to flush all
+        input.addData(ev(30, base + 1260000), ev(31, base + 1269000),
+          ev(32, base + 1278000, user = 77), ev(99, base + 7200000, user = 55))
+        val q2 = freshQuery()
+        try q2.processAllAvailable() finally q2.stop()
+        val got = spark.read.parquet(outPath)
+          .select("window_start", "primes", "duplicates", "alert_high_dup", "alert_feed_down")
+          .collect().map(r => (r.getTimestamp(0).getTime, r.getLong(1), r.getLong(2),
+            r.getBoolean(3), r.getBoolean(4))).sortBy(_._1).toSeq
+        // exactly-once: the pre-kill windows appear exactly once
+        assert(got.map(_._1).distinct.size === got.size, "restart duplicated alert output")
+        assert(got === Seq(
+          (base, 1L, 2L, true, false),
+          (base + 60000, 1L, 0L, false, true),
+          (base + 1200000, 1L, 0L, false, true),
+          (base + 1260000, 1L, 2L, true, false)))
+        // the sink really is date-partitioned (downstream prunes on dir)
+        val dirs = new java.io.File(outPath).listFiles().map(_.getName).filter(_.startsWith("p_date="))
+        assert(dirs.nonEmpty, s"no p_date partition dirs under $outPath")
+      } finally TestSpark.deleteRecursively(java.nio.file.Paths.get(tmp))
     }
   }
 
@@ -1063,5 +985,55 @@ class StreamingSpec extends SparkSpec {
       .filter(d => gatedTexts(if (d._1 >= 1000000L) d._1 - 1000000L else d._1))
       .groupBy(_._2).values.map(_.map(_._1).min).toSeq.sorted
     assert(got === expect)
+  }
+
+  test("ttl chain and bounded cache restart from their checkpoint after any trigger " +
+    "with the uninterrupted run's output, on both state stores") {
+    import graft.sinks.GraftSink
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = 1700000000000L
+    val ttl = 60000L
+    val triggers = Seq(
+      Seq(ev(1, base), ev(2, base + 1000, user = 2)),
+      Seq(ev(3, base + 2000, user = 3)),
+      Seq(ev(4, base + 10000, user = 3), // dup of 3, whose prime came before the stop
+        ev(5, base + 20000)), // chain: dup of 1; one slot: evicts 3's key
+      Seq(ev(6, base + 30000), // dup of 5 in the slot, of 1 in the chain
+        ev(8, base + 40000, user = 3), // chain: dup of 3; one slot: evicted, readmitted
+        ev(7, base + 90000, user = 2))) // 2's anchor is past the ttl: prime
+    // the triggers through a checkpointed file sink; the query stops
+    // after trigger `stopAfter`, the next trigger's rows arrive while it
+    // is down, and it restarts on the same checkpoint
+    def run(op: Dataset[Ev] => Dataset[Ev], stopAfter: Int): Seq[Long] = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_dedup_restart_").toString
+      val input = MemoryStream[Ev]
+      def start() = GraftSink.startFileSink(op(input.toDS()).toDF(), s"$tmp/out", s"$tmp/ckpt")
+      try {
+        var q = start()
+        try triggers.zipWithIndex.foreach { case (rows, t) =>
+          input.addData(rows: _*)
+          if (t == stopAfter) q = start()
+          q.processAllAvailable()
+          if (t + 1 == stopAfter) q.stop()
+        } finally q.stop()
+        spark.read.parquet(s"$tmp/out").select("event_id").as[Long].collect().sorted.toSeq
+      } finally TestSpark.deleteRecursively(java.nio.file.Paths.get(tmp))
+    }
+    val ops = Seq[(String, Dataset[Ev] => Dataset[Ev], Seq[Long])](
+      ("dedupTtlChain", DedupStream.dedupTtlChain(_, ttl), Seq(1L, 2L, 3L, 7L)),
+      ("dedupBounded", DedupStream.dedupBounded(_, ttl, maxEntries = 1),
+        Seq(1L, 2L, 3L, 5L, 7L, 8L)))
+    for ((store, confs) <- Seq("default" -> Seq.empty, "RocksDB" -> Seq(rocksDbStore)))
+      withConf(confs: _*) {
+        ops.foreach { case (name, op, expect) =>
+          val uninterrupted = run(op, stopAfter = triggers.size)
+          assert(uninterrupted === expect, s"$name, $store store")
+          (1 until triggers.size).foreach { i =>
+            assert(run(op, stopAfter = i) === uninterrupted,
+              s"$name, $store store, stopped after trigger $i")
+          }
+        }
+      }
   }
 }

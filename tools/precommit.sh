@@ -14,6 +14,16 @@ if [ -n "$stray" ]; then
   echo "$stray" >&2
   exit 1
 fi
+# Library operators take their settings as parameters; only the mains
+# in src/main/scala/graft/*.scala read the environment. The one
+# exception sizes phase-1 verify bands to the host's scratch disk.
+envread=$(grep -rnE 'sys\.env|System\.getenv' src/main/scala/graft/*/ \
+  | grep -v 'SPARK_GRAFT_VERIFY_BAND_BYTES' || true)
+if [ -n "$envread" ]; then
+  echo "[precommit] environment read inside a library package:" >&2
+  echo "$envread" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile
 sbt -batch 'runMain graft.Scratch'
 echo "[precommit] OK"
