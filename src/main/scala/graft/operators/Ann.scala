@@ -29,7 +29,7 @@ object Ann {
 
   /** Exact cosine top-k for queries (vec_id < nQueries), self-matches
     * excluded. Query side is broadcast — no corpus shuffle before the
-    * top-k; row_number picks k with a vec_id tiebreak.
+    * top-k; [[TopK.perGroup]] picks k with a vec_id tiebreak.
     *
     * The plan IS a BroadcastNestedLoopJoin — deliberately: exact
     * scoring has no equi key, and the broadcast side is the k-row
@@ -44,18 +44,34 @@ object Ann {
       .select(col("vec_id"), col("embedding"), V.normSq(col("embedding")).as("n2"))
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("n2").as("q_n2"))
-    val sim = V.cosineWithNorms(V.dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id"))
-    val cand = broadcast(q).join(e, col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("sim"))
-    // bounded-heap pre-pass: the per-q_id window alone would funnel
-    // the full scored corpus scan into nQueries tasks (see
-    // localTopKDouble) — survivors only reach the exact window
-    localTopKDouble(cand, k)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    exactTopK(q, e, k)
       .select(col("q_id"), col("rnk"), col("n_id"), round(col("sim"), 6).as("sim"))
   }
+
+  /** Exact cosine top-k of a bounded query set (q_id, q_emb, q_n2),
+    * broadcast against a node frame (vec_id, embedding, n2) with
+    * self-matches excluded: the (q_id, n_id, sim) candidates through
+    * [[TopK.perGroup]], so the scored scan never funnels into one sort
+    * task per query.
+    */
+  private def exactTopK(q: DataFrame, nodes: DataFrame, k: Int): DataFrame = {
+    val sim = V.cosineWithNorms(V.dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
+    TopK.perGroup(broadcast(q).join(nodes, col("q_id") =!= col("vec_id"))
+      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("sim")), k)
+  }
+
+  /** Per-query recall@k of an approximate top-k against the exact one:
+    * exact ⟕ approx on (q_id, n_id), one count per query — n_match
+    * exact neighbours the approximate side also returned, recall =
+    * n_match / k. Shared by every ANN recall monitor.
+    */
+  private def recallAtK(exact: DataFrame, approx: DataFrame, k: Int): DataFrame =
+    exact.select(col("q_id"), col("n_id"))
+      .join(approx.select(col("q_id"), col("n_id")).withColumn("m", lit(1)),
+        Seq("q_id", "n_id"), "left")
+      .groupBy("q_id")
+      .agg(count(col("m")).as("n_match"),
+        round(count(col("m")).cast("double") / k, 4).as("recall"))
 
   /** Per-label embedding centroids as (label, dim, c) skinny rows —
     * the class-prototype aggregate a labeled-embedding pipeline needs
@@ -78,15 +94,8 @@ object Ann {
     * operators, unchanged.
     */
   def annRecall(spark: SparkSession, dir: String,
-                nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val exact = annBruteForce(spark, dir, nQueries, k).select(col("q_id"), col("n_id"))
-    val approx = annIvf(spark, dir).select(col("q_id"), col("n_id"))
-      .withColumn("m", lit(1))
-    exact.join(approx, Seq("q_id", "n_id"), "left")
-      .groupBy("q_id")
-      .agg(count(col("m")).as("n_match"),
-        round(count(col("m")).cast("double") / k, 4).as("recall"))
-  }
+                nQueries: Int = 10, k: Int = 5): DataFrame =
+    recallAtK(annBruteForce(spark, dir, nQueries, k), annIvf(spark, dir), k)
 
   /** Recall@k of the LSH path against the exact top-k — the same
     * monitor as [[annRecall]] for the other approximate index. A
@@ -95,15 +104,8 @@ object Ann {
     * at different knobs.
     */
   def annRecallLsh(spark: SparkSession, dir: String,
-                   nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val exact = annBruteForce(spark, dir, nQueries, k).select(col("q_id"), col("n_id"))
-    val approx = annLsh(spark, dir).select(col("q_id"), col("n_id"))
-      .withColumn("m", lit(1))
-    exact.join(approx, Seq("q_id", "n_id"), "left")
-      .groupBy("q_id")
-      .agg(count(col("m")).as("n_match"),
-        round(count(col("m")).cast("double") / k, 4).as("recall"))
-  }
+                   nQueries: Int = 10, k: Int = 5): DataFrame =
+    recallAtK(annBruteForce(spark, dir, nQueries, k), annLsh(spark, dir), k)
 
   /** Symmetric int8 scalar quantization of the embedding column —
     * the storage/bandwidth step before any large-scale ANN serve
@@ -223,15 +225,12 @@ object Ann {
       .select(col("q_id"), col("q_emb"), col("q_n2"), col("t").as("qt"),
         col("sig").bitwiseXOR(col("flip")).as("probe_sig"))
     val sim = V.cosineWithNorms(V.dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id"))
     val cand = broadcast(q).join(e,
         col("qt") === col("t") && col("probe_sig") === col("sig") &&
           col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), sim.as("sim"))
       .distinct() // a pair colliding in several tables scores once
-    localTopKDouble(cand, k) // see localTopKDouble — no full-bucket-scan window
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    TopK.perGroup(cand, k)
       .select(col("q_id"), col("rnk"), col("n_id"), round(col("sim"), 6).as("sim"))
   }
 
@@ -379,13 +378,10 @@ object Ann {
       .filter(col("crnk") <= nprobe)
       .select(col("q_id"), col("q_emb"), col("q_n2"), col("cid"))
     val sim2 = V.cosineWithNorms(V.dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
-    val w2 = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id"))
     val cand = broadcast(qProbes).join(assigned, Seq("cid"))
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), sim2.as("sim"))
-    localTopKDouble(cand, k) // see localTopKDouble — no full-list-scan window
-      .withColumn("rnk", row_number().over(w2))
-      .filter(col("rnk") <= k)
+    TopK.perGroup(cand, k)
       .select(col("q_id"), col("rnk"), col("n_id"), round(col("sim"), 6).as("sim"))
   }
 
@@ -405,13 +401,12 @@ object Ann {
     * Scale shape: assignment is one map-only pass over the corpus
     * (K-literal scored structs, or the folded broadcast array past
     * [[literalKMax]] — no shuffle); selection is the two-phase
-    * fixed-size shape: a per-partition bounded-heap pre-pass
-    * ([[localTopKLong]] on the NEGATED hash — constant task state)
-    * reduces each partition to ≤ perCluster rows per cell BEFORE the
-    * exact per-cell window ranks the partitions·perCluster
-    * survivors, so K cells never serialize the corpus through K sort
-    * tasks. At 100 TB: train the quantizer on a sample
-    * ([[ivfCentroidsOn]]), assign map-only, cap per cell — linear.
+    * fixed-size shape: [[TopK.perGroup]] on the NEGATED hash reduces
+    * each partition to ≤ perCluster rows per cell BEFORE the exact
+    * per-cell window ranks the partitions·perCluster survivors, so K
+    * cells never serialize the corpus through K sort tasks. At 100
+    * TB: train the quantizer on a sample ([[ivfCentroidsOn]]), assign
+    * map-only, cap per cell — linear.
     */
   def embClusterSample(spark: SparkSession, dir: String, clusters: Int = 16,
                        iters: Int = 1, perCluster: Int = 16): DataFrame = {
@@ -420,10 +415,7 @@ object Ann {
     val assigned = e.withColumn("cid", nearestCentroid(cents))
       .select(col("cid").cast("long").as("cid"), col("vec_id"),
         (-Sampling.hash32(col("vec_id"))).as("s"))
-    val w = Window.partitionBy("cid").orderBy(col("s").desc, col("vec_id"))
-    localTopKLong(assigned, perCluster)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= perCluster)
+    TopK.perGroup(assigned, perCluster)
       .select(col("vec_id"), col("cid"), col("rnk").cast("long").as("rnk"))
   }
 
@@ -652,10 +644,7 @@ object Ann {
       .filter(col("q_id") =!= col("vec_id"))
       .groupBy("q_id", "vec_id")
       .agg(sum("partial").as("adc_score"))
-    val w = Window.partitionBy("q_id").orderBy(col("adc_score").desc, col("vec_id"))
-    localTopKLong(scored, k) // integer-exact pre-pass, see localTopKLong
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    TopK.perGroup(scored, k)
       .select(col("q_id"), col("rnk").cast("long").as("rnk"),
         col("vec_id").as("n_id"), col("adc_score"))
   }
@@ -819,11 +808,9 @@ object Ann {
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
         (col("p_cid1") + col("p_cid2")).as("rq_score"))
-    val w = Window.partitionBy("q_id").orderBy(col("rq_score").desc, col("vec_id"))
-    localTopKLong(scored, k) // integer-exact pre-pass, see localTopKLong
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("n_id"), col("rq_score"))
+    TopK.perGroup(scored, k)
+      .select(col("q_id"), col("rnk").cast("long").as("rnk"),
+        col("vec_id").as("n_id"), col("rq_score"))
   }
 
   /** IVF + ADC composed search — the standard billion-scale serving
@@ -878,10 +865,7 @@ object Ann {
       .join(broadcast(lut), Seq("q_id", "m", "cid"))
       .groupBy("q_id", "vec_id")
       .agg(sum("partial").as("adc_score"))
-    val w = Window.partitionBy("q_id").orderBy(col("adc_score").desc, col("vec_id"))
-    localTopKLong(scored, k) // integer-exact pre-pass, see localTopKLong
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    TopK.perGroup(scored, k)
       .select(col("q_id"), col("rnk").cast("long").as("rnk"),
         col("vec_id").as("n_id"), col("adc_score"))
   }
@@ -958,19 +942,17 @@ object Ann {
     * derives ceil(sampled/4000) (floor 16) from a metadata count, so
     * per-task sim work stays ≤ ~16M regardless of corpus size. The
     * FULL ordered matrix is generated (i ≠ j, both directions) but
-    * NEVER sorted whole: a per-partition bounded-heap top-k (the
-    * docs_sample_fixed_2p two-phase shape — constant task state,
-    * layout-invariant) reduces each partition's candidate stream to
-    * ≤ k rows per source node BEFORE the exact global window ranks
-    * the partitions·k survivors — the round-8 sf10 movement net
-    * measured the window-only rendering spilling 4.9 GB into its
-    * sort at a 20k-node sample; the heap pass spills nothing at any
-    * sample size. Total work is (rate·n)²/2 sims regardless of the
-    * grid; at corpus scale rate tunes the graph build to the budget,
-    * and the exact graph over the sample is the standard recall
-    * baseline for an ANN-built graph over the full set. The block
-    * grid only partitions that work — output is grid-invariant
-    * (spec-pinned).
+    * NEVER sorted whole: edges are [[TopK.perGroup]] per source node,
+    * whose per-partition heaps reduce the candidate stream to ≤ k rows
+    * per node and partition before the exact window — the round-8
+    * sf10 movement net measured the window-only rendering spilling
+    * 4.9 GB into its sort at a 20k-node sample; the heap pass spills
+    * nothing at any sample size. Total work is (rate·n)²/2 sims
+    * regardless of the grid; at corpus scale rate tunes the graph
+    * build to the budget, and the exact graph over the sample is the
+    * standard recall baseline for an ANN-built graph over the full
+    * set. The block grid only partitions that work — output is
+    * grid-invariant (spec-pinned).
     */
   def embKnnGraph(spark: SparkSession, dir: String, k: Int = 3,
                   rate: Double = 0.1, blocks: Int = 0): DataFrame = {
@@ -988,106 +970,22 @@ object Ann {
         col("bi"), col("blk").as("bj"))
     val sim = V.cosineWithNorms(
       V.dot(col("a.embedding"), col("b.embedding")), col("a.n2"), col("b.n2"))
-    import spark.implicits._
     val cand = aRep.as("a")
       .join(bRep.as("b"), Seq("bi", "bj"))
       .filter(col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("n_id"), sim.as("sim"))
-    topKEdges(spark, cand, k)
+    topKEdges(cand, k)
   }
 
   /** Edge selection shared by the exact ([[embKnnGraph]]) and
-    * cell-routed ([[embKnnGraphCells]]) graph builds: a per-partition
-    * bounded-heap top-k (constant task state, layout-invariant)
-    * reduces the (vec_id, n_id, sim) candidate stream to ≤ k rows per
-    * source node per partition BEFORE the exact global window ranks
-    * the partitions·k survivors — the full candidate stream is never
-    * sorted whole (the window-only rendering spilled 4.9 GB at a
-    * 20k-node sample; this spills nothing at any sample size).
+    * cell-routed ([[embKnnGraphCells]]) graph builds: [[TopK.perGroup]]
+    * per source node over the (vec_id, n_id, sim) candidate stream. A
+    * zero-norm vector has no defined cosine (nullif guard → null sim),
+    * so the kernel's null drop leaves it no edges in either direction.
     */
-  private def topKEdges(spark: SparkSession, cand: DataFrame, k: Int): DataFrame = {
-    // a zero-norm vector has no defined cosine (nullif guard → null
-    // sim): it contributes no edges in either direction. Filtered
-    // BEFORE the typed decode — a null would crash the non-nullable
-    // Double field, and under the old window rendering it could only
-    // surface when a node had fewer than k real candidates anyway.
-    val local = localTopKDouble(cand, k)
-    val w = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("n_id"))
-    local
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+  private def topKEdges(cand: DataFrame, k: Int): DataFrame =
+    TopK.perGroup(cand, k)
       .select(col("vec_id"), col("rnk"), col("n_id"), round(col("sim"), 6).as("sim"))
-  }
-
-  /** "worse" = lower score, then higher candidate id — the heap head
-    * is the worst kept candidate, evicted when a better one arrives;
-    * pure selection over already-computed scores, so values are
-    * untouched and the survivors' global window equals the full sort
-    * exactly.
-    */
-  private def heapFold[S](k: Int, worse: Ordering[(S, Long)])(
-      it: Iterator[(Long, Long, S)]): Iterator[(Long, Long, S)] = {
-    val best = scala.collection.mutable.HashMap
-      .empty[Long, scala.collection.mutable.PriorityQueue[(S, Long)]]
-    it.foreach { case (g, n, s) =>
-      val h = best.getOrElseUpdate(g,
-        scala.collection.mutable.PriorityQueue.empty(worse))
-      if (h.size < k) h.enqueue((s, n))
-      else if (worse.lt((s, n), h.head)) { h.dequeue(); h.enqueue((s, n)) }
-    }
-    best.iterator.flatMap { case (g, h) =>
-      h.iterator.map { case (s, n) => (g, n, s) } }
-  }
-
-  private val worseD: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
-    def compare(x: (Double, Long), y: (Double, Long)): Int = {
-      val c = java.lang.Double.compare(y._1, x._1)
-      if (c != 0) c else java.lang.Long.compare(x._2, y._2)
-    }
-  }
-
-  private val worseL: Ordering[(Long, Long)] = new Ordering[(Long, Long)] {
-    def compare(x: (Long, Long), y: (Long, Long)): Int = {
-      val c = java.lang.Long.compare(y._1, x._1)
-      if (c != 0) c else java.lang.Long.compare(x._2, y._2)
-    }
-  }
-
-  /** Per-partition bounded-heap top-k pre-pass shared by the serving
-    * legs and the graph build: a (group, candidate, DOUBLE score)
-    * stream — columns read positionally — is reduced to ≤ k rows per
-    * group per PARTITION (constant task state, layout-invariant)
-    * before the caller's exact per-group window ranks the
-    * partitions·k survivors. Without it the window funnels the full
-    * scored corpus scan into one task per group: with nQueries ≈ 5-10
-    * that is a 5-10-task sort of n rows each at ANY scale — the
-    * parallelism collapse the graph build hit (4.9 GB spill) before
-    * round 8 moved it to this two-phase shape. Null scores are
-    * dropped (no defined rank — a null can reach a top-k only when a
-    * group has fewer than k real candidates).
-    */
-  private[graft] def localTopKDouble(cand: DataFrame, k: Int): DataFrame = {
-    val spark = cand.sparkSession
-    import spark.implicits._
-    val names = cand.columns.toSeq
-    cand.filter(col(names(2)).isNotNull)
-      .as[(Long, Long, Double)]
-      .mapPartitions(heapFold(k, worseD))
-      .toDF(names: _*)
-  }
-
-  /** [[localTopKDouble]] for exact INTEGER scores (the floored ×10⁴
-    * ADC partial sums) — Long comparisons, no float round-trip.
-    */
-  private[graft] def localTopKLong(cand: DataFrame, k: Int): DataFrame = {
-    val spark = cand.sparkSession
-    import spark.implicits._
-    val names = cand.columns.toSeq
-    cand.filter(col(names(2)).isNotNull)
-      .as[(Long, Long, Long)]
-      .mapPartitions(heapFold(k, worseL))
-      .toDF(names: _*)
-  }
 
   /** CELL-ROUTED k-NN graph build — the subquadratic twin of
     * [[embKnnGraph]] (the round-9 verdict's one structural ANN hole).
@@ -1121,7 +1019,7 @@ object Ann {
                        rate: Double = 0.1, clusters: Int = 0, iters: Int = 1,
                        nprobe: Int = 2, gprobe: Int = 2,
                        trainSampleTarget: Long = 0L): DataFrame =
-    cellEdgesOn(spark, knnCellsAssign(spark, dir, rate, clusters, iters,
+    cellEdgesOn(knnCellsAssign(spark, dir, rate, clusters, iters,
       nprobe, gprobe, trainSampleTarget), k)
 
   /** The routed (vec_id, cid, embedding, n2) assignment frame behind
@@ -1152,7 +1050,7 @@ object Ann {
   /** In-cell top-k edge selection over a routed assignment frame —
     * the candidate join + bounded-heap tail of [[embKnnGraphCells]].
     */
-  private def cellEdgesOn(spark: SparkSession, a: DataFrame, k: Int): DataFrame = {
+  private def cellEdgesOn(a: DataFrame, k: Int): DataFrame = {
     val sim = V.cosineWithNorms(
       V.dot(col("a.embedding"), col("b.embedding")), col("a.n2"), col("b.n2"))
     val cand = a.as("a")
@@ -1160,7 +1058,7 @@ object Ann {
         col("a.cid") === col("b.cid") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("n_id"), sim.as("sim"))
       .distinct()
-    topKEdges(spark, cand, k)
+    topKEdges(cand, k)
   }
 
   /** recall of the cell-routed graph build vs the exact build over
@@ -1172,17 +1070,22 @@ object Ann {
   def embKnnGraphRecall(spark: SparkSession, dir: String, k: Int = 3,
                         rate: Double = 0.1, clusters: Int = 0, iters: Int = 1,
                         nprobe: Int = 2, gprobe: Int = 2,
-                        trainSampleTarget: Long = 0L): DataFrame = {
-    val exact = embKnnGraph(spark, dir, k, rate)
-      .select(col("vec_id"), col("n_id"))
-    val approx = embKnnGraphCells(spark, dir, k, rate, clusters, iters,
-        nprobe, gprobe, trainSampleTarget)
-      .select(col("vec_id"), col("n_id")).withColumn("hit", lit(1))
-    exact.join(approx, Seq("vec_id", "n_id"), "left")
+                        trainSampleTarget: Long = 0L): DataFrame =
+    edgeRecall(embKnnGraph(spark, dir, k, rate),
+      embKnnGraphCells(spark, dir, k, rate, clusters, iters,
+        nprobe, gprobe, trainSampleTarget))
+
+  /** The build monitors' one corpus-level row: exact (vec_id, n_id)
+    * edges ⟕ approximate ones — n_exact edges, n_hit of them also in
+    * the approximate graph, recall = n_hit / n_exact.
+    */
+  private def edgeRecall(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.select(col("vec_id"), col("n_id"))
+      .join(approx.select(col("vec_id"), col("n_id")).withColumn("hit", lit(1)),
+        Seq("vec_id", "n_id"), "left")
       .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"),
         round(count(col("hit")).cast("double") / count(lit(1)).cast("double"), 4)
           .as("recall"))
-  }
 
   /** SAMPLED-QUERY build-recall monitor — the LINEAR rendering of
     * [[embKnnGraphRecall]] (round-12, retiring the last by-contract
@@ -1208,26 +1111,11 @@ object Ann {
     val qs = knnQuerySample(nodes, nQ)
     val q = nodes.join(broadcast(qs), col("vec_id") === col("q_id"))
       .select(col("q_id"), col("embedding").as("q_emb"), col("n2").as("q_n2"))
-    val sim = V.cosineWithNorms(
-      V.dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id"))
-    val scored = broadcast(q).join(nodes, col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("sim"))
-    // bounded-heap pre-pass before the exact window (the serving-leg
-    // two-phase shape): Q groups would otherwise funnel the whole
-    // scored scan into Q sort tasks
-    val exact = localTopKDouble(scored, k)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id").as("vec_id"), col("n_id"))
+    val exact = exactTopK(q, nodes, k).select(col("q_id").as("vec_id"), col("n_id"))
     val approx = embKnnGraphCells(spark, dir, k, rate, clusters, iters,
         nprobe, gprobe, trainSampleTarget)
       .join(broadcast(qs), col("vec_id") === col("q_id"))
-      .select(col("vec_id"), col("n_id")).withColumn("hit", lit(1))
-    exact.join(approx, Seq("vec_id", "n_id"), "left")
-      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"),
-        round(count(col("hit")).cast("double") / count(lit(1)).cast("double"), 4)
-          .as("recall"))
+    edgeRecall(exact, approx)
   }
 
   /** Bounded-beam greedy search over the [[embKnnGraph]] edge set —
@@ -1509,22 +1397,10 @@ object Ann {
     // one count job for the whole recall plan (see annGraphSearch)
     val nBlocks = knnBlocksFor(spark, dir, rate, blocks)
     val approx = annGraphSearch(spark, dir, nQueries, k, beam, rounds, graphK, rate, nBlocks)
-      .select(col("q_id"), col("n_id")).withColumn("m", lit(1))
-    val nodes = knnSampleFrame(spark, dir, rate)
     val q = Tables.embeddings(spark, dir).filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         V.normSq(col("embedding")).as("q_n2"))
-    val sim = V.cosineWithNorms(V.dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id"))
-    val exact = broadcast(q).join(nodes, col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "n_id")
-    exact.join(approx, Seq("q_id", "n_id"), "left")
-      .groupBy("q_id")
-      .agg(count(col("m")).as("n_match"),
-        round(count(col("m")).cast("double") / k, 4).as("recall"))
+    recallAtK(exactTopK(q, knnSampleFrame(spark, dir, rate), k), approx, k)
   }
 
   /** SAMPLED-QUERY navigation-recall monitor — the LINEAR rendering
@@ -1565,7 +1441,7 @@ object Ann {
     val a = knnCellsAssign(spark, dir, rate, clusters, iters,
         nprobe, gprobe, trainSampleTarget)
       .localCheckpoint(eager = false)
-    val edges = cellEdgesOn(spark, a, graphK)
+    val edges = cellEdgesOn(a, graphK)
       .select(col("vec_id").as("src"), col("n_id").as("dst"))
     val entries = a.groupBy("cid").agg(min("vec_id").as("vec_id"))
     val seeds = a.join(broadcast(qs), col("vec_id") === col("q_id"))
@@ -1573,20 +1449,7 @@ object Ann {
       .join(broadcast(entries), "cid")
       .select(col("q_id"), col("vec_id")).distinct()
     val approx = beamSearchOn(edges, nodes, q, k, beam, rounds, Some(seeds))
-      .select(col("q_id"), col("n_id")).withColumn("m", lit(1))
-    val sim = V.cosineWithNorms(
-      V.dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id"))
-    val scored = broadcast(q).join(nodes, col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("sim"))
-    val exact = localTopKDouble(scored, k)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "n_id")
-    exact.join(approx, Seq("q_id", "n_id"), "left")
-      .groupBy("q_id")
-      .agg(count(col("m")).as("n_match"),
-        round(count(col("m")).cast("double") / k, 4).as("recall"))
+    recallAtK(exactTopK(q, nodes, k), approx, k)
   }
 
   /** Matryoshka-truncation recall: top-k retrieval quality when only
@@ -1601,21 +1464,10 @@ object Ann {
                    nQueries: Int = 10, k: Int = 5): DataFrame = {
     val trunc = slice(col("embedding"), 1, dims)
     val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), trunc.as("emb_t"), V.normSq(trunc).as("n2"))
+      .select(col("vec_id"), trunc.as("embedding"), V.normSq(trunc).as("n2"))
     val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("emb_t").as("q_emb"), col("n2").as("q_n2"))
-    val sim = V.cosineWithNorms(V.dot(col("q_emb"), col("emb_t")), col("q_n2"), col("n2"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id"))
-    val approx = broadcast(q).join(e, col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), sim.as("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("n_id")).withColumn("m", lit(1))
-    val exact = annBruteForce(spark, dir, nQueries, k).select(col("q_id"), col("n_id"))
-    exact.join(approx, Seq("q_id", "n_id"), "left")
-      .groupBy("q_id")
-      .agg(count(col("m")).as("n_match"),
-        round(count(col("m")).cast("double") / k, 4).as("recall"))
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("n2").as("q_n2"))
+    recallAtK(annBruteForce(spark, dir, nQueries, k), exactTopK(q, e, k), k)
   }
 
   /** Top-2 centroid ROUTER with confidence margin — the assignment
@@ -1660,15 +1512,8 @@ object Ann {
     * operators.
     */
   def annRecallAdc(spark: SparkSession, dir: String,
-                   nQueries: Int = 5, k: Int = 5): DataFrame = {
-    val exact = annBruteForce(spark, dir, nQueries, k).select(col("q_id"), col("n_id"))
-    val approx = embAdc(spark, dir, nQueries, k).select(col("q_id"), col("n_id"))
-      .withColumn("m", lit(1))
-    exact.join(approx, Seq("q_id", "n_id"), "left")
-      .groupBy("q_id")
-      .agg(count(col("m")).as("n_match"),
-        round(count(col("m")).cast("double") / k, 4).as("recall"))
-  }
+                   nQueries: Int = 5, k: Int = 5): DataFrame =
+    recallAtK(annBruteForce(spark, dir, nQueries, k), embAdc(spark, dir, nQueries, k), k)
 
   /** (vec_id, t, sig): every vector's bucket in every LSH table —
     * the map-only signature pass [[annLsh]] builds its index from,

@@ -40,12 +40,6 @@ object Dedup {
     */
   def canonicalJson(c: Column): Column = graft.plans.CanonicalJson(c)
 
-  /** Events with `props` canonicalized — run dedup on this frame when
-    * the feed's JSON formatting is not byte-stable.
-    */
-  def canonicalizeProps(events: DataFrame): DataFrame =
-    events.withColumn("props", canonicalJson(col("props")))
-
   /** The reference's storable content hash: murmur3_128(seed) of a
     * content column's bytes (Deduplicator.java:27-28 pins seed 42 so
     * hash VALUES can live in external storage and match across

@@ -318,9 +318,10 @@ object Sampling {
     * row in the (h, doc_id) order also all survive phase 1 — so the
     * phase-2 rank of every kept row equals its global rank. The
     * order key is unique (doc_id dedups ties), so ranks are
-    * deterministic. This is the genuine per-partition imperative
-    * case (a bounded heap fold) — `mapPartitions` with constant
-    * memory, not a window over the corpus.
+    * deterministic. Both phases are [[TopK.perGroup]] — the shared
+    * per-partition heap fold (`mapPartitions` with constant memory,
+    * not a window over the corpus) — scoring each doc by the NEGATED
+    * hash, so score DESC, doc_id ASC is exactly (h, doc_id) ascending.
     */
   def docsSampleFixed2Phase(spark: SparkSession, dir: String, k: Int = 20): DataFrame =
     docsSampleFixed2PhaseOn(Tables.documents(spark, dir), k)
@@ -330,34 +331,10 @@ object Sampling {
     * repartitionings (the result must not depend on which rows share
     * an input partition).
     */
-  def docsSampleFixed2PhaseOn(documents: DataFrame, k: Int = 20): DataFrame = {
-    require(k > 0, s"docsSampleFixed2Phase needs k > 0, got $k")
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val base = documents
-      .select(col("doc_id"), col("lang"), hash32(col("doc_id")).as("h"))
-      .as[(Long, String, Long)]
-    // max-heap on (h, doc_id): the worst kept row sits on top and is
-    // evicted by any better arrival once the heap holds k entries
-    val local = base.mapPartitions { it =>
-      val ord = implicitly[Ordering[(Long, Long)]]
-      val heaps = scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.PriorityQueue[(Long, Long)]]
-      it.foreach { case (id, lang, h) =>
-        val q = heaps.getOrElseUpdate(lang,
-          scala.collection.mutable.PriorityQueue.empty[(Long, Long)](ord))
-        if (q.size < k) q.enqueue((h, id))
-        else if (ord.lt((h, id), q.head)) { q.dequeue(); q.enqueue((h, id)) }
-      }
-      heaps.iterator.flatMap { case (lang, q) =>
-        q.iterator.map { case (h, id) => (id, lang, h) }
-      }
-    }.toDF("doc_id", "lang", "h")
-    val w = Window.partitionBy("lang").orderBy(col("h"), col("doc_id"))
-    local.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("doc_id"), col("lang"), col("rnk"))
-  }
+  def docsSampleFixed2PhaseOn(documents: DataFrame, k: Int = 20): DataFrame =
+    TopK.perGroup(documents.select(col("lang"), col("doc_id"),
+        (-hash32(col("doc_id"))).as("neg_h")), k)
+      .select(col("doc_id"), col("lang"), col("rnk").cast("long").as("rnk"))
 
   /** DSIR-style hashed n-gram importance scores (Xie et al., "Data
     * Selection for Language Models via Importance Resampling",

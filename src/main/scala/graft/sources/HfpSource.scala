@@ -140,10 +140,6 @@ object HfpSource {
                      payloadCol: String = "payload"): DataFrame =
     df.withColumn("content_key", canonicalPayload(col(schemaCol), col(payloadCol)))
 
-  /** Batch read of an HFP text feed (one message per line). */
-  def readFeed(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    readVia(spark, FileFeed(path))
-
   /** Streaming read of an HFP text feed directory — the file-source
     * analog of the reference's Pulsar consumer (new files = new
     * messages; downstream dedup/analytics are identical).

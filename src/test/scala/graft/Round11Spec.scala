@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ann, NearDup}
+import graft.operators.{Ann, NearDup, TopK}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -96,22 +96,32 @@ class Round11Spec extends SparkSpec {
        else java.lang.Double.valueOf((rnd.nextInt(50) - 25) / 10.0))
     } :+ ((8L, 1L, java.lang.Double.valueOf(0.5))) // sub-k group
     val base = cand.toDF("q_id", "n_id", "sim")
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id"))
-    def rank(df: DataFrame): Set[(Long, Int, Long)] =
-      df.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 5)
-        .select("q_id", "rnk", "n_id").as[(Long, Int, Long)].collect().toSet
-    val expect = rank(base.filter(col("sim").isNotNull))
-    Seq(1, 3, 7).foreach { parts =>
-      val got = rank(Ann.localTopKDouble(base.repartition(parts), 5))
-      assert(got === expect, s"heap pre-pass diverged at $parts partitions")
+    // (group, rnk, id) of a (group, id, score) frame already carrying rnk
+    def ranked(df: DataFrame): Set[(Any, Int, Long)] =
+      df.filter(col("rnk") <= 5).select(df.columns(0), "rnk", df.columns(1)).collect()
+        .map(r => (r.get(0), r.getInt(1), r.getLong(2))).toSet
+    // the single full window over the non-null stream
+    def rank(df: DataFrame): Set[(Any, Int, Long)] = {
+      val Seq(g, id, s) = df.columns.toSeq
+      ranked(df.withColumn("rnk",
+        row_number().over(Window.partitionBy(g).orderBy(col(s).desc, col(id)))))
     }
-    // integer variant over the same stream, scores as x10 longs
-    val baseL = base.filter(col("sim").isNotNull)
-      .select(col("q_id"), col("n_id"), (col("sim") * 10).cast("long").as("sim"))
-    val expectL = rank(baseL)
-    Seq(1, 3, 7).foreach { parts =>
-      val got = rank(Ann.localTopKLong(baseL.repartition(parts), 5))
-      assert(got === expectL, s"long heap pre-pass diverged at $parts partitions")
+    // every heap shape the kernel serves: (Long, ·, Double) serving
+    // legs, (Long, ·, Long) ADC scores, (String, ·, Long) exactly-k sample
+    val shapes = Seq(
+      "double" -> base,
+      "long" -> base.filter(col("sim").isNotNull)
+        .select(col("q_id"), col("n_id"), (col("sim") * 10).cast("long").as("sim")),
+      "string group" -> base.select(concat(lit("g"), col("q_id")).as("lang"),
+        col("n_id").as("doc_id"), (col("sim") * 10).cast("long").as("s")))
+    shapes.foreach { case (shape, df) =>
+      val expect = rank(df.filter(col(df.columns(2)).isNotNull))
+      assert(expect.nonEmpty)
+      Seq(1, 3, 7).foreach { parts =>
+        val out = TopK.perGroup(df.repartition(parts), 5)
+        assert(out.columns.toSeq === df.columns.toSeq :+ "rnk")
+        assert(ranked(out) === expect, s"$shape heap pre-pass diverged at $parts partitions")
+      }
     }
   }
 

@@ -24,6 +24,15 @@ if [ -n "$envread" ]; then
   echo "$envread" >&2
   exit 1
 fi
+# One per-group top-k: every bounded heap lives in graft.operators.TopK,
+# so a private copy of the two-phase kernel cannot grow back.
+heaps=$(grep -rn 'PriorityQueue' src/main/scala \
+  | grep -v '^src/main/scala/graft/operators/TopK\.scala:' || true)
+if [ -n "$heaps" ]; then
+  echo "[precommit] PriorityQueue outside graft.operators.TopK:" >&2
+  echo "$heaps" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile
 sbt -batch 'runMain graft.Scratch'
 echo "[precommit] OK"
