@@ -1234,10 +1234,11 @@ object Ann {
     * -0.0 = 0.0 comparison semantics). Rounds after the frontier
     * stops producing unseen keys are skipped — a fixed point: the
     * unrolled rendering would rescore identical keys into identical
-    * max() values, changing nothing (spec-pinned). At 100 TB each
-    * round is rounds × two linear scans with NO exchange, and the
-    * driver holds only the visited key set — the bounded-collect
-    * frontier pattern.
+    * max() values, changing nothing (spec-pinned); a key already
+    * tried counts as seen even when it scored nothing (a dangling
+    * edge). At 100 TB each round is rounds × two linear scans with
+    * NO exchange, and the driver holds only the tried key set — the
+    * bounded-collect frontier pattern.
     */
   private[graft] def beamSearchOn(rawEdges: DataFrame, rawNodes: DataFrame,
                                   q: DataFrame, k: Int, beam: Int,
@@ -1310,7 +1311,12 @@ object Ann {
       visited.getOrElseUpdate(r.getLong(0), scala.collection.mutable.HashMap.empty)
         .getOrElseUpdate(r.getLong(1), if (r.isNullAt(2)) null else r.getDouble(2))
     }
-    merge(score(seedKeys.distinct))
+    // every (q_id, vec_id) ever sent to scoring: a dangling dst (an
+    // edge into no node) scores nothing, so visited alone would offer
+    // it as fresh every round and the fixed point would never hold
+    val attempted = scala.collection.mutable.HashSet.empty[(Long, Long)]
+    def tryKeys(keys: Seq[(Long, Long)]): Unit = { attempted ++= keys; merge(score(keys)) }
+    tryKeys(seedKeys.distinct)
     var fixedPoint = false
     for (_ <- 1 to rounds if !fixedPoint) {
       val beamKeys: Seq[(Long, Long)] = visited.iterator.flatMap { case (qid, m) =>
@@ -1319,11 +1325,11 @@ object Ann {
       val nbr = expand(beamKeys.map(_._2).distinct)
       val fresh = beamKeys.iterator.flatMap { case (qid, src) =>
         nbr.getOrElse(src, Array.empty[Long]).iterator
-          .filterNot(visited(qid).contains).map(dst => (qid, dst))
+          .map(dst => (qid, dst)).filterNot(attempted)
       }.toSeq.distinct
-      if (fresh.isEmpty) fixedPoint = true // unseen-key-free round ⇒ no
+      if (fresh.isEmpty) fixedPoint = true // untried-key-free round ⇒ no
       // future round can change visited (beam is a function of it)
-      else merge(score(fresh))
+      else tryKeys(fresh)
     }
     val outSchema = StructType(Seq(
       StructField("q_id", LongType), StructField("rnk", LongType),

@@ -20,12 +20,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    [[PrimeAnchor]] per content key — the exact reference chain: a
   *    duplicate is an event whose key saw a PRIME within ttl;
   *    duplicates do NOT refresh the anchor (cache.put only on miss,
-  *    Deduplicator.java:51); a prime older than ttl readmits.
-  *    [[dedupBounded]] keeps a [[SlotState]] per cache slot. State is
-  *    bounded by keys (or slots) per ttl window, not total keys.
-  *  - Typed handles on transformWithState: [[heavyHitters]] and
-  *    [[dedupBoundedLru]] (MapState per shard), [[compactLatest]]
-  *    (ValueState + event-time timer per key).
+  *    Deduplicator.java:51); a prime older than ttl readmits. State is
+  *    bounded by keys per ttl window, not total keys. [[dedupBounded]]
+  *    keeps one [[LruShard]] per cache segment — the reference's
+  *    size-bounded Guava cache, least-recently-accessed eviction, on
+  *    either state store.
+  *  - Typed handles on transformWithState: [[heavyHitters]] (MapState
+  *    per shard), [[compactLatest]] (ValueState + event-time timer per
+  *    key).
   */
 object DedupStream {
 
@@ -38,7 +40,15 @@ object DedupStream {
   /** Dedup state: the anchor prime's event-time millis. */
   case class PrimeAnchor(primeTsMs: Long)
 
-  def contentKeyOf(e: Ev): String = s"${e.user_id}|${e.event_type}|${e.value}|${e.props}"
+  /** The content key as one string, injective on the content columns:
+    * `event_type` is length-prefixed, so a `|` inside it cannot shift
+    * a field boundary (user_id and value never contain one, and props
+    * runs to the end).
+    */
+  def contentKeyOf(e: Ev): String = {
+    val typeLen = if (e.event_type == null) -1 else e.event_type.length
+    s"${e.user_id}|$typeLen:${e.event_type}|${e.value}|${e.props}"
+  }
 
   /** THE definition of the reference cache semantics
     * (Deduplicator.handleMessage, Deduplicator.java:43-59), as a
@@ -405,12 +415,12 @@ object DedupStream {
         OutputMode.Append)
   }
 
-  /** State for one bounded-cache slot: the occupant content key's
-    * hash and its anchor prime's event-time millis.
+  /** One segment of the size-bounded cache: its entries (content key
+    * → (primeTsMs, lastAccessSeq)) and its access clock.
     */
-  case class SlotState(keyHash: Long, primeTsMs: Long)
+  case class LruShard(entries: Map[String, (Long, Long)], clock: Long)
 
-  /** Deterministic 64-bit content-key hash for slot assignment. */
+  /** Deterministic 64-bit content-key hash: the key's cache segment. */
   private def contentKeyHash(e: Ev): Long = {
     val s = contentKeyOf(e)
     var h = 1125899906842597L
@@ -419,52 +429,13 @@ object DedupStream {
     h
   }
 
-  /** SIZE-BOUNDED streaming TTL dedup — the analog of the reference
-    * cache's `maximumSize(250000)` (Deduplicator.java:39) on top of
-    * the TTL. State is keyed by cache slot = hash(contentKey) mod
-    * maxEntries, so total state entries are ≤ maxEntries BY
-    * CONSTRUCTION regardless of key churn (the watermark/TTL timeout
-    * still reclaims idle slots). A new content key landing on an
-    * occupied slot evicts the previous occupant — the analog of a
-    * full cache dropping an entry; evicted content re-arriving is
-    * re-admitted as a prime, exactly the reference's behavior when a
-    * message outlives its cache residency. Guava's eviction picks a
-    * coldest-ish entry where this picks a hash collision; both are
-    * "bounded cache forgets under pressure", which is the semantics a
-    * user observes.
-    *
-    * Slot-keyed grouping serializes per-slot work, so size maxEntries
-    * ≥ expected-parallelism × some headroom (the reference's 250k
-    * default is far past that; tiny bounds are for tests).
-    */
-  def dedupBounded(events: Dataset[Ev], ttlMs: Long, maxEntries: Int,
-                   watermark: String = "10 minutes"): Dataset[Ev] = {
-    import events.sparkSession.implicits._
-    walkKeyed[Long, SlotState, Ev](events, watermark,
-        e => math.floorMod(contentKeyHash(e), maxEntries.toLong)) { (batch, prior) =>
-      var st = prior
-      val out = batch.filter { e =>
-        val kh = contentKeyHash(e)
-        val t = e.ts.getTime
-        st match {
-          case Some(SlotState(h, p)) if h == kh && t - p <= ttlMs =>
-            false // duplicate of the slot occupant: dropped, anchor kept
-          case _ =>
-            st = Some(SlotState(kh, t)) // prime; claims (or evicts) the slot
-            true
-        }
-      }
-      (out, st.map(s => (s, s.primeTsMs + ttlMs)))
-    }
-  }
-
   /** One LRU-cache arrival against entry map `m` (content key →
     * (primeTsMs, lastAccessSeq)) — THE definition of Guava
     * `maximumSize` + `expireAfterWrite` cache semantics
-    * (Deduplicator.java:37-40), shared by [[LruDedupProcessor]] and
-    * the spec's in-memory replay so the algorithm cannot drift from
-    * its test. Returns true for a prime. Semantics, each the Guava
-    * behavior the reference observes:
+    * (Deduplicator.java:37-40). [[dedupBounded]] folds every
+    * micro-batch slice through it and the specs replay it in memory,
+    * so the operator cannot drift from its test. Returns true for a
+    * prime. Semantics, each the Guava behavior the reference observes:
     *  - present within ttl → DUPLICATE; the access refreshes
     *    RECENCY (getIfPresent moves the entry in the access queue)
     *    but never the write time (expireAfterWrite; cache.put only
@@ -473,12 +444,10 @@ object DedupStream {
     *    as a PRIME (new write time);
     *  - absent → PRIME, inserted; over `cap`, expired entries are
     *    dropped first (Guava's maintenance sweep), then the
-    *    least-recently-ACCESSED entry is evicted — true size-LRU,
-    *    not a hash-collision slot drop.
+    *    least-recently-ACCESSED entry is evicted.
     */
   def lruDedupStep(m: scala.collection.mutable.HashMap[String, (Long, Long)],
-                   key: String, tsMs: Long, ttlMs: Long, cap: Int, seq: Long,
-                   onRemove: String => Unit = _ => ()): Boolean =
+                   key: String, tsMs: Long, ttlMs: Long, cap: Int, seq: Long): Boolean =
     m.get(key) match {
       case Some((p, _)) if tsMs - p <= ttlMs =>
         m(key) = (p, seq) // recency refresh only
@@ -489,97 +458,56 @@ object DedupStream {
           val expired = m.iterator
             .collect { case (k2, (p2, _)) if k2 != key && tsMs - p2 > ttlMs => k2 }
             .toSeq
-          expired.foreach { k2 => m.remove(k2); onRemove(k2) }
+          m --= expired
           while (m.size > cap) {
             val (lk, _) = m.minBy { case (_, (_, s)) => s }
-            m.remove(lk); onRemove(lk)
+            m.remove(lk)
           }
         }
         true
     }
 
-  /** [[dedupBounded]]'s bound with GUAVA-FAITHFUL eviction — the
-    * round-13 closure of the one documented fidelity gap: where
-    * dedupBounded forgets on hash-slot COLLISION, this forgets the
-    * least-recently-accessed entry of a full segment, exactly the
-    * `CacheBuilder.maximumSize(250000)` behavior
-    * (Deduplicator.java:37-40). The sharding is not a fidelity
-    * loss: Guava's LocalCache IS segmented (maximumSize is divided
-    * across concurrencyLevel segments, each running its own access
-    * queue), so "hash-sharded groups, per-shard cap, per-shard LRU"
-    * is the reference cache's literal shape — here with shards as
-    * Spark state keys and the access queue as a per-entry sequence
-    * number in MapState. State ≤ cap·shards ≈ maxEntries entries BY
-    * CONSTRUCTION at any key churn.
+  /** SIZE-BOUNDED streaming TTL dedup — the reference cache's
+    * `maximumSize(250000)` on top of its TTL (Deduplicator.java:37-40),
+    * with Guava's eviction: a full segment forgets its
+    * least-recently-accessed entry, and evicted content re-arriving is
+    * re-admitted as a prime. Guava's LocalCache is segmented
+    * (maximumSize is divided across concurrencyLevel segments, each
+    * with its own access queue), so the shape here is the reference
+    * cache's own: content keys hash into `shards` segments (the
+    * concurrencyLevel analog), each one [[walkKeyed]] state value
+    * ([[LruShard]]) with capacity ceil(maxEntries / shards), every
+    * micro-batch slice folded through [[lruDedupStep]] in (ts ms,
+    * event_id) order. Like Guava, a skewed segment can evict before
+    * the global count reaches maxEntries, never after. The shard
+    * count is clamped to maxEntries, so state holds at most
+    * maxEntries entries rounded up to a multiple of the segment count,
+    * at any key churn.
     *
-    * On `transformWithState` (RocksDB store — the 100 TB
-    * deployment's store): per-shard MapState(contentKey →
-    * (primeTsMs, lastAccessSeq)) + a ValueState access clock. Each
-    * micro-batch loads the shard's entries once, folds the slice in
-    * memory through [[lruDedupStep]], and writes back one delta —
-    * not one store round-trip per row (the SpaceSaving pattern).
-    * Per-shard capacity = ceil(maxEntries / shards); like Guava, a
-    * skewed segment can evict before the GLOBAL count reaches
-    * maxEntries, never after.
+    * A segment expires at its newest prime + ttl: once the watermark
+    * passes that, every entry is expired for every later row, so
+    * removing the segment is exact. Runs unchanged on the default
+    * and the RocksDB state store. Each segment's walk serializes, so
+    * size `shards` ≈ state parallelism.
     */
-  final class LruDedupProcessor(ttlMs: Long, cap: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Ev, Ev] {
-    @transient private var entries:
-      org.apache.spark.sql.streaming.MapState[String, (Long, Long)] = _
-    @transient private var clock: org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      val E = org.apache.spark.sql.Encoders
-      entries = getHandle.getMapState("lru", E.STRING,
-        E.tuple(E.scalaLong, E.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      clock = getHandle.getValueState("clock", E.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
-
-    override def handleInputRows(shard: Long, rows: Iterator[Ev],
-        timers: org.apache.spark.sql.streaming.TimerValues): Iterator[Ev] = {
-      val m = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-      entries.iterator().foreach { case (k, v) => m(k) = v }
-      var seq = if (clock.exists()) clock.get() else 0L
-      val out = Seq.newBuilder[Ev]
-      // one shard's slice of ONE micro-batch, (ts, event_id) ordered
-      // — the deterministic arrival order every dedup rendering pins
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-        seq += 1
-        if (lruDedupStep(m, contentKeyOf(e), e.ts.getTime, ttlMs, cap, seq,
-            removed => entries.removeKey(removed)))
-          out += e
-      }
-      m.foreach { case (k, v) => entries.updateValue(k, v) }
-      clock.update(seq)
-      out.result().iterator
-    }
-  }
-
-  /** Size-bounded streaming TTL dedup with FAITHFUL Guava eviction
-    * (least-recently-accessed per segment) — see
-    * [[LruDedupProcessor]]. `maxEntries` is the reference's 250000;
-    * `shards` is the concurrencyLevel analog (state parallelism:
-    * each shard's walk serializes, so size shards ≈ cluster
-    * parallelism). [[dedupBounded]] remains the
-    * flatMapGroupsWithState rendering for deployments on the
-    * default HDFS-backed store; the two agree wherever neither
-    * evicts (spec-pinned) and differ only in WHICH entry a full
-    * cache forgets.
-    */
-  def dedupBoundedLru(events: Dataset[Ev], ttlMs: Long, maxEntries: Int,
-                      shards: Int = 32,
-                      watermark: String = "10 minutes"): Dataset[Ev] = {
+  def dedupBounded(events: Dataset[Ev], ttlMs: Long, maxEntries: Int,
+                   shards: Int = 32,
+                   watermark: String = "10 minutes"): Dataset[Ev] = {
+    require(maxEntries >= 1 && shards >= 1, "dedupBounded needs maxEntries, shards >= 1")
     import events.sparkSession.implicits._
-    val cap = math.max(1, (maxEntries + shards - 1) / shards)
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e => math.floorMod(contentKeyHash(e), shards.toLong))
-      .transformWithState(new LruDedupProcessor(ttlMs, cap),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append)
+    val segments = math.min(shards, maxEntries)
+    val cap = (maxEntries + segments - 1) / segments
+    walkKeyed[Long, LruShard, Ev](events, watermark,
+        e => math.floorMod(contentKeyHash(e), segments.toLong)) { (batch, prior) =>
+      val m = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
+      var seq = 0L
+      prior.foreach { s => m ++= s.entries; seq = s.clock }
+      val out = batch.filter { e =>
+        seq += 1
+        lruDedupStep(m, contentKeyOf(e), e.ts.getTime, ttlMs, cap, seq)
+      }
+      (out, m.valuesIterator.map(_._1).maxOption.map(p => (LruShard(m.toMap, seq), p + ttlMs)))
+    }
   }
 
   /** One event annotated by the chain walk: whether it is a duplicate

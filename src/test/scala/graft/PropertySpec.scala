@@ -80,6 +80,31 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("lruDedupStep invariants: size <= cap, prime iff absent or expired, " +
+    "a duplicate keeps its write time") {
+    // its own generator, so the shared one's draws for later tests stay put
+    val r = new scala.util.Random(7)
+    for (_ <- 1 to 50) {
+      val cap = 1 + r.nextInt(6)
+      val ttl = 1000L + r.nextInt(5000)
+      val keys = cap * 3
+      val m = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
+      var t = 1700000000000L
+      // arrivals in (ts, seq) order, the order the operator walks, ties included
+      (1L to 100L + r.nextInt(400)).foreach { seq =>
+        t += r.nextInt(500)
+        val key = s"k${math.min(r.nextInt(keys), r.nextInt(keys))}"
+        val before = m.get(key)
+        val prime = DedupStream.lruDedupStep(m, key, t, ttl, cap, seq)
+        assert(prime === before.forall { case (p, _) => t - p > ttl },
+          s"$key at $t: prime=$prime with entry $before (ttl $ttl)")
+        assert(m.size <= cap, s"${m.size} entries over cap $cap")
+        if (prime) assert(m(key) === ((t, seq)))
+        else assert(m(key) === ((before.get._1, seq)), s"duplicate $key moved its write time")
+      }
+    }
+  }
+
   test("winnowedFingerprints: every fingerprint is a real window hash; count bounded") {
     for (_ <- 1 to 25) {
       val len = 10 + rnd.nextInt(200)

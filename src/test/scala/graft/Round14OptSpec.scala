@@ -29,6 +29,30 @@ class Round14OptSpec extends SparkSpec {
       s"$tag rows diverged: +${d1.take(5).mkString(";")} -${d2.take(5).mkString(";")}")
   }
 
+  /** Jobs `body` schedules, counted by a listener up to a marker job
+    * submitted after it: the listener bus delivers in order, so once
+    * the marker arrives every earlier job start has been counted.
+    */
+  private def jobsScheduledBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "jobs-marker"))
+          marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup("jobs-marker", "end of the counted jobs")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never arrived")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("beamSearchOn driver-frontier ≡ unrolled on the corpus (chain edges, single + multi entry)") {
     val e = Tables.embeddings(spark, sf)
     val nodes = nodesOf(e)
@@ -76,5 +100,24 @@ class Round14OptSpec extends SparkSpec {
       graft.operators.Ann.beamSearchOn(edges, nodes, q, 3, 2, 2, Some(emptySeeds)),
       graft.operators.Ann.beamSearchOnUnrolled(edges, nodes, q, 3, 2, 2, Some(emptySeeds)),
       "empty seeds")
+  }
+
+  test("beamSearchOn reaches its fixed point past a dangling edge: extra rounds schedule no jobs") {
+    import spark.implicits._
+    val raw = Seq((0L, Array(1.0f, 0.0f)), (1L, Array(0.9f, 0.1f)), (2L, Array(0.5f, 0.5f)))
+      .toDF("vec_id", "embedding")
+    val nodes = nodesOf(raw)
+    val q = qOf(nodes, 2)
+    // dangling dst 99; the first round reaches every node, so the
+    // second finds no untried key and the frontier is exhausted
+    val edges = Seq((0L, 1L), (0L, 2L), (0L, 99L), (1L, 0L), (2L, 0L)).toDF("src", "dst")
+    val jobs = Seq(2, 6).map(r =>
+      jobsScheduledBy(graft.operators.Ann.beamSearchOn(edges, nodes, q, 2, 4, r)))
+    assert(jobs.head > 0 && jobs(1) === jobs.head,
+      s"rounds = 2 scheduled ${jobs.head} jobs, rounds = 6 ${jobs(1)}")
+    assertSameRows(
+      graft.operators.Ann.beamSearchOn(edges, nodes, q, 2, 4, 6),
+      graft.operators.Ann.beamSearchOnUnrolled(edges, nodes, q, 2, 4, 6),
+      "dangling edge past the fixed point")
   }
 }

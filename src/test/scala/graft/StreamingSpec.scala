@@ -43,6 +43,28 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a '|' inside event_type or props cannot make two distinct events one content key") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = 1700000000000L
+    // joined with bare '|', both would read 1|x|1.0|2.0|{}
+    val a = Ev(1, new java.sql.Timestamp(base), 1L, "x|1.0", 2.0, "{}")
+    val b = Ev(2, new java.sql.Timestamp(base + 1000), 1L, "x", 1.0, "2.0|{}")
+    assert(DedupStream.contentKeyOf(a) !== DedupStream.contentKeyOf(b))
+    val input = MemoryStream[Ev]
+    val q = DedupStream.dedupTtlChain(input.toDS(), 60000L).writeStream.format("memory")
+      .queryName("content_key_out").outputMode(OutputMode.Append).start()
+    try {
+      input.addData(a, b); q.processAllAvailable()
+      val got = spark.table("content_key_out").collect().map(_.getLong(0)).toSet
+      // batch dedup keys on the columns themselves
+      val batch = graft.operators.Dedup.firstSeen(Seq(a, b).toDF())
+        .select("event_id").as[Long].collect().toSet
+      assert(got === batch)
+      assert(got === Set(1L, 2L))
+    } finally q.stop()
+  }
+
   test("space-saving heavy hitters: exact when distinct items fit, bounded overestimate " +
     "under eviction (RocksDB store)") {
     import spark.implicits._
@@ -624,13 +646,27 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** The most cache entries any committed trigger of a [[DedupStream.dedupBounded]]
+    * query held, read back from the state store of its checkpoint: one
+    * state row is a whole cache segment, so the row count alone does
+    * not see the entry bound.
+    */
+  private def maxCacheEntries(ckpt: String, q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+    (0L to q.lastProgress.batchId).map { b =>
+      spark.read.format("statestore").option("batchId", b).load(ckpt)
+        .selectExpr("coalesce(sum(size(value.groupState.entries)), 0)")
+        .head().getLong(0)
+    }.max
+
   test("dedupBounded caps state at maxEntries under key churn and readmits evicted content") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val base = 1700000000000L
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_bounded_")
     val input = MemoryStream[Ev]
     val out = DedupStream.dedupBounded(input.toDS(), ttlMs = 600000L, maxEntries = 1)
     val q = out.writeStream.format("memory").queryName("bounded_out")
+      .option("checkpointLocation", ckpt.toString)
       .outputMode(OutputMode.Append).start()
     try {
       // one slot total (maximumSize analog at its smallest): k1 prime,
@@ -643,77 +679,80 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       val got = spark.table("bounded_out").collect().map(_.getLong(0)).toSet
       assert(got === Set(1L, 3L, 4L, 5L, 6L))
-      val maxState = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsTotal)
-      assert(maxState.nonEmpty && maxState.max <= 1,
-        s"state exceeded the maxEntries bound: ${maxState.toSeq}")
-    } finally q.stop()
+      val maxState = maxCacheEntries(ckpt.toString, q)
+      assert(maxState > 0 && maxState <= 1,
+        s"state exceeded the maxEntries bound: $maxState entries")
+    } finally { q.stop(); TestSpark.deleteRecursively(ckpt) }
   }
 
-  test("dedupBoundedLru: least-recently-accessed eviction, readmit after evict, " +
-    "state bound, replay equality (RocksDB store)") {
+  test("dedupBounded: least-recently-accessed eviction, readmit after evict, " +
+    "state bound, replay equality (default and RocksDB store)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val base = 1700000000000L
-    withConf(rocksDbStore) {
-      // one segment (shards=1), capacity 2 — the smallest cache where
-      // LRU order is observable: A=user1, B=user2, C=user3
-      val batch1 = Seq(
-        ev(1, base),             // A prime
-        ev(2, base + 1000, user = 2), // B prime
-        ev(3, base + 2000),      // A dup — refreshes A's RECENCY
-        ev(4, base + 3000, user = 3)) // C prime: full → evicts B (LRU), NOT A
-      val batch2 = Seq(
-        ev(5, base + 4000),      // A dup still (proves A survived the evict) + recency
-        ev(6, base + 5000, user = 2)) // B readmitted as prime (was evicted); evicts C (A refreshed by e5)
-      val input = MemoryStream[Ev]
-      val out = DedupStream.dedupBoundedLru(input.toDS(),
-        ttlMs = 600000L, maxEntries = 2, shards = 1)
-      val q = out.writeStream.format("memory").queryName("lru_out")
-        .outputMode(OutputMode.Append).start()
-      try {
-        input.addData(batch1: _*); q.processAllAvailable()
-        input.addData(batch2: _*); q.processAllAvailable()
-        val got = spark.table("lru_out").collect().map(_.getLong(0)).toSet
-        // the shared-step in-memory replay over the same arrival order
-        // — the spec and the processor drive ONE lruDedupStep
-        val m = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-        var seq = 0L
-        val expect = (batch1 ++ batch2).sortBy(e => (e.ts.getTime, e.event_id))
-          .flatMap { e =>
-            seq += 1
-            if (DedupStream.lruDedupStep(m, DedupStream.contentKeyOf(e),
-                e.ts.getTime, 600000L, 2, seq)) Some(e.event_id) else None
-          }.toSet
-        assert(got === expect)
-        // the hand-computed truth: slot-hash dedupBounded could not
-        // produce this set (B evicted by RECENCY, A kept through it)
-        assert(got === Set(1L, 2L, 4L, 6L))
-        val maxState = q.recentProgress.flatMap(_.stateOperators).map(_.numRowsTotal)
-        assert(maxState.nonEmpty && maxState.max <= 2 + 1, // +1: the clock ValueState row
-          s"state exceeded the maxEntries bound: ${maxState.toSeq}")
-      } finally q.stop()
+    for ((store, confs) <- Seq("default" -> Seq.empty, "rocksdb" -> Seq(rocksDbStore)))
+      withConf(confs: _*) {
+        // one segment (shards=1), capacity 2 — the smallest cache where
+        // LRU order is observable: A=user1, B=user2, C=user3
+        val batch1 = Seq(
+          ev(1, base),             // A prime
+          ev(2, base + 1000, user = 2), // B prime
+          ev(3, base + 2000),      // A dup — refreshes A's RECENCY
+          ev(4, base + 3000, user = 3)) // C prime: full → evicts B (LRU), NOT A
+        val batch2 = Seq(
+          ev(5, base + 4000),      // A dup still (proves A survived the evict) + recency
+          ev(6, base + 5000, user = 2)) // B readmitted as prime (was evicted); evicts C (A refreshed by e5)
+        val ckpt = java.nio.file.Files.createTempDirectory("graft_lru_")
+        val input = MemoryStream[Ev]
+        val out = DedupStream.dedupBounded(input.toDS(),
+          ttlMs = 600000L, maxEntries = 2, shards = 1)
+        val q = out.writeStream.format("memory").queryName(s"lru_out_$store")
+          .option("checkpointLocation", ckpt.toString)
+          .outputMode(OutputMode.Append).start()
+        try {
+          input.addData(batch1: _*); q.processAllAvailable()
+          input.addData(batch2: _*); q.processAllAvailable()
+          val got = spark.table(s"lru_out_$store").collect().map(_.getLong(0)).toSet
+          // the shared-step in-memory replay over the same arrival order
+          // — the spec and the operator drive ONE lruDedupStep
+          val m = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
+          var seq = 0L
+          val expect = (batch1 ++ batch2).sortBy(e => (e.ts.getTime, e.event_id))
+            .flatMap { e =>
+              seq += 1
+              if (DedupStream.lruDedupStep(m, DedupStream.contentKeyOf(e),
+                  e.ts.getTime, 600000L, 2, seq)) Some(e.event_id) else None
+            }.toSet
+          assert(got === expect, store)
+          // the hand-computed truth: a hash-slot cache could not
+          // produce this set (B evicted by RECENCY, A kept through it)
+          assert(got === Set(1L, 2L, 4L, 6L), store)
+          val maxState = maxCacheEntries(ckpt.toString, q)
+          assert(maxState > 0 && maxState <= 2,
+            s"$store: state exceeded the maxEntries bound: $maxState entries")
+        } finally { q.stop(); TestSpark.deleteRecursively(ckpt) }
 
-      // ample capacity (never evicts): LRU rendering ≡ the exact
-      // ttl-chain semantics per content key
-      val mixed = Seq(ev(10, base), ev(11, base + 1000),
-        ev(12, base + 30000), ev(13, base + 700000),
-        ev(14, base + 2000, user = 2), ev(15, base + 3000, user = 2))
-      val in2 = MemoryStream[Ev]
-      val q2 = DedupStream.dedupBoundedLru(in2.toDS(),
-          ttlMs = 60000L, maxEntries = 64, shards = 2)
-        .writeStream.format("memory").queryName("lru_ample")
-        .outputMode(OutputMode.Append).start()
-      try {
-        in2.addData(mixed.take(3): _*); q2.processAllAvailable()
-        in2.addData(mixed.drop(3): _*); q2.processAllAvailable()
-        val got2 = spark.table("lru_ample").collect().map(_.getLong(0)).toSet
-        val expect2 = mixed.groupBy(DedupStream.contentKeyOf).values
-          .flatMap(g => DedupStream.chainPrimes(
-            g.sortBy(e => (e.ts.getTime, e.event_id)), 60000L, None)._1.map(_.event_id))
-          .toSet
-        assert(got2 === expect2)
-      } finally q2.stop()
-    }
+        // ample capacity (never evicts): the LRU cache ≡ the exact
+        // ttl-chain semantics per content key
+        val mixed = Seq(ev(10, base), ev(11, base + 1000),
+          ev(12, base + 30000), ev(13, base + 700000),
+          ev(14, base + 2000, user = 2), ev(15, base + 3000, user = 2))
+        val in2 = MemoryStream[Ev]
+        val q2 = DedupStream.dedupBounded(in2.toDS(),
+            ttlMs = 60000L, maxEntries = 64, shards = 2)
+          .writeStream.format("memory").queryName(s"lru_ample_$store")
+          .outputMode(OutputMode.Append).start()
+        try {
+          in2.addData(mixed.take(3): _*); q2.processAllAvailable()
+          in2.addData(mixed.drop(3): _*); q2.processAllAvailable()
+          val got2 = spark.table(s"lru_ample_$store").collect().map(_.getLong(0)).toSet
+          val expect2 = mixed.groupBy(DedupStream.contentKeyOf).values
+            .flatMap(g => DedupStream.chainPrimes(
+              g.sortBy(e => (e.ts.getTime, e.event_id)), 60000L, None)._1.map(_.event_id))
+            .toSet
+          assert(got2 === expect2, store)
+        } finally q2.stop()
+      }
   }
 
   test("streaming session windows merge within gap and close on watermark") {
@@ -1020,10 +1059,22 @@ class StreamingSpec extends SparkSpec {
         spark.read.parquet(s"$tmp/out").select("event_id").as[Long].collect().sorted.toSeq
       } finally TestSpark.deleteRecursively(java.nio.file.Paths.get(tmp))
     }
+    // two entries, one segment: the lruDedupStep replay of the triggers
+    // in (ts, event_id) order. 3 evicts 1 (least recently accessed), 5
+    // evicts 2, and 7 finds the entries of 5 and 3 expired
+    val lru = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
+    var seq = 0L
+    val lruPrimes = triggers.flatMap(_.sortBy(e => (e.ts.getTime, e.event_id))).filter { e =>
+      seq += 1
+      DedupStream.lruDedupStep(lru, DedupStream.contentKeyOf(e), e.ts.getTime, ttl, 2, seq)
+    }.map(_.event_id).sorted
+    assert(lruPrimes === Seq(1L, 2L, 3L, 5L, 7L))
     val ops = Seq[(String, Dataset[Ev] => Dataset[Ev], Seq[Long])](
       ("dedupTtlChain", DedupStream.dedupTtlChain(_, ttl), Seq(1L, 2L, 3L, 7L)),
       ("dedupBounded", DedupStream.dedupBounded(_, ttl, maxEntries = 1),
-        Seq(1L, 2L, 3L, 5L, 7L, 8L)))
+        Seq(1L, 2L, 3L, 5L, 7L, 8L)),
+      ("dedupBounded(2 entries)", DedupStream.dedupBounded(_, ttl, maxEntries = 2, shards = 1),
+        lruPrimes))
     for ((store, confs) <- Seq("default" -> Seq.empty, "RocksDB" -> Seq(rocksDbStore)))
       withConf(confs: _*) {
         ops.foreach { case (name, op, expect) =>

@@ -33,6 +33,15 @@ if [ -n "$heaps" ]; then
   echo "$heaps" >&2
   exit 1
 fi
+# One state protocol for the streaming dedup walks: DedupStream's only
+# flatMapGroupsWithState call is the one inside walkKeyed, so a second
+# rendering of a walk (or of the bounded cache) cannot grow back.
+walks=$(grep -c '\.flatMapGroupsWithState' src/main/scala/graft/streaming/DedupStream.scala || true)
+if [ "$walks" -gt 1 ]; then
+  echo "[precommit] $walks .flatMapGroupsWithState calls in DedupStream.scala;" \
+    "every dedup walk goes through walkKeyed" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile
 sbt -batch 'runMain graft.Scratch'
 echo "[precommit] OK"
