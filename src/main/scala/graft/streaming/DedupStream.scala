@@ -23,8 +23,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    Deduplicator.java:51); a prime older than ttl readmits. State is
   *    bounded by keys per ttl window, not total keys. [[dedupBounded]]
   *    keeps one [[LruShard]] per cache segment — the reference's
-  *    size-bounded Guava cache, least-recently-accessed eviction, on
-  *    either state store.
+  *    size-bounded Guava cache: one access-ordered map per segment,
+  *    walked by [[LruWalker]], evicting its least-recently-accessed
+  *    head, on either state store.
   *  - Typed handles on transformWithState: [[heavyHitters]] (MapState
   *    per shard), [[compactLatest]] (ValueState + event-time timer per
   *    key).
@@ -416,56 +417,67 @@ object DedupStream {
   }
 
   /** One segment of the size-bounded cache: its entries (content key
-    * → (primeTsMs, lastAccessSeq)) and its access clock.
+    * → primeTsMs), least recently accessed first.
     */
-  case class LruShard(entries: Map[String, (Long, Long)], clock: Long)
+  case class LruShard(entries: Seq[(String, Long)])
 
-  /** Deterministic 64-bit content-key hash: the key's cache segment. */
-  private def contentKeyHash(e: Ev): Long = {
-    val s = contentKeyOf(e)
-    var h = 1125899906842597L
-    var i = 0
-    while (i < s.length) { h = 31 * h + s.charAt(i); i += 1 }
-    h
-  }
+  /** A content key's cache segment out of `segments`. */
+  private[graft] def segmentOf(contentKey: String, segments: Int): Int =
+    math.floorMod(scala.util.hashing.MurmurHash3.stringHash(contentKey), segments)
 
-  /** One LRU-cache arrival against entry map `m` (content key →
-    * (primeTsMs, lastAccessSeq)) — THE definition of Guava
-    * `maximumSize` + `expireAfterWrite` cache semantics
-    * (Deduplicator.java:37-40). [[dedupBounded]] folds every
-    * micro-batch slice through it and the specs replay it in memory,
-    * so the operator cannot drift from its test. Returns true for a
-    * prime. Semantics, each the Guava behavior the reference observes:
-    *  - present within ttl → DUPLICATE; the access refreshes
-    *    RECENCY (getIfPresent moves the entry in the access queue)
-    *    but never the write time (expireAfterWrite; cache.put only
-    *    on miss, Deduplicator.java:51);
+  /** THE definition of Guava `maximumSize` + `expireAfterWrite` cache
+    * semantics (Deduplicator.java:37-40), as a walker over one cache
+    * segment's arrivals, resumed from its stored entries. One
+    * access-ordered map (content key → primeTsMs) keeps the segment in
+    * Guava's access-queue order, least recently accessed at the head.
+    * `admit` returns true for a prime:
+    *  - present within ttl → DUPLICATE; the read refreshes RECENCY
+    *    (getIfPresent moves the entry in the access queue) but never
+    *    the write time (expireAfterWrite; cache.put only on miss,
+    *    Deduplicator.java:51);
     *  - present but older than ttl → expired-on-read: re-admitted
     *    as a PRIME (new write time);
     *  - absent → PRIME, inserted; over `cap`, expired entries are
-    *    dropped first (Guava's maintenance sweep), then the
-    *    least-recently-ACCESSED entry is evicted.
+    *    dropped first (Guava's maintenance sweep), then the head is
+    *    evicted. `oldest` bounds the primes from below, so a sweep
+    *    that could drop nothing is skipped, for any arrival order.
+    * [[dedupBounded]] and the specs' replays drive this one object, so
+    * the operator cannot drift from its test.
     */
-  def lruDedupStep(m: scala.collection.mutable.HashMap[String, (Long, Long)],
-                   key: String, tsMs: Long, ttlMs: Long, cap: Int, seq: Long): Boolean =
-    m.get(key) match {
-      case Some((p, _)) if tsMs - p <= ttlMs =>
-        m(key) = (p, seq) // recency refresh only
-        false
-      case _ =>
-        m(key) = (tsMs, seq)
+  final class LruWalker(ttlMs: Long, cap: Int, initialEntries: Seq[(String, Long)]) {
+    import scala.jdk.CollectionConverters._
+    private val m = new java.util.LinkedHashMap[String, java.lang.Long](16, 0.75f, true)
+    private var oldest = Long.MaxValue
+    initialEntries.foreach { case (k, p) => m.put(k, p); oldest = math.min(oldest, p) }
+
+    def admit(key: String, tsMs: Long): Boolean = {
+      val p = m.get(key)
+      if (p != null && tsMs - p <= ttlMs) false // duplicate: write time NOT refreshed
+      else {
+        m.put(key, tsMs)
+        oldest = math.min(oldest, tsMs)
         if (m.size > cap) {
-          val expired = m.iterator
-            .collect { case (k2, (p2, _)) if k2 != key && tsMs - p2 > ttlMs => k2 }
-            .toSeq
-          m --= expired
-          while (m.size > cap) {
-            val (lk, _) = m.minBy { case (_, (_, s)) => s }
-            m.remove(lk)
+          if (tsMs - oldest > ttlMs) {
+            oldest = tsMs
+            val it = m.entrySet.iterator
+            while (it.hasNext) {
+              val en = it.next()
+              val p2 = en.getValue.longValue
+              if (en.getKey != key && tsMs - p2 > ttlMs) it.remove()
+              else oldest = math.min(oldest, p2)
+            }
           }
+          val lru = m.keySet.iterator
+          while (m.size > cap) { lru.next(); lru.remove() }
         }
         true
+      }
     }
+
+    /** Content key → primeTsMs, least recently accessed first. */
+    def entries: Seq[(String, Long)] =
+      m.asScala.iterator.map { case (k, p) => (k, p.longValue) }.toVector
+  }
 
   /** SIZE-BOUNDED streaming TTL dedup — the reference cache's
     * `maximumSize(250000)` on top of its TTL (Deduplicator.java:37-40),
@@ -476,13 +488,13 @@ object DedupStream {
     * with its own access queue), so the shape here is the reference
     * cache's own: content keys hash into `shards` segments (the
     * concurrencyLevel analog), each one [[walkKeyed]] state value
-    * ([[LruShard]]) with capacity ceil(maxEntries / shards), every
-    * micro-batch slice folded through [[lruDedupStep]] in (ts ms,
-    * event_id) order. Like Guava, a skewed segment can evict before
-    * the global count reaches maxEntries, never after. The shard
-    * count is clamped to maxEntries, so state holds at most
-    * maxEntries entries rounded up to a multiple of the segment count,
-    * at any key churn.
+    * ([[LruShard]], its access-ordered entries) with capacity
+    * ceil(maxEntries / shards), every micro-batch slice walked by an
+    * [[LruWalker]] in (ts ms, event_id) order. Like Guava, a skewed
+    * segment can evict before the global count reaches maxEntries,
+    * never after. The shard count is clamped to maxEntries, so state
+    * holds at most maxEntries entries rounded up to a multiple of the
+    * segment count, at any key churn.
     *
     * A segment expires at its newest prime + ttl: once the watermark
     * passes that, every entry is expired for every later row, so
@@ -497,16 +509,12 @@ object DedupStream {
     import events.sparkSession.implicits._
     val segments = math.min(shards, maxEntries)
     val cap = (maxEntries + segments - 1) / segments
-    walkKeyed[Long, LruShard, Ev](events, watermark,
-        e => math.floorMod(contentKeyHash(e), segments.toLong)) { (batch, prior) =>
-      val m = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-      var seq = 0L
-      prior.foreach { s => m ++= s.entries; seq = s.clock }
-      val out = batch.filter { e =>
-        seq += 1
-        lruDedupStep(m, contentKeyOf(e), e.ts.getTime, ttlMs, cap, seq)
-      }
-      (out, m.valuesIterator.map(_._1).maxOption.map(p => (LruShard(m.toMap, seq), p + ttlMs)))
+    walkKeyed[Int, LruShard, Ev](events, watermark,
+        e => segmentOf(contentKeyOf(e), segments)) { (batch, prior) =>
+      val w = new LruWalker(ttlMs, cap, prior.fold(Seq.empty[(String, Long)])(_.entries))
+      val out = batch.filter(e => w.admit(contentKeyOf(e), e.ts.getTime))
+      val kept = w.entries
+      (out, kept.map(_._2).maxOption.map(p => (LruShard(kept), p + ttlMs)))
     }
   }
 

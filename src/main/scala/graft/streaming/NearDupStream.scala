@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.NearDup
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -42,8 +42,8 @@ object NearDupStream {
     */
   case class CandidatePair(a_id: Long, b_id: Long, hamming: Long)
 
-  /** Fingerprints already seen in one bucket (capped). */
-  case class BucketState(members: List[(Long, Long)])
+  /** Members already seen in one bucket (capped). */
+  case class Bucket[M](members: List[M])
 
   /** One banded minhash arrival (band, bucket hash, doc). */
   case class BandedSig(band: Int, bh: Long, doc_id: Long)
@@ -55,8 +55,28 @@ object NearDupStream {
     */
   case class LshCandidate(a_id: Long, b_id: Long)
 
-  /** Doc ids already seen in one LSH bucket (capped). */
-  case class LshBucketState(members: List[Long])
+  /** The one capped-bucket walk of both candidate streams: group
+    * `rows` by bucket `key`; each arrival is paired by `pair` against
+    * the bucket's members — earlier micro-batches from state, earlier
+    * rows of this batch from the group iterator — and then joins them
+    * as `member` while the bucket holds fewer than `maxBucket`.
+    */
+  private def bucketPairs[R, K: Encoder, M, O: Encoder](rows: Dataset[R], key: R => K,
+      maxBucket: Int)(member: R => M)(pair: (M, R) => Option[O])(
+      implicit bucketEnc: Encoder[Bucket[M]]): Dataset[O] =
+    rows
+      .groupByKey(key)
+      .flatMapGroupsWithState[Bucket[M], O](OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: K, batch: Iterator[R], state: GroupState[Bucket[M]]) =>
+          var members = state.getOption.fold(List.empty[M])(_.members)
+          val out = Seq.newBuilder[O]
+          batch.foreach { r =>
+            members.foreach(m => out ++= pair(m, r))
+            if (members.size < maxBucket) members = member(r) :: members
+          }
+          state.update(Bucket(members))
+          out.result().iterator
+      }
 
   /** Streaming MinHash-LSH candidate pairs over a (doc_id, sig)
     * stream — the minhash twin of [[simhashCandidates]], completing
@@ -76,59 +96,30 @@ object NearDupStream {
   def minhashCandidates(docs: DataFrame,
                         maxBucket: Int = 64): Dataset[LshCandidate] = {
     import docs.sparkSession.implicits._
-    NearDup.minhashBandKeys(docs)
+    val banded = NearDup.minhashBandKeys(docs)
       .select(col("band"), col("bh"), col("doc_id"))
       .as[BandedSig]
-      .groupByKey(r => (r.band, r.bh))
-      .flatMapGroupsWithState[LshBucketState, LshCandidate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, Long), rows: Iterator[BandedSig], state: GroupState[LshBucketState]) =>
-          var members = state.getOption.map(_.members).getOrElse(Nil)
-          val out = Seq.newBuilder[LshCandidate]
-          rows.foreach { r =>
-            members.foreach { id =>
-              if (id != r.doc_id)
-                out += LshCandidate(math.min(id, r.doc_id), math.max(id, r.doc_id))
-            }
-            if (members.size < maxBucket)
-              members = r.doc_id :: members
-          }
-          state.update(LshBucketState(members))
-          out.result().iterator
-      }
+    bucketPairs(banded, (r: BandedSig) => (r.band, r.bh), maxBucket)(_.doc_id) { (id, r) =>
+      Option.when(id != r.doc_id)(LshCandidate(math.min(id, r.doc_id), math.max(id, r.doc_id)))
+    }
   }
 
   /** Streaming candidate pairs over a (doc_id, simhash) stream. */
   def simhashCandidates(docs: DataFrame, maxHamming: Int = 3,
                         maxBucket: Int = 64): Dataset[CandidatePair] = {
     import docs.sparkSession.implicits._
-    docs
+    val banded = docs
       .select(col("doc_id"), col("simhash"),
         explode(NearDup.simhashBandArray(col("simhash"))).as("bb"))
       .select(col("bb.band").as("band"), col("bb.block").as("block"),
         col("doc_id"), col("simhash"))
       .as[BandedDoc]
-      .groupByKey(r => (r.band, r.block))
-      .flatMapGroupsWithState[BucketState, CandidatePair](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, Long), rows: Iterator[BandedDoc], state: GroupState[BucketState]) =>
-          var members = state.getOption.map(_.members).getOrElse(Nil)
-          val out = Seq.newBuilder[CandidatePair]
-          rows.foreach { r =>
-            members.foreach { case (id, fp) =>
-              if (id != r.doc_id) {
-                val h = java.lang.Long.bitCount(fp ^ r.simhash).toLong
-                if (h <= maxHamming)
-                  out += CandidatePair(math.min(id, r.doc_id),
-                    math.max(id, r.doc_id), h)
-              }
-            }
-            if (members.size < maxBucket)
-              members = (r.doc_id, r.simhash) :: members
-          }
-          state.update(BucketState(members))
-          out.result().iterator
-      }
+    bucketPairs(banded, (r: BandedDoc) => (r.band, r.block), maxBucket)(
+        r => (r.doc_id, r.simhash)) { case ((id, fp), r) =>
+      val h = java.lang.Long.bitCount(fp ^ r.simhash).toLong
+      Option.when(id != r.doc_id && h <= maxHamming)(
+        CandidatePair(math.min(id, r.doc_id), math.max(id, r.doc_id), h))
+    }
   }
 
   /** The streaming PRODUCTION N+1 near-dup ingest loop — the

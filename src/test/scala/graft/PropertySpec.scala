@@ -80,29 +80,91 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("lruDedupStep invariants: size <= cap, prime iff absent or expired, " +
-    "a duplicate keeps its write time") {
+  test("LruWalker invariants: size <= cap, prime iff absent or expired, " +
+    "a duplicate keeps its write time, the arrival is the most recent entry") {
     // its own generator, so the shared one's draws for later tests stay put
     val r = new scala.util.Random(7)
     for (_ <- 1 to 50) {
       val cap = 1 + r.nextInt(6)
       val ttl = 1000L + r.nextInt(5000)
       val keys = cap * 3
-      val m = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
+      val w = new DedupStream.LruWalker(ttl, cap, Nil)
       var t = 1700000000000L
-      // arrivals in (ts, seq) order, the order the operator walks, ties included
-      (1L to 100L + r.nextInt(400)).foreach { seq =>
+      // arrivals in ts order, the order the operator walks, ties included
+      (1L to 100L + r.nextInt(400)).foreach { _ =>
         t += r.nextInt(500)
         val key = s"k${math.min(r.nextInt(keys), r.nextInt(keys))}"
-        val before = m.get(key)
-        val prime = DedupStream.lruDedupStep(m, key, t, ttl, cap, seq)
-        assert(prime === before.forall { case (p, _) => t - p > ttl },
+        val before = w.entries.toMap.get(key)
+        val prime = w.admit(key, t)
+        val after = w.entries
+        assert(prime === before.forall(p => t - p > ttl),
           s"$key at $t: prime=$prime with entry $before (ttl $ttl)")
-        assert(m.size <= cap, s"${m.size} entries over cap $cap")
-        if (prime) assert(m(key) === ((t, seq)))
-        else assert(m(key) === ((before.get._1, seq)), s"duplicate $key moved its write time")
+        assert(after.size <= cap, s"${after.size} entries over cap $cap")
+        if (prime) assert(after.last === ((key, t)))
+        else assert(after.last === ((key, before.get)), s"duplicate $key moved its write time")
       }
     }
+  }
+
+  /** The access-clock LRU step the [[DedupStream.LruWalker]] replaced
+    * (entries: content key → (primeTsMs, lastAccessSeq)), kept verbatim
+    * as the walker's differential oracle.
+    */
+  private def lruDedupStep(m: scala.collection.mutable.HashMap[String, (Long, Long)],
+                           key: String, tsMs: Long, ttlMs: Long, cap: Int, seq: Long): Boolean =
+    m.get(key) match {
+      case Some((p, _)) if tsMs - p <= ttlMs =>
+        m(key) = (p, seq) // recency refresh only
+        false
+      case _ =>
+        m(key) = (tsMs, seq)
+        if (m.size > cap) {
+          val expired = m.iterator
+            .collect { case (k2, (p2, _)) if k2 != key && tsMs - p2 > ttlMs => k2 }
+            .toSeq
+          m --= expired
+          while (m.size > cap) {
+            val (lk, _) = m.minBy { case (_, (_, s)) => s }
+            m.remove(lk)
+          }
+        }
+        true
+    }
+
+  test("LruWalker agrees with the access-clock LRU step on every arrival, " +
+    "across out-of-order timestamps and reloads from its entries") {
+    val r = new scala.util.Random(11)
+    for (_ <- 1 to 300) {
+      val cap = 1 + r.nextInt(6)
+      val ttl = 1000L + r.nextInt(5000)
+      val keys = cap * 3
+      val oracle = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
+      var w = new DedupStream.LruWalker(ttl, cap, Nil)
+      var t = 1700000000000L
+      (1L to 100L + r.nextInt(400)).foreach { seq =>
+        // a trigger boundary: the segment is stored as its entries and reloaded
+        if (r.nextInt(8) == 0) w = new DedupStream.LruWalker(ttl, cap, w.entries)
+        // mostly forward, with steps back past the ttl now and then
+        t += (if (r.nextInt(10) == 0) -r.nextInt(2 * ttl.toInt) else r.nextInt(800) - 200)
+        val key = s"k${math.min(r.nextInt(keys), r.nextInt(keys))}"
+        val prime = w.admit(key, t)
+        assert(prime === lruDedupStep(oracle, key, t, ttl, cap, seq),
+          s"$key at $t (arrival $seq, cap $cap, ttl $ttl)")
+        assert(w.entries === oracle.toSeq.sortBy(_._2._2).map { case (k, (p, _)) => (k, p) },
+          s"entries after arrival $seq (cap $cap, ttl $ttl)")
+      }
+    }
+  }
+
+  test("cache segments: 300k content keys spread within 1.1x the mean over 32 segments") {
+    val counts = new Array[Int](32)
+    (0 until 300000).foreach { i =>
+      val key = DedupStream.contentKeyOf(
+        Ev(i.toLong, new java.sql.Timestamp(0L), i.toLong, "x", 1.0, "{}"))
+      counts(DedupStream.segmentOf(key, 32)) += 1
+    }
+    val skew = counts.max / (300000.0 / 32)
+    assert(skew <= 1.1, s"fullest segment holds ${counts.max} keys, ${skew}x the mean")
   }
 
   test("winnowedFingerprints: every fingerprint is a real window hash; count bounded") {

@@ -2,7 +2,7 @@ package graft
 
 import graft.streaming.DedupStream
 import graft.streaming.DedupStream.Ev
-import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, lit, map, timestamp_millis}
 import org.apache.spark.sql.streaming.OutputMode
@@ -206,6 +206,54 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === expect && expect.nonEmpty)
     } finally q.stop()
+  }
+
+  test("simhash and minhash-LSH candidate streams restart from their checkpoint after any " +
+    "trigger with the uninterrupted run's pairs, on both state stores") {
+    import graft.operators.NearDup
+    import graft.sinks.GraftSink
+    import graft.streaming.NearDupStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def thirds[T](xs: Seq[T]): Seq[Seq[T]] = xs.grouped((xs.size + 2) / 3).toSeq
+    val fps = thirds(NearDup.simhashFingerprints(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq)
+    val sigs = thirds(NearDup.minhashLshSignatures(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq)
+    // the triggers through a checkpointed file sink; the query stops
+    // after trigger `stopAfter`, the next trigger's rows arrive while it
+    // is down, and it restarts on the same checkpoint
+    def run[T: Encoder](triggers: Seq[Seq[T]], op: DataFrame => DataFrame,
+        stopAfter: Int): Set[Row] = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft_cand_restart_").toString
+      val input = MemoryStream[T]
+      def start() = GraftSink.startFileSink(op(input.toDF()), s"$tmp/out", s"$tmp/ckpt")
+      try {
+        var q = start()
+        try triggers.zipWithIndex.foreach { case (rows, t) =>
+          input.addData(rows: _*)
+          if (t == stopAfter) q = start()
+          q.processAllAvailable()
+          if (t + 1 == stopAfter) q.stop()
+        } finally q.stop()
+        spark.read.parquet(s"$tmp/out").collect().toSet
+      } finally TestSpark.deleteRecursively(java.nio.file.Paths.get(tmp))
+    }
+    def check[T: Encoder](name: String, triggers: Seq[Seq[T]], op: DataFrame => DataFrame): Unit =
+      for ((store, confs) <- Seq("default" -> Seq.empty, "RocksDB" -> Seq(rocksDbStore)))
+        withConf(confs: _*) {
+          val uninterrupted = run(triggers, op, stopAfter = triggers.size)
+          assert(uninterrupted.nonEmpty, s"$name, $store store")
+          (1 until triggers.size).foreach { i =>
+            assert(run(triggers, op, stopAfter = i) === uninterrupted,
+              s"$name, $store store, stopped after trigger $i")
+          }
+        }
+    assert(fps.size === 3 && sigs.size === 3)
+    check("simhashCandidates", fps,
+      df => NearDupStream.simhashCandidates(df.toDF("doc_id", "simhash")).toDF())
+    check("minhashCandidates", sigs,
+      df => NearDupStream.minhashCandidates(df.toDF("doc_id", "sig")).toDF())
   }
 
   test("multi-topic merge then dedup equals the batch union replay across uneven splits " +
@@ -713,16 +761,12 @@ class StreamingSpec extends SparkSpec {
           input.addData(batch1: _*); q.processAllAvailable()
           input.addData(batch2: _*); q.processAllAvailable()
           val got = spark.table(s"lru_out_$store").collect().map(_.getLong(0)).toSet
-          // the shared-step in-memory replay over the same arrival order
-          // — the spec and the operator drive ONE lruDedupStep
-          val m = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-          var seq = 0L
+          // the shared-walker in-memory replay over the same arrival order
+          // — the spec and the operator drive ONE LruWalker
+          val w = new DedupStream.LruWalker(600000L, 2, Nil)
           val expect = (batch1 ++ batch2).sortBy(e => (e.ts.getTime, e.event_id))
-            .flatMap { e =>
-              seq += 1
-              if (DedupStream.lruDedupStep(m, DedupStream.contentKeyOf(e),
-                  e.ts.getTime, 600000L, 2, seq)) Some(e.event_id) else None
-            }.toSet
+            .filter(e => w.admit(DedupStream.contentKeyOf(e), e.ts.getTime))
+            .map(_.event_id).toSet
           assert(got === expect, store)
           // the hand-computed truth: a hash-slot cache could not
           // produce this set (B evicted by RECENCY, A kept through it)
@@ -1059,15 +1103,13 @@ class StreamingSpec extends SparkSpec {
         spark.read.parquet(s"$tmp/out").select("event_id").as[Long].collect().sorted.toSeq
       } finally TestSpark.deleteRecursively(java.nio.file.Paths.get(tmp))
     }
-    // two entries, one segment: the lruDedupStep replay of the triggers
+    // two entries, one segment: the LruWalker replay of the triggers
     // in (ts, event_id) order. 3 evicts 1 (least recently accessed), 5
     // evicts 2, and 7 finds the entries of 5 and 3 expired
-    val lru = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-    var seq = 0L
-    val lruPrimes = triggers.flatMap(_.sortBy(e => (e.ts.getTime, e.event_id))).filter { e =>
-      seq += 1
-      DedupStream.lruDedupStep(lru, DedupStream.contentKeyOf(e), e.ts.getTime, ttl, 2, seq)
-    }.map(_.event_id).sorted
+    val lru = new DedupStream.LruWalker(ttl, 2, Nil)
+    val lruPrimes = triggers.flatMap(_.sortBy(e => (e.ts.getTime, e.event_id)))
+      .filter(e => lru.admit(DedupStream.contentKeyOf(e), e.ts.getTime))
+      .map(_.event_id).sorted
     assert(lruPrimes === Seq(1L, 2L, 3L, 5L, 7L))
     val ops = Seq[(String, Dataset[Ev] => Dataset[Ev], Seq[Long])](
       ("dedupTtlChain", DedupStream.dedupTtlChain(_, ttl), Seq(1L, 2L, 3L, 7L)),

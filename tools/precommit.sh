@@ -42,6 +42,15 @@ if [ "$walks" -gt 1 ]; then
     "every dedup walk goes through walkKeyed" >&2
   exit 1
 fi
+# One capped-bucket walk for the near-dup candidate streams: the simhash
+# and minhash-LSH streams share NearDupStream's bucketPairs, so a second
+# copy of the bucket body cannot grow back.
+buckets=$(grep -c '\.flatMapGroupsWithState' src/main/scala/graft/streaming/NearDupStream.scala || true)
+if [ "$buckets" -gt 1 ]; then
+  echo "[precommit] $buckets .flatMapGroupsWithState calls in NearDupStream.scala;" \
+    "every candidate stream goes through bucketPairs" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile
 sbt -batch 'runMain graft.Scratch'
 echo "[precommit] OK"
