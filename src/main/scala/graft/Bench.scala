@@ -43,10 +43,6 @@ object Bench {
       // aggregate map-combinable; state is per-key bounded (64-int
       // simhash vector). Execution knob only — results unchanged.
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4194304")
-    // presentation sorts detach (lazy localCheckpoint): the range
-    // sampling pass reads materialized blocks instead of re-executing
-    // the query DAG — execution knob only (SparkEntry.presentBy).
-    spark.conf.set("graft.present.detach", "true")
 
     // Data-movement accounting: task-level shuffle/spill/input bytes
     // accumulated via a SparkListener, snapshotted per query — wall

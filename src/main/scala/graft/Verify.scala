@@ -6,10 +6,6 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).toSet)
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    // presentation sorts detach (lazy localCheckpoint) so the range
-    // sampling pass reads materialized blocks instead of re-executing
-    // each query's DAG — execution knob only, hashes identical
-    spark.conf.set("graft.present.detach", "true")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -2088,10 +2088,7 @@ object Ann {
     require(k >= 1, s"embInitFarthest needs k >= 1, got $k")
     def handoff(df: DataFrame, r: Int): DataFrame = checkpointDir match {
       case None => df
-      case Some(d) =>
-        val path = s"$d/round_$r"
-        df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
+      case Some(d) => Tables.handoff(df, s"$d/round_$r")
     }
     val x = Tables.embeddings(spark, dir)
       .select(col("vec_id"), graft.plans.VecFloorScale(col("embedding"), 1000).as("xs"))
@@ -2315,13 +2312,9 @@ object Ann {
     */
   def embGraphRankOn(rawEdges: DataFrame, k: Int = 3, iters: Int = 2,
                      checkpointDir: Option[String] = None): DataFrame = {
-    val spark = rawEdges.sparkSession
     val edges = checkpointDir match {
       case None => rawEdges.localCheckpoint(eager = false)
-      case Some(d) =>
-        val path = s"$d/knn_edges"
-        rawEdges.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
+      case Some(d) => Tables.handoff(rawEdges, s"$d/knn_edges")
     }
     // exact out-degree per node: nodes = distinct src, so od >= 1 by
     // construction (no dangling division); node-sized, consumed every

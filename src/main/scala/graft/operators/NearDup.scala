@@ -438,10 +438,7 @@ object NearDup {
       : (DataFrame, DataFrame, DataFrame) = {
     def mat(df: DataFrame, tag: String): DataFrame = checkpointDir match {
       case None => df.localCheckpoint()
-      case Some(d) =>
-        val path = s"$d/$tag"
-        df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
+      case Some(d) => Tables.handoff(df, s"$d/$tag")
     }
     val jac = mat(jaccardPairs(spark, dir, threshold)
       .select("a_id", "b_id"), "jaccard_pairs")
@@ -1266,10 +1263,7 @@ object NearDup {
         coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("fp"))
       val out = checkpointDir match {
         case None => o.localCheckpoint()
-        case Some(d) =>
-          val path = s"$d/$tag"
-          o.write.mode("overwrite").parquet(path)
-          df.sparkSession.read.parquet(path)
+        case Some(d) => Tables.handoff(o, s"$d/$tag")
       }
       val m = obs.get
       (out, m("n").asInstanceOf[Long], m("fp").asInstanceOf[Long])

@@ -696,9 +696,7 @@ object TextAnalysis {
           .select(expr(bpeReplaceExpr).as("w"))
         checkpointDir match {
           case Some(d) if rnd % checkpointEvery == 0 =>
-            val path = s"$d/round_$rnd"
-            words.write.mode("overwrite").parquet(path)
-            words = spark.read.parquet(path)
+            words = Tables.handoff(words, s"$d/round_$rnd")
           case _ =>
         }
       }

@@ -105,8 +105,8 @@ object HfpSource {
   def contentHash128: Column =
     graft.plans.Murmur3_128(canonicalContentKey.cast("binary"), 42)
 
-  /** Per-schema canonicalizers for multi-schema feeds — the analog of
-    * the reference's payload dispatch (Deduplicator.parsePayload,
+  /** Schema tags whose payloads are canonicalized — the analog of the
+    * reference's payload dispatch (Deduplicator.parsePayload,
     * Deduplicator.java:71-106): a message carries a schema tag; a
     * RECOGNIZED schema is canonicalized (protobuf re-serialize there,
     * sorted-key JSON re-serialize here) so byte-order variance can't
@@ -115,22 +115,19 @@ object HfpSource {
     * `mappedData.orElse(sourceData)`. (The reference's schema filter
     * also admits PassengerCount but its parser throws for it, so
     * PassengerCount messages observably fall back to raw bytes too —
-    * modeled here by simply not listing it.) Ordered Seq, not Map:
-    * the dispatch must compile to one deterministic CASE WHEN.
+    * modeled here by simply not listing it.)
     */
-  val canonicalizers: Seq[(String, Column => Column)] = Seq(
-    "mqtt-raw" -> (c => graft.plans.CanonicalJson(c)),
-    "hfp" -> (c => graft.plans.CanonicalJson(c)))
+  val canonicalTags: Seq[String] = Seq("mqtt-raw", "hfp")
 
-  /** Schema-dispatched canonical content: CASE WHEN over the schema
-    * tag, per-row map work (no shuffle, codegen'd children). The
+  /** Schema-dispatched canonical content: one CASE WHEN over the schema
+    * tag, per-row map work (no shuffle, codegen'd children). A null tag
+    * fails the IN test and passes through like an unknown one. The
     * CanonicalJson kernel already passes malformed input through
     * verbatim, so the parse-failure fallback needs no extra branch.
     */
   def canonicalPayload(schema: Column, payload: Column): Column =
-    canonicalizers.foldRight(payload) { case ((tag, f), els) =>
-      when(schema === lit(tag), f(payload)).otherwise(els)
-    }
+    when(schema.isin(canonicalTags: _*), graft.plans.CanonicalJson(payload))
+      .otherwise(payload)
 
   /** Multi-schema feed frame → same frame plus the dedup content key
     * (`content_key`): one logical stream, several wire schemas, one

@@ -433,6 +433,25 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("loop handoff reads back with the written schema: no schema-inference job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_handoff_").toString
+    try {
+      val df = Seq((1L, "a", Seq(0.5f)), (2L, null, Seq.empty[Float])).toDF("id", "s", "v")
+      val writeJobs = jobsScheduledBy(df.write.mode("overwrite").parquet(s"$dir/plain"))
+      var back: org.apache.spark.sql.DataFrame = null
+      val handoffJobs = jobsScheduledBy { back = Tables.handoff(df, s"$dir/handoff") }
+      assert(handoffJobs === writeJobs, "the read-back must start no job of its own")
+      // the schema an inferring read of the same files would yield
+      assert(back.schema === spark.read.parquet(s"$dir/plain").schema)
+      assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
+      // a second handoff to the same path overwrites, never appends
+      assert(Tables.handoff(df.filter($"id" === 1L), s"$dir/handoff").count() === 1)
+    } finally {
+      TestSpark.deleteRecursively(java.nio.file.Paths.get(dir))
+    }
+  }
+
   test("PPJoin+ filters are exact: jaccard/containment == brute force on random corpora, salted included") {
     import spark.implicits._
     // synthetic corpora with real overlap structure: a few templates,

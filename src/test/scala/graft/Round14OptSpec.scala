@@ -29,30 +29,6 @@ class Round14OptSpec extends SparkSpec {
       s"$tag rows diverged: +${d1.take(5).mkString(";")} -${d2.take(5).mkString(";")}")
   }
 
-  /** Jobs `body` schedules, counted by a listener up to a marker job
-    * submitted after it: the listener bus delivers in order, so once
-    * the marker arrives every earlier job start has been counted.
-    */
-  private def jobsScheduledBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "jobs-marker"))
-          marker.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup("jobs-marker", "end of the counted jobs")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never arrived")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("beamSearchOn driver-frontier ≡ unrolled on the corpus (chain edges, single + multi entry)") {
     val e = Tables.embeddings(spark, sf)
     val nodes = nodesOf(e)

@@ -1070,11 +1070,33 @@ class StreamingSpec extends SparkSpec {
     assert(got === expect)
   }
 
+  /** `triggers` through `op` into a checkpointed file sink; returns the
+    * committed rows, sorted. The query stops after trigger `stopAfter`,
+    * the next trigger's rows arrive while it is down, and it restarts
+    * on the same checkpoint.
+    */
+  private def restartRun[T: Encoder](triggers: Seq[Seq[T]], stopAfter: Int)
+      (op: Dataset[T] => DataFrame): Seq[Row] = {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft_restart_").toString
+    val input = MemoryStream[T]
+    def start() =
+      graft.sinks.GraftSink.startFileSink(op(input.toDS()), s"$tmp/out", s"$tmp/ckpt")
+    try {
+      var q = start()
+      try triggers.zipWithIndex.foreach { case (rows, t) =>
+        input.addData(rows: _*)
+        if (t == stopAfter) q = start()
+        q.processAllAvailable()
+        if (t + 1 == stopAfter) q.stop()
+      } finally q.stop()
+      spark.read.parquet(s"$tmp/out").collect().toSeq.sortBy(_.toString)
+    } finally TestSpark.deleteRecursively(java.nio.file.Paths.get(tmp))
+  }
+
   test("ttl chain and bounded cache restart from their checkpoint after any trigger " +
     "with the uninterrupted run's output, on both state stores") {
-    import graft.sinks.GraftSink
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val base = 1700000000000L
     val ttl = 60000L
     val triggers = Seq(
@@ -1085,24 +1107,8 @@ class StreamingSpec extends SparkSpec {
       Seq(ev(6, base + 30000), // dup of 5 in the slot, of 1 in the chain
         ev(8, base + 40000, user = 3), // chain: dup of 3; one slot: evicted, readmitted
         ev(7, base + 90000, user = 2))) // 2's anchor is past the ttl: prime
-    // the triggers through a checkpointed file sink; the query stops
-    // after trigger `stopAfter`, the next trigger's rows arrive while it
-    // is down, and it restarts on the same checkpoint
-    def run(op: Dataset[Ev] => Dataset[Ev], stopAfter: Int): Seq[Long] = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_dedup_restart_").toString
-      val input = MemoryStream[Ev]
-      def start() = GraftSink.startFileSink(op(input.toDS()).toDF(), s"$tmp/out", s"$tmp/ckpt")
-      try {
-        var q = start()
-        try triggers.zipWithIndex.foreach { case (rows, t) =>
-          input.addData(rows: _*)
-          if (t == stopAfter) q = start()
-          q.processAllAvailable()
-          if (t + 1 == stopAfter) q.stop()
-        } finally q.stop()
-        spark.read.parquet(s"$tmp/out").select("event_id").as[Long].collect().sorted.toSeq
-      } finally TestSpark.deleteRecursively(java.nio.file.Paths.get(tmp))
-    }
+    def run(op: Dataset[Ev] => Dataset[Ev], stopAfter: Int): Seq[Long] =
+      restartRun(triggers, stopAfter)(op(_).toDF()).map(_.getAs[Long]("event_id")).sorted
     // two entries, one segment: the LruWalker replay of the triggers
     // in (ts, event_id) order. 3 evicts 1 (least recently accessed), 5
     // evicts 2, and 7 finds the entries of 5 and 3 expired
@@ -1128,5 +1134,56 @@ class StreamingSpec extends SparkSpec {
           }
         }
       }
+  }
+
+  test("heavy hitters and keep-latest compaction restart from their checkpoint after " +
+    "any trigger with the uninterrupted run's output (RocksDB store)") {
+    import spark.implicits._
+    // heavy hitters, two counters per shard: later triggers evict
+    val (k, shards) = (2, 2)
+    val words = Seq(Seq("a", "b", "a", "c"), Seq("d", "a", "e"), Seq("b", "b", "f"),
+      Seq("g", "a", "c", "c"))
+    // replay: each trigger folds a touched shard's rows in arrival
+    // order and emits that shard's whole summary at its next gen
+    val counters = Array.fill(shards)(scala.collection.mutable.HashMap.empty[String, (Long, Long)])
+    val gens = Array.fill(shards)(0L)
+    val hitters = words.flatMap { rows =>
+      rows.groupBy(w => math.floorMod(w.hashCode, shards)).toSeq.flatMap { case (sh, ws) =>
+        ws.foreach(DedupStream.spaceSavingStep(counters(sh), _, k))
+        gens(sh) += 1
+        counters(sh).toSeq.map { case (it, (c, e)) => Row(sh, gens(sh), it, c, e) }
+      }
+    }.sortBy(_.toString)
+    assert(hitters.exists(_.getLong(4) > 0), "no eviction: the spec would be vacuous")
+
+    // keep-latest, 60 s flush horizon, 10 s watermark delay
+    val base = 1700000000000L
+    def e(id: Long, tMs: Long, user: Long, typ: String) =
+      Ev(id, new java.sql.Timestamp(base + tMs), user, typ, id.toDouble, "{}")
+    val events = Seq(
+      Seq(e(1, 0, 1, "a"), e(2, 1000, 1, "b"), e(3, 2000, 2, "a")),
+      Seq(e(4, 5000, 1, "a"), e(5, 3000, 2, "a")), // both supersede
+      Seq(e(6, 72000, 3, "a")), // watermark 62 s: flushes (1, b)
+      Seq(e(7, 64000, 2, "a"), e(9, 76000, 3, "a")), // watermark 66 s: flushes (1, a)
+      // reopens (1, b); the far-future fence flushes every other key
+      Seq(e(8, 90000, 1, "b"), e(999, 86400000L, 99, "zz")))
+    val compacted = Seq((1L, "b", 2L, 1000L), (1L, "a", 4L, 5000L), (2L, "a", 7L, 64000L),
+      (3L, "a", 9L, 76000L), (1L, "b", 8L, 90000L))
+      .map { case (u, t, id, ms) => Row(u, t, id, base + ms, id.toDouble) }.sortBy(_.toString)
+
+    withConf(rocksDbStore) {
+      def check[T: Encoder](name: String, triggers: Seq[Seq[T]], expect: Seq[Row])
+          (op: Dataset[T] => DataFrame): Unit = {
+        val uninterrupted = restartRun(triggers, stopAfter = triggers.size)(op)
+        assert(uninterrupted === expect, name)
+        (1 until triggers.size).foreach { i =>
+          assert(restartRun(triggers, stopAfter = i)(op) === uninterrupted,
+            s"$name, stopped after trigger $i")
+        }
+      }
+      check("heavyHitters", words, hitters)(DedupStream.heavyHitters(_, k, shards).toDF())
+      check("compactLatest", events, compacted)(
+        DedupStream.compactLatest(_, flushMs = 60000L, watermark = "10 seconds").toDF())
+    }
   }
 }

@@ -51,6 +51,16 @@ if [ "$buckets" -gt 1 ]; then
     "every candidate stream goes through bucketPairs" >&2
   exit 1
 fi
+# One plan per query: every SparkEntry query is presented with a plain
+# orderBy, so a detach at the presentation edge (or a conf that switches
+# one on) cannot grow back.
+detach=$( { grep -nH 'localCheckpoint' src/main/scala/graft/SparkEntry.scala; \
+  grep -rn 'graft\.present' src/main/scala; } || true)
+if [ -n "$detach" ]; then
+  echo "[precommit] presentation detach; SparkEntry queries end in a plain orderBy:" >&2
+  echo "$detach" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile
 sbt -batch 'runMain graft.Scratch'
 echo "[precommit] OK"
