@@ -61,7 +61,8 @@ object Bench {
     // per-query slot reads -1 (never summed into total), and the
     // process exits nonzero — a broken query must not make the bench
     // look faster or the JSON look complete.
-    def execute(name: String): Double = {
+    def execute(name: String): Double = time(name, SparkEntry.queries(name))
+    def time(name: String, query: (SparkSession, String) => DataFrame): Double = {
       // Shuffle files of FINISHED queries are only deleted when the
       // ContextCleaner's weak refs get GC'd — with a large soak heap
       // the JVM can run an entire batch without a single full GC, so
@@ -73,7 +74,7 @@ object Bench {
       // retention policy.
       System.gc()
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
+      try query(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -112,16 +113,19 @@ object Bench {
     catch { case e: Throwable => System.err.println(s"[bench] warmup q1: ${e.getMessage}") }
 
     // Constant-plan probe: median of 3 timed runs of two stable
-    // scan-shaped queries (full-scan agg + pushed-filter agg). Their
+    // scan-shaped queries (full-scan agg + pushed-filter agg), run as
+    // the bare operators — not the presented SparkEntry entries — so
+    // a change at the presentation edge cannot move the probe. Their
     // plans never change across rounds, so the ratio probe_now /
     // probe_baseline is a box-speed normalizer — emitted in the JSON
     // so cross-box comparison of absolute seconds is mechanical
     // instead of estimated from overlapping query keys.
-    def median3(name: String): Double = {
-      val ts = Seq.fill(3)(execute(name)).filter(_ >= 0).sorted
+    def median3(name: String, query: (SparkSession, String) => DataFrame): Double = {
+      val ts = Seq.fill(3)(time(name, query)).filter(_ >= 0).sorted
       if (ts.isEmpty) -1.0 else ts(ts.size / 2)
     }
-    val probe = Seq("q1_agg", "q6_filter").map(n => n -> median3(n))
+    val probe = Seq("q1_agg" -> median3("q1_agg", operators.Relational.q1Agg),
+      "q6_filter" -> median3("q6_filter", operators.Relational.q6Filter))
     val probeJson = probe.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
 

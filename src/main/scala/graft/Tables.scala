@@ -41,15 +41,6 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "embeddings")
 
-  /** Loop handoff on the `checkpointDir` path: writes `df` to `path`
-    * (overwrite) and reads it back with the schema it was written
-    * with, so the read-back starts no schema-inference job.
-    */
-  def handoff(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.schema(df.schema).parquet(path)
-  }
-
   /** Exact row count of a parquet table from its file FOOTERS —
     * driver-only metadata, no Spark job (round-13). Model parameters
     * derived from a full-table count (clustersFor's auto-K) must be

@@ -1222,7 +1222,7 @@ object Ann {
     * round, Q the fixed query sample), so the per-round window /
     * anti-join / dedup-aggregate bookkeeping that cost 6–10
     * scheduled jobs and 2 bounded exchanges a round in the unrolled
-    * plan ([[beamSearchOnUnrolled]], kept as the equality anchor)
+    * plan (kept in test sources as Round14OptSpec's equality anchor)
     * moves to the driver: each round is exactly TWO map-only jobs —
     * (1) neighbor expansion, a broadcast semi-join of the ≤ Q·beam
     * frontier against the edge frame, and (2) scoring, a broadcast
@@ -1340,53 +1340,6 @@ object Ann {
     }
     spark.createDataFrame(outRows.asJava, outSchema)
       .select(col("q_id"), col("rnk"), col("n_id"), round(col("sim"), 6).as("sim"))
-  }
-
-  /** The pre-round-14 fully-plan-side rendering of [[beamSearchOn]]
-    * — every round a window + edge join + dedup aggregate over lazy
-    * checkpoints. Kept as the equality anchor the driver-frontier
-    * spec pins against (Round14OptSpec): identical output rows for
-    * every (k, beam, rounds, entries) shape.
-    */
-  private[graft] def beamSearchOnUnrolled(rawEdges: DataFrame, rawNodes: DataFrame,
-                                          q: DataFrame, k: Int, beam: Int,
-                                          rounds: Int,
-                                          entries: Option[DataFrame] = None): DataFrame = {
-    val edges = rawEdges.localCheckpoint(eager = false)
-    val nodes = rawNodes.localCheckpoint(eager = false)
-    val entry = nodes.agg(min("vec_id").as("vec_id"))
-    val sim = V.cosineWithNorms(V.dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
-    def scoreKeys(keys: DataFrame): DataFrame =
-      keys.join(nodes, "vec_id").join(broadcast(q), "q_id")
-        .select(col("q_id"), col("vec_id"), sim.as("sim"))
-    val wB = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id"))
-    val seedKeys = entries match {
-      case Some(e) => e.select(col("q_id"), col("vec_id"))
-      case None => q.select("q_id").crossJoin(broadcast(entry))
-    }
-    var visited = scoreKeys(seedKeys)
-      .localCheckpoint(eager = false)
-    for (_ <- 1 to rounds) {
-      val beamDf = visited.withColumn("rn", row_number().over(wB))
-        .filter(col("rn") <= beam).select("q_id", "vec_id")
-      // round-13: the former distinct() + left_anti(visited) prune
-      // before scoring is folded into ONE dedup aggregate after the
-      // union — scoring is a deterministic function of (q_id,
-      // vec_id), so every duplicate (in-round or vs visited) carries
-      // the IDENTICAL sim and max() reproduces the single-scored
-      // value exactly; the re-scored keys are bounded (≤ Q·beam·k a
-      // round). Two bounded-frame exchanges per round become one.
-      val newKeys = beamDf.join(edges, col("vec_id") === col("src"))
-        .select(col("q_id"), col("dst").as("vec_id"))
-      visited = visited.unionByName(scoreKeys(newKeys))
-        .groupBy("q_id", "vec_id").agg(max("sim").as("sim"))
-        .localCheckpoint(eager = false)
-    }
-    visited.filter(col("q_id") =!= col("vec_id"))
-      .withColumn("rnk", row_number().over(wB))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk").cast("long").as("rnk"),
-        col("vec_id").as("n_id"), round(col("sim"), 6).as("sim"))
   }
 
   /** recall@k of the graph-beam search vs the exact top-k over the
@@ -2072,28 +2025,14 @@ object Ann {
     * text_bpe_merges chaining pattern). Exact int64 grid distances
     * replay bit-for-bit. Round r's plan embeds rounds 1..r−1, so
     * scans grow O(k²) in the lazy rendering — fine at the contract's
-    * k=4; a production many-seed init passes `checkpointDir` to hand
-    * the ≤k-row chosen set off as parquet per round (round_N subdirs,
-    * the starComponents pattern): each round then reads the tiny
-    * seed table back instead of replaying every earlier round, so
-    * the whole init is O(k) corpus passes, restartable from the last
-    * completed round's artifact. Output is identical on either path
-    * (spec-pinned). NOTE: with `checkpointDir` set the per-round
-    * writes happen at CALL time (each round's winner must
-    * materialize before the next round is planned) — a materializing
-    * context, not an Explain sweep.
+    * k=4.
     */
-  def embInitFarthest(spark: SparkSession, dir: String, k: Int = 4,
-                      checkpointDir: Option[String] = None): DataFrame = {
+  def embInitFarthest(spark: SparkSession, dir: String, k: Int = 4): DataFrame = {
     require(k >= 1, s"embInitFarthest needs k >= 1, got $k")
-    def handoff(df: DataFrame, r: Int): DataFrame = checkpointDir match {
-      case None => df
-      case Some(d) => Tables.handoff(df, s"$d/round_$r")
-    }
     val x = Tables.embeddings(spark, dir)
       .select(col("vec_id"), graft.plans.VecFloorScale(col("embedding"), 1000).as("xs"))
-    var chosen: DataFrame = handoff(x.orderBy(col("vec_id")).limit(1)
-      .select(lit(1L).as("rnk"), col("vec_id"), lit(0L).as("min_dist"), col("xs")), 1)
+    var chosen: DataFrame = x.orderBy(col("vec_id")).limit(1)
+      .select(lit(1L).as("rnk"), col("vec_id"), lit(0L).as("min_dist"), col("xs"))
     for (r <- 2 to k) {
       val one = chosen.agg(collect_list(struct(col("vec_id").as("cid"), col("xs"))).as("cs"))
       val next = x.crossJoin(broadcast(one))
@@ -2103,7 +2042,7 @@ object Ann {
         .orderBy(col("min_dist").desc, col("vec_id"))
         .limit(1)
         .select(lit(r.toLong).as("rnk"), col("vec_id"), col("min_dist"), col("xs"))
-      chosen = handoff(chosen.union(next), r)
+      chosen = chosen.union(next)
     }
     chosen.select("rnk", "vec_id", "min_dist")
   }
@@ -2190,8 +2129,8 @@ object Ann {
   /** Label propagation iterated UNTIL CONVERGED — the production
     * driver the convergence monitor's stopping signal exists for
     * (round-13): one [[labelPropRound]] per iteration, each
-    * materialized through a lazy localCheckpoint by the SAME count
-    * that reads its newly-labeled total (one action per round, no
+    * materialized by an eager localCheckpoint whose `observe` metric
+    * reads its newly-labeled total (one action per round, no
     * separate monitor pass), stopping at the first round that labels
     * nothing new or at `maxRounds` (the runaway bound for a graph
     * whose frontier never drains — e.g. long label-free chains).
@@ -2271,22 +2210,17 @@ object Ann {
     * Scale shape: the edge set is checkpointed once (the block-pair
     * cosine join must not re-execute per iteration); each iteration
     * is one equi-join + one map-combinable groupBy on dst. Mass
-    * stays O(nodes); nothing driver-side. The default is a LAZY
-    * localCheckpoint (plan building stays side-effect free — the
-    * contract-query path); pass `checkpointDir` to hand the edge set
-    * off as parquet instead: restartable, executor-loss-proof, and
-    * the artifact a multi-iteration production run resumes from
-    * (note this writes at plan-BUILD time — a materializing context,
-    * not an Explain sweep). Output identical either way
-    * (spec-pinned).
+    * stays O(nodes); nothing driver-side. The edge set and the
+    * out-degree table are `localCheckpoint(eager = false)`, which
+    * under AQE still runs each child's shuffle stages at the call:
+    * building this plan runs the kNN join and the degree aggregate.
     */
   def embGraphRank(spark: SparkSession, dir: String,
-                   k: Int = 3, iters: Int = 2,
-                   checkpointDir: Option[String] = None): DataFrame =
+                   k: Int = 3, iters: Int = 2): DataFrame =
     embGraphRankOn(
       embKnnGraph(spark, dir, k)
         .select(col("vec_id").as("src"), col("n_id").as("dst")),
-      k, iters, checkpointDir)
+      k, iters)
 
   /** The rank loop over a CALLER-SUPPLIED (src, dst) edge frame —
     * the seam that takes the rank family off the quadratic curve:
@@ -2310,12 +2244,8 @@ object Ann {
     * kNN construction, so the contract output is provably unchanged.
     * Measured: the routed-feed rank loop in BASELINE.md round-12.
     */
-  def embGraphRankOn(rawEdges: DataFrame, k: Int = 3, iters: Int = 2,
-                     checkpointDir: Option[String] = None): DataFrame = {
-    val edges = checkpointDir match {
-      case None => rawEdges.localCheckpoint(eager = false)
-      case Some(d) => Tables.handoff(rawEdges, s"$d/knn_edges")
-    }
+  def embGraphRankOn(rawEdges: DataFrame, k: Int = 3, iters: Int = 2): DataFrame = {
+    val edges = rawEdges.localCheckpoint(eager = false)
     // exact out-degree per node: nodes = distinct src, so od >= 1 by
     // construction (no dangling division); node-sized, consumed every
     // iteration -> detached once

@@ -412,11 +412,8 @@ object NearDup {
     * the jaccard candidate join once per query (the one-query-one-
     * plan contract each `SparkEntry.queries` entry keeps). The exact
     * jaccard edge set and the simhash edge set are each materialized
-    * once (eager localCheckpoint by default; pass `checkpointDir` to
-    * hand each artifact off as parquet — restartable, executor-
-    * loss-proof, and the edge/group sets a failed audit resumes
-    * from) and fed to all three
-    * consumers via their precomputed-pairs parameters, and the group
+    * once (eager localCheckpoint) and fed to all three consumers
+    * via their precomputed-pairs parameters, and the group
     * labeling (the min-label closure) is computed once and shared by
     * the histogram and keep/drop stages; outputs are identical to
     * the recompute defaults (the group queries' oracle replays the
@@ -426,26 +423,16 @@ object NearDup {
     * plans) to ~7.2 s (−37%) through the seam — the candidate join
     * runs once instead of three times, the closure once instead of
     * twice.
-    *
-    * NOTE: with `checkpointDir` set, the parquet writes happen at
-    * CALL time (the handoff is what truncates lineage), not at first
-    * action on the returned frames — calling this from an
-    * explain/audit-only context mutates storage under the dir.
     */
   def dedupAuditFamily(spark: SparkSession, dir: String,
-                       threshold: Double = 0.5, maxHamming: Int = 3,
-                       checkpointDir: Option[String] = None)
+                       threshold: Double = 0.5, maxHamming: Int = 3)
       : (DataFrame, DataFrame, DataFrame) = {
-    def mat(df: DataFrame, tag: String): DataFrame = checkpointDir match {
-      case None => df.localCheckpoint()
-      case Some(d) => Tables.handoff(df, s"$d/$tag")
-    }
-    val jac = mat(jaccardPairs(spark, dir, threshold)
-      .select("a_id", "b_id"), "jaccard_pairs")
-    val sim = mat(simhashPairs(spark, dir, maxHamming)
-      .select("a_id", "b_id"), "simhash_pairs")
-    val groups = mat(dedupGroups(spark, dir, threshold,
-      precomputedPairs = Some(jac)), "groups")
+    val jac = jaccardPairs(spark, dir, threshold)
+      .select("a_id", "b_id").localCheckpoint()
+    val sim = simhashPairs(spark, dir, maxHamming)
+      .select("a_id", "b_id").localCheckpoint()
+    val groups = dedupGroups(spark, dir, threshold,
+      precomputedPairs = Some(jac)).localCheckpoint()
     (docsDetectorVenn(spark, dir, threshold, maxHamming, Some(jac), Some(sim)),
       docsGroupSizesOf(groups),
       dedupKeepOf(spark, dir, groups))
@@ -472,10 +459,9 @@ object NearDup {
       // both sides of the self-join consume this frame, but one side
       // feeds a BroadcastExchange so Spark cannot reuse the exchange
       // subtree — without materialization the df-join + per-doc sort
-      // run TWICE. Measured at sf0.1: ~0.9 s saved. Lazy so plan
-      // builds (Explain/plan audits) stay side-effect free; blocks
-      // materialize on the first action. At corpus scale, checkpoint
-      // to storage instead (same compute-once point).
+      // run TWICE. Measured at sf0.1: ~0.9 s saved. Under AQE the
+      // df-join and sort stages run at this call (plan construction),
+      // not at the first action.
       .localCheckpoint(eager = false)
     // upper bound on |A∩B| at the first common prefix position; the
     // join prune applies the verify predicate TO THE BOUND (see
@@ -553,9 +539,8 @@ object NearDup {
     // probe and index sides BOTH derive from the ordered arrays; the
     // A side feeds a BroadcastExchange, so without materialization
     // the df-join + per-doc sort run twice (no exchange reuse across
-    // a broadcast boundary). Lazy localCheckpoint computes it once on
-    // the first action while keeping plan builds side-effect free; at
-    // corpus scale checkpoint to storage instead.
+    // a broadcast boundary). localCheckpoint computes it once; under
+    // AQE its shuffle stages run at this call, not at the first action.
     val ord = orderedShingles(hashedShingles(docs)).localCheckpoint(eager = false)
     val n = size(col("arr"))
     val prefixLen = (n.cast("double") - ceilSafe(lit(threshold) * n.cast("double")) + 1).cast("int")
@@ -1228,52 +1213,36 @@ object NearDup {
     *
     * Returns (labels for every node — singletons label themselves,
     * rounds executed). Non-convergence within maxRounds throws, like
-    * [[dedupGroups]] — never silently half-merged groups.
-    *
-    * `checkpointDir`: per-round lineage truncation defaults to
-    * `localCheckpoint` (executor-local blocks — fine single-box, but
-    * blocks die with an executor and a long job recomputes the whole
-    * chain). At production scale pass a storage directory: each
-    * round's edge set is handed off as parquet (round_N subdirs, one
-    * per round so an in-flight reader never races an overwrite) and
-    * the next round reads it back — restartable, executor-loss-proof,
-    * and the artifact a failed run resumes from. Label output is
-    * identical on either path (spec-pinned). NOTE: with
-    * `checkpointDir` set the per-round parquet writes happen at CALL
-    * time (each round must materialize before the next is planned) —
-    * calling from an explain-only context mutates storage.
+    * [[dedupGroups]] — never silently half-merged groups. Each
+    * round's edge set is truncated with an eager `localCheckpoint`.
     */
   def starComponents(nodes: DataFrame, pairs: DataFrame,
-                     maxRounds: Int = 30,
-                     checkpointDir: Option[String] = None): (DataFrame, Int) = {
+                     maxRounds: Int = 30): (DataFrame, Int) = {
     import org.apache.spark.sql.Observation
     // round-14 (guide §2.4/§5 — one action per round): the per-round
     // count and an order-independent XOR fingerprint of the edge set
-    // ride the handoff materialization as an `observe` metric, so a
-    // round is exactly ONE scheduled action (the checkpoint/write) —
+    // ride the checkpoint materialization as an `observe` metric, so
+    // a round is exactly ONE scheduled action (the checkpoint) —
     // the separate count() job is gone. The fingerprint is a pure
     // NEGATIVE filter for the convergence probe: sets equal ⇒
     // (count, xor) equal, so the left_anti set-equality CONFIRM only
     // runs when both match — i.e. once, at the true fixed point
     // (spurious count-equal rounds no longer pay a join). Equality is
     // still PROVEN by the anti probe, never by the hash.
-    def handoff(df: DataFrame, tag: String): (DataFrame, Long, Long) = {
+    def truncate(df: DataFrame): (DataFrame, Long, Long) = {
       val obs = Observation()
-      val o = df.observe(obs, count(lit(1)).as("n"),
+      val out = df.observe(obs, count(lit(1)).as("n"),
         coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("fp"))
-      val out = checkpointDir match {
-        case None => o.localCheckpoint()
-        case Some(d) => Tables.handoff(o, s"$d/$tag")
-      }
+        .localCheckpoint()
       val m = obs.get
       (out, m("n").asInstanceOf[Long], m("fp").asInstanceOf[Long])
     }
     val Seq(srcCol, dstCol) = pairs.columns.toSeq.take(2)
-    var (edges, prevCount, prevFp) = handoff(pairs
+    var (edges, prevCount, prevFp) = truncate(pairs
       .select(greatest(col(srcCol), col(dstCol)).as("u"),
         least(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct(), "round_0")
+      .distinct())
     var rounds = 0
     var done = prevCount == 0L
     while (!done && rounds < maxRounds) {
@@ -1297,11 +1266,11 @@ object NearDup {
       // groupBy+join pair becomes one window over one exchange.
       val withSmin = large
         .withColumn("mn", min("v").over(Window.partitionBy("u")))
-      val (small, smallCount, smallFp) = handoff(withSmin
+      val (small, smallCount, smallFp) = truncate(withSmin
         .filter(col("v") =!= col("mn"))
         .select(col("v").as("u"), col("mn").as("v"))
         .union(withSmin.select(col("u"), col("mn").as("v")))
-        .distinct(), s"round_${rounds + 1}") // truncate per-round lineage
+        .distinct()) // truncate per-round lineage
       done = smallCount == prevCount && smallFp == prevFp &&
         small.join(edges, Seq("u", "v"), "left_anti").isEmpty
       prevCount = smallCount

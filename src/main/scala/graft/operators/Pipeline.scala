@@ -61,7 +61,7 @@ object Pipeline {
     * next stage shuffles — the pipeline's composition principle);
     * docs whose every line is boilerplate vanish entirely, exactly
     * like a cleaning run dropping an all-template page. Still ONE
-    * lazy plan: gate semi-join → line explode/count/join-back →
+    * plan: gate semi-join → line explode/count/join-back →
     * per-doc reconstruction → dedup window on the cleaned hash →
     * per-lang packing window. The emitted clean_chars pins the
     * reconstruction content through the oracle replay.
@@ -73,7 +73,8 @@ object Pipeline {
     // the physical plan. The checkpointed frame is the doc_id KEEP
     // SET only — the gated text frame itself stays unmaterialized
     // (each consumer re-reads the columnar scan; the mmDetectorVenn
-    // wide-frame rule), but the gate now runs once.
+    // wide-frame rule), but the gate now runs once. Under AQE the
+    // gate's shuffle stages run at this call, not at the first action.
     val keep = TextAnalysis.docsQualityFilter(spark, dir)
       .filter(col("keep")).select("doc_id")
       .localCheckpoint(eager = false)
@@ -116,10 +117,12 @@ object Pipeline {
     // each had 2-3 consumers, so the corpus was tokenized three times
     // for `src`, the whole quality-gate lineage (boilerplate top-k
     // included) ran twice under `kept`, and the plan carried 26
-    // parquet scans / 38 exchanges. Lazy localCheckpoints pin one
-    // instance of each — (doc_id, source, n_tok), (doc_id), and
-    // (doc_id, ch) rows only, never document text (the mmDetectorVenn
-    // wide-frame rule).
+    // parquet scans / 38 exchanges. localCheckpoint(eager = false)
+    // pins one instance of each — (doc_id, source, n_tok), (doc_id),
+    // and (doc_id, ch) rows only, never document text (the
+    // mmDetectorVenn wide-frame rule). Under AQE `keep` and `kept`
+    // run their children's shuffle stages (the quality gate, the
+    // join) at this call; `src` has no exchange and stays lazy.
     val src = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))

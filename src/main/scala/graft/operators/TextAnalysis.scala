@@ -594,44 +594,6 @@ object TextAnalysis {
       .orderBy(col("n").desc, col("pair"))
       .limit(k)
 
-  /** BPE MERGE-LOOP trainer — the iterative tokenizer-induction pass
-    * [[textBpePairs]] is round zero of: count adjacent symbol pairs
-    * over the corpus, adopt the highest-count pair as a merge
-    * (deterministic (count DESC, left, right) tie-break), re-segment
-    * every word, repeat. Output: one row per adopted merge
-    * (rnd, l, r, merged, n). Like emb_kmeans_train's Lloyd loop, the
-    * whole multi-round trajectory is ONE lazy Catalyst plan — each
-    * round's winner is a 1-row TakeOrdered broadcast onto the word
-    * frame, no per-round driver collect, no mutable state.
-    *
-    * Words are carried as DOUBLE-space-separated symbol strings
-    * padded with a boundary space (symbols never contain spaces, so
-    * " l␣␣r " matches exactly whole-symbol adjacency), and
-    * re-segmentation is ONE plain `replace` pass that IS greedy
-    * left-to-right BPE merging — see [[bpeReplaceExpr]] for why the
-    * double separator makes a consuming scan exact (and why the
-    * single-space rendering isn't). It replays engine-identically
-    * because plain `replace` has the same consuming non-overlapping
-    * semantics everywhere (no regex, no lookarounds — RE2 oracles
-    * can't do lookbehind).
-    *
-    * Scale shape: each round is one map-combinable pair count + a
-    * single-row TakeOrdered + a broadcast map-only rewrite — rounds
-    * compose without shuffling words (the only shuffles are the
-    * bounded pair-count aggregates). The corpus is re-derived per
-    * round (3 scans for 2 rounds — fine at the contract's rounds=2);
-    * a MANY-round production trainer passes `checkpointDir` to hand
-    * the re-segmented word frame off as parquet every
-    * `checkpointEvery` rounds (round_N subdirs, the
-    * emb_graph_rank/starComponents handoff pattern): each round then
-    * re-derives at most `checkpointEvery` re-segmentations from the
-    * nearest artifact instead of the whole chain from the scan, and
-    * a killed run resumes from the last completed handoff. Merge
-    * output is identical on either path (spec-pinned at rounds=6).
-    * NOTE: with `checkpointDir` set the writes happen at CALL time
-    * (each handed-off round must materialize before later rounds are
-    * planned) — a materializing context, not an Explain sweep.
-    */
   /** Top adjacent symbol pair of a spaced-symbol word frame —
     * shared by the trainer and the apply pass (symbols are joined
     * by a DOUBLE space — see [[bpeReplaceExpr]]).
@@ -664,11 +626,35 @@ object TextAnalysis {
   private val bpeReplaceExpr: String =
     "replace(w, concat(' ', l, '  ', r, ' '), concat(' ', l, r, ' '))"
 
-  def textBpeMerges(spark: SparkSession, dir: String, rounds: Int = 2,
-                    checkpointDir: Option[String] = None,
-                    checkpointEvery: Int = 2): DataFrame = {
+  /** BPE MERGE-LOOP trainer — the iterative tokenizer-induction pass
+    * [[textBpePairs]] is round zero of: count adjacent symbol pairs
+    * over the corpus, adopt the highest-count pair as a merge
+    * (deterministic (count DESC, left, right) tie-break), re-segment
+    * every word, repeat. Output: one row per adopted merge
+    * (rnd, l, r, merged, n). Like emb_kmeans_train's Lloyd loop, the
+    * whole multi-round trajectory is ONE lazy Catalyst plan — each
+    * round's winner is a 1-row TakeOrdered broadcast onto the word
+    * frame, no per-round driver collect, no mutable state.
+    *
+    * Words are carried as DOUBLE-space-separated symbol strings
+    * padded with a boundary space (symbols never contain spaces, so
+    * " l␣␣r " matches exactly whole-symbol adjacency), and
+    * re-segmentation is ONE plain `replace` pass that IS greedy
+    * left-to-right BPE merging — see [[bpeReplaceExpr]] for why the
+    * double separator makes a consuming scan exact (and why the
+    * single-space rendering isn't). It replays engine-identically
+    * because plain `replace` has the same consuming non-overlapping
+    * semantics everywhere (no regex, no lookarounds — RE2 oracles
+    * can't do lookbehind).
+    *
+    * Scale shape: each round is one map-combinable pair count + a
+    * single-row TakeOrdered + a broadcast map-only rewrite — rounds
+    * compose without shuffling words (the only shuffles are the
+    * bounded pair-count aggregates). The corpus is re-derived per
+    * round (3 scans for 2 rounds — fine at the contract's rounds=2).
+    */
+  def textBpeMerges(spark: SparkSession, dir: String, rounds: Int = 2): DataFrame = {
     require(rounds >= 1, s"textBpeMerges needs rounds >= 1, got $rounds")
-    require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
     def pairTop(words: DataFrame): DataFrame = bpePairTop(words)
     // spaced-symbol rendering " h e l l o ": one regex pass per word
     // (each char -> "char space", then the leading pad) — NOT a
@@ -678,9 +664,7 @@ object TextAnalysis {
     // deliberately NOT checkpointed: the three consumers re-derive
     // the spaced words from the scan (measured within 4% of a
     // localCheckpoint locally), and at corpus scale storing a
-    // 2×-corpus word frame loses to two extra columnar re-scans —
-    // the many-round production trainer checkpoints every FEW
-    // rounds (see scaladoc), not round 0
+    // 2×-corpus word frame loses to two extra columnar re-scans
     var words = Tables.documents(spark, dir)
       .select(explode(T.tokens(col("text"))).as("w"))
       .filter(length(col("w")) >= 1)
@@ -694,11 +678,6 @@ object TextAnalysis {
       if (rnd < rounds) {
         words = words.crossJoin(broadcast(top))
           .select(expr(bpeReplaceExpr).as("w"))
-        checkpointDir match {
-          case Some(d) if rnd % checkpointEvery == 0 =>
-            words = Tables.handoff(words, s"$d/round_$rnd")
-          case _ =>
-        }
       }
     }
     out
@@ -931,9 +910,10 @@ object TextAnalysis {
     * output to genuinely collocated pairs.
     *
     * Scale: the pair count and both marginal joins shuffle on token
-    * keys; hot tokens skew the marginal join — at corpus scale salt
-    * the marginal broadcast-side (df-style split, see
-    * [[NearDup.containmentPairsOn]]'s hot-key treatment). Integer
+    * keys; hot tokens skew the marginal join — the marginal is
+    * detached (see [[coocParts]]) so AQE's skew-join split can fire
+    * on it (BASELINE.md round-7: the split beat a ×8 salted
+    * rendering, whose wall grew 9.7× for 10× data). Integer
     * ranges: c·N·10⁴ ≤ 10¹⁸ holds to ~10⁹-token corpora per count
     * cell; past that, widen to decimal128.
     *
@@ -1004,8 +984,7 @@ object TextAnalysis {
   }
 
   /** (window pairs ≥ 5 keyed by token HASHES, token marginals with
-    * their hashes, 1-row total) — shared by the plain and salted lift
-    * variants.
+    * their hashes, 1-row total) — the inputs of [[docsCoocLift]].
     *
     * The positional join and the pair-count aggregate run entirely on
     * 8-byte xxhash64 token keys, not strings: the distinct skip-gram
@@ -1025,16 +1004,15 @@ object TextAnalysis {
     * silent merge.
     */
   private def coocParts(spark: SparkSession, dir: String,
-                        minDf: Long = 0L, bands: Int = 1)
+                        minDf: Long, bands: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), posexplode(T.tokens(col("text"))).as(Seq("i", "tok")))
     val toksH = toks.select(col("doc_id"), col("i"), xxhash64(col("tok")).as("ht"))
     // marg is consumed twice (both directional joins) and sits under
     // Zipf-hot join keys: the detach materializes it once AND keeps
-    // AQE's skew split eligible (see docsChunkDedup's shape note) —
-    // which is exactly the regime where the salted variant's ×S
-    // replication stops paying (BASELINE.md round-7: eligible AQE beat salting)
+    // AQE's skew split eligible (see docsChunkDedup's shape note;
+    // BASELINE.md round-7: eligible AQE beat salting)
     val marg = toks.groupBy("tok").agg(count(lit(1)).as("c"))
       .withColumn("ht", xxhash64(col("tok")))
       .localCheckpoint()
@@ -1079,44 +1057,6 @@ object TextAnalysis {
       }.reduce(_ unionByName _)
     val total = toks.agg(count(lit(1)).as("n_total"))
     (pairs, marg, total)
-  }
-
-  /** The SALTED rendering of [[docsCoocLift]]'s marginal joins — its
-    * scaladoc's hot-key note as code, result-identical by
-    * construction (the [[Relational.qSaltedJoin]] pattern): every
-    * pair row draws a deterministic salt, the token-marginal table
-    * replicates across all S salts, and both joins key on (token,
-    * salt) — a Zipf-hot token's pair rows now spread over S reduce
-    * partitions instead of one. Each pair row still matches exactly
-    * one replicated marginal row per side, so the output is the
-    * plain variant's row-for-row (equality spec).
-    *
-    * LIB SEAM, not a contract query (demoted round 8): the round-7
-    * skew-mitigation A/B (BASELINE.md) showed that once the marginal
-    * is detached (see [[coocParts]]), AQE's skew split is ELIGIBLE and beats this ×S
-    * replication — which costs ~9.7× at 10× data when no key is
-    * actually hot. Use the plain variant by default; select this
-    * rendering only on q_skew_profile evidence of a hot join key in
-    * a shape where AQE's split cannot fire (aggregate fused under
-    * the join, windows over the hot key, stream-stream joins).
-    */
-  def docsCoocLiftSalted(spark: SparkSession, dir: String,
-                         salts: Int = 8): DataFrame = {
-    val (pairs, marg, total) = coocParts(spark, dir)
-    val saltedPairs = pairs.withColumn("_salt",
-      pmod(xxhash64(col("ha"), col("hb")), lit(salts.toLong)))
-    val margX = marg.withColumn("_salt",
-      explode(sequence(lit(0L), lit(salts - 1L))))
-    saltedPairs
-      .join(margX.select(col("ht").as("ha"), col("tok").as("a"),
-          col("c").as("c_a"), col("_salt")),
-        Seq("ha", "_salt"))
-      .join(margX.select(col("ht").as("hb"), col("tok").as("b"),
-          col("c").as("c_b"), col("_salt")),
-        Seq("hb", "_salt"))
-      .crossJoin(broadcast(total))
-      .select(col("a"), col("b"), col("c_ab"), col("c_a"), col("c_b"),
-        expr("(c_ab * n_total * 10000) div (c_a * c_b)").as("lift_x1e4"))
   }
 
   /** Language-ID CONFIDENCE margin — the router-confidence view of

@@ -1194,16 +1194,6 @@ class OperatorSpec extends SparkSpec {
     assert(daily === single && single.nonEmpty)
   }
 
-  test("salted collocation lift equals the plain marginal joins") {
-    import graft.operators.TextAnalysis
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5))).toSet
-    val plain = rows(TextAnalysis.docsCoocLift(spark, sf))
-    val salted = rows(TextAnalysis.docsCoocLiftSalted(spark, sf))
-    assert(salted === plain && plain.nonEmpty)
-  }
-
   test("per-day merge-interval split equals the single-sweep spans") {
     import graft.operators.Relational
     val single = Relational.qMergeIntervals(spark, sf).collect()
@@ -2065,20 +2055,6 @@ class OperatorSpec extends SparkSpec {
       NearDup.docsGroupSizes(spark, sf).collect().map(key).sorted.toSeq)
     assert(keep.collect().map(key).sorted.toSeq ===
       NearDup.dedupKeep(spark, sf).collect().map(key).sorted.toSeq)
-    // the storage-handoff variant writes its edge/group artifacts to
-    // parquet and yields the identical family outputs
-    val dir = java.nio.file.Files.createTempDirectory("graft_fam_").toString
-    try {
-      val (v2, s2, k2) = NearDup.dedupAuditFamily(spark, sf,
-        checkpointDir = Some(dir))
-      assert(v2.collect().map(key).sorted.toSeq === venn.collect().map(key).sorted.toSeq)
-      assert(s2.collect().map(key).sorted.toSeq === sizes.collect().map(key).sorted.toSeq)
-      assert(k2.collect().map(key).sorted.toSeq === keep.collect().map(key).sorted.toSeq)
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/jaccard_pairs")))
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/groups")))
-    } finally {
-      TestSpark.deleteRecursively(java.nio.file.Paths.get(dir))
-    }
   }
 
   test("merged interval spans cover events and never overlap") {
@@ -2721,25 +2697,14 @@ class OperatorSpec extends SparkSpec {
     assert(gotApply === expApply)
   }
 
-  test("many-round bpe trainer with checkpoint-every-N handoff equals the lazy chain at rounds=6") {
+  test("many-round bpe trainer adopts six distinct merges at rounds=6") {
     import graft.operators.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_ckpt").toString
-    try {
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getLong(4))).sortBy(_._1).toSeq
-      val lazyOut = rows(TextAnalysis.textBpeMerges(spark, sf, rounds = 6))
-      val stored = rows(TextAnalysis.textBpeMerges(spark, sf, rounds = 6,
-        checkpointDir = Some(dir), checkpointEvery = 2))
-      assert(stored === lazyOut && stored.size === 6)
-      // rounds really merged something distinct each time
-      assert(stored.map(t => (t._2, t._3)).distinct.size === 6)
-      // handoff artifacts on storage at rounds 2 and 4 (never the
-      // final round — nothing is re-segmented after the last merge)
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/round_2")))
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/round_4")))
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/round_6")))
-    } finally TestSpark.deleteRecursively(java.nio.file.Paths.get(dir))
+    val out = TextAnalysis.textBpeMerges(spark, sf, rounds = 6).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getLong(4))).sortBy(_._1).toSeq
+    assert(out.size === 6)
+    // rounds really merged something distinct each time
+    assert(out.map(t => (t._2, t._3)).distinct.size === 6)
   }
 
   test("farthest-point init equals a driver-side greedy replay") {
@@ -2763,21 +2728,6 @@ class OperatorSpec extends SparkSpec {
     val got = Ann.embInitFarthest(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
     assert(got === expect.toSeq)
-  }
-
-  test("farthest-point init with per-round parquet handoff equals the lazy rendering") {
-    import graft.operators.Ann
-    val dir = java.nio.file.Files.createTempDirectory("graft_init_ckpt").toString
-    try {
-      val lazyOut = Ann.embInitFarthest(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-      val stored = Ann.embInitFarthest(spark, sf, checkpointDir = Some(dir)).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-      assert(stored === lazyOut && stored.size === 4)
-      // the handoff artifacts really are on storage (restart seam)
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/round_1")))
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/round_4")))
-    } finally TestSpark.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
   test("approx column profile matches the exact twin within the rsd bound") {

@@ -405,53 +405,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("storage-checkpoint handoff yields identical labels and graph ranks") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    try {
-      // components: chain + a random blob through the parquet handoff
-      val edges = ((0 until 12).map(i => (i.toLong, i + 1L)) ++
-        Seq((20L, 25L), (25L, 22L), (30L, 30L))).toDF("src", "dst")
-      val nodes = (0L until 31L).toDF("doc_id")
-      val (local, _) = graft.operators.NearDup.starComponents(nodes, edges)
-      val (stored, _) = graft.operators.NearDup.starComponents(
-        nodes, edges, checkpointDir = Some(s"$dir/stars"))
-      assert(stored.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
-        local.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-      // pagerank: the knn edge set through the parquet handoff
-      val rkLocal = graft.operators.Ann.embGraphRank(spark, sf)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val rkStored = graft.operators.Ann.embGraphRank(spark, sf,
-          checkpointDir = Some(s"$dir/rank"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(rkStored === rkLocal)
-      // the handoff artifacts really are on storage (restart seam)
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/rank/knn_edges")))
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/stars/round_0")))
-    } finally {
-      TestSpark.deleteRecursively(java.nio.file.Paths.get(dir))
-    }
-  }
-
-  test("loop handoff reads back with the written schema: no schema-inference job") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_handoff_").toString
-    try {
-      val df = Seq((1L, "a", Seq(0.5f)), (2L, null, Seq.empty[Float])).toDF("id", "s", "v")
-      val writeJobs = jobsScheduledBy(df.write.mode("overwrite").parquet(s"$dir/plain"))
-      var back: org.apache.spark.sql.DataFrame = null
-      val handoffJobs = jobsScheduledBy { back = Tables.handoff(df, s"$dir/handoff") }
-      assert(handoffJobs === writeJobs, "the read-back must start no job of its own")
-      // the schema an inferring read of the same files would yield
-      assert(back.schema === spark.read.parquet(s"$dir/plain").schema)
-      assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
-      // a second handoff to the same path overwrites, never appends
-      assert(Tables.handoff(df.filter($"id" === 1L), s"$dir/handoff").count() === 1)
-    } finally {
-      TestSpark.deleteRecursively(java.nio.file.Paths.get(dir))
-    }
-  }
-
   test("PPJoin+ filters are exact: jaccard/containment == brute force on random corpora, salted included") {
     import spark.implicits._
     // synthetic corpora with real overlap structure: a few templates,

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.expressions.Window
 import graft.functions.{VectorFunctions => V}
 
 /** Round-14 OPTIMIZATION equivalences: the driver-frontier renderings
@@ -11,6 +12,53 @@ import graft.functions.{VectorFunctions => V}
   * seeds, dangling edges, rounds past the fixed point).
   */
 class Round14OptSpec extends SparkSpec {
+
+  /** The pre-round-14 fully-plan-side rendering of
+    * [[graft.operators.Ann.beamSearchOn]] — every round a window +
+    * edge join + dedup aggregate over lazy checkpoints. Kept as the
+    * equality anchor the driver-frontier tests below pin against:
+    * identical output rows for every (k, beam, rounds, entries) shape.
+    */
+  private def beamSearchOnUnrolled(rawEdges: DataFrame, rawNodes: DataFrame,
+                                  q: DataFrame, k: Int, beam: Int,
+                                  rounds: Int,
+                                  entries: Option[DataFrame] = None): DataFrame = {
+    val edges = rawEdges.localCheckpoint(eager = false)
+    val nodes = rawNodes.localCheckpoint(eager = false)
+    val entry = nodes.agg(min("vec_id").as("vec_id"))
+    val sim = V.cosineWithNorms(V.dot(col("q_emb"), col("embedding")), col("q_n2"), col("n2"))
+    def scoreKeys(keys: DataFrame): DataFrame =
+      keys.join(nodes, "vec_id").join(broadcast(q), "q_id")
+        .select(col("q_id"), col("vec_id"), sim.as("sim"))
+    val wB = Window.partitionBy("q_id").orderBy(col("sim").desc, col("vec_id"))
+    val seedKeys = entries match {
+      case Some(e) => e.select(col("q_id"), col("vec_id"))
+      case None => q.select("q_id").crossJoin(broadcast(entry))
+    }
+    var visited = scoreKeys(seedKeys)
+      .localCheckpoint(eager = false)
+    for (_ <- 1 to rounds) {
+      val beamDf = visited.withColumn("rn", row_number().over(wB))
+        .filter(col("rn") <= beam).select("q_id", "vec_id")
+      // round-13: the former distinct() + left_anti(visited) prune
+      // before scoring is folded into ONE dedup aggregate after the
+      // union — scoring is a deterministic function of (q_id,
+      // vec_id), so every duplicate (in-round or vs visited) carries
+      // the IDENTICAL sim and max() reproduces the single-scored
+      // value exactly; the re-scored keys are bounded (≤ Q·beam·k a
+      // round). Two bounded-frame exchanges per round become one.
+      val newKeys = beamDf.join(edges, col("vec_id") === col("src"))
+        .select(col("q_id"), col("dst").as("vec_id"))
+      visited = visited.unionByName(scoreKeys(newKeys))
+        .groupBy("q_id", "vec_id").agg(max("sim").as("sim"))
+        .localCheckpoint(eager = false)
+    }
+    visited.filter(col("q_id") =!= col("vec_id"))
+      .withColumn("rnk", row_number().over(wB))
+      .filter(col("rnk") <= k)
+      .select(col("q_id"), col("rnk").cast("long").as("rnk"),
+        col("vec_id").as("n_id"), round(col("sim"), 6).as("sim"))
+  }
 
   private def nodesOf(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("embedding"), V.normSq(col("embedding")).as("n2"))
@@ -41,7 +89,7 @@ class Round14OptSpec extends SparkSpec {
     for ((k, beam, rounds) <- Seq((5, 4, 3), (3, 2, 1), (5, 4, 6))) {
       assertSameRows(
         graft.operators.Ann.beamSearchOn(edges, nodes, q, k, beam, rounds),
-        graft.operators.Ann.beamSearchOnUnrolled(edges, nodes, q, k, beam, rounds),
+        beamSearchOnUnrolled(edges, nodes, q, k, beam, rounds),
         s"beam single-entry k=$k beam=$beam rounds=$rounds")
     }
     // multi-entry seeds: every query starts from two fixed nodes
@@ -49,7 +97,7 @@ class Round14OptSpec extends SparkSpec {
       ids.filter(col("vec_id") % 41 === 0).select(col("vec_id"))).distinct()
     assertSameRows(
       graft.operators.Ann.beamSearchOn(edges, nodes, q, 5, 3, 3, Some(seeds)),
-      graft.operators.Ann.beamSearchOnUnrolled(edges, nodes, q, 5, 3, 3, Some(seeds)),
+      beamSearchOnUnrolled(edges, nodes, q, 5, 3, 3, Some(seeds)),
       "beam multi-entry")
   }
 
@@ -67,14 +115,14 @@ class Round14OptSpec extends SparkSpec {
     for ((k, beam, rounds) <- Seq((3, 2, 4), (2, 1, 8))) {
       assertSameRows(
         graft.operators.Ann.beamSearchOn(edges, nodes, q, k, beam, rounds),
-        graft.operators.Ann.beamSearchOnUnrolled(edges, nodes, q, k, beam, rounds),
+        beamSearchOnUnrolled(edges, nodes, q, k, beam, rounds),
         s"edge-shape k=$k beam=$beam rounds=$rounds")
     }
     // empty seed frame → empty result on both sides
     val emptySeeds = Seq.empty[(Long, Long)].toDF("q_id", "vec_id")
     assertSameRows(
       graft.operators.Ann.beamSearchOn(edges, nodes, q, 3, 2, 2, Some(emptySeeds)),
-      graft.operators.Ann.beamSearchOnUnrolled(edges, nodes, q, 3, 2, 2, Some(emptySeeds)),
+      beamSearchOnUnrolled(edges, nodes, q, 3, 2, 2, Some(emptySeeds)),
       "empty seeds")
   }
 
@@ -93,7 +141,7 @@ class Round14OptSpec extends SparkSpec {
       s"rounds = 2 scheduled ${jobs.head} jobs, rounds = 6 ${jobs(1)}")
     assertSameRows(
       graft.operators.Ann.beamSearchOn(edges, nodes, q, 2, 4, 6),
-      graft.operators.Ann.beamSearchOnUnrolled(edges, nodes, q, 2, 4, 6),
+      beamSearchOnUnrolled(edges, nodes, q, 2, 4, 6),
       "dangling edge past the fixed point")
   }
 }

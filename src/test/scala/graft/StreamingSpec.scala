@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.DedupStream
+import graft.streaming.{AnomalyStream, DedupStream}
 import graft.streaming.DedupStream.Ev
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -842,17 +842,16 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming anomaly flags equal the prefix-stats replay across splits") {
-    import spark.implicits._
-    import graft.streaming.AnomalyStream
-    implicit val sqlCtx = spark.sqlContext
+  /** Two event types in event-time order: 5 stable values per type,
+    * then a spike (prefix-inclusive 2σ needs ≥5 prior points: m
+    * stable + spike flags iff m > 4), then a post-spike stable value
+    * (σ now inflated → not flagged).
+    */
+  private val anomalyEvents: Seq[Ev] = {
     val base = 1700000000000L
     def evv(id: Long, tMs: Long, v: Double, typ: String) =
       Ev(id, new java.sql.Timestamp(tMs), 1L, typ, v, "{}")
-    // 5 stable values per type, then a spike (prefix-inclusive 2σ
-    // needs ≥5 prior points: m stable + spike flags iff m > 4),
-    // then a post-spike stable value (σ now inflated → not flagged)
-    val all = Seq(
+    Seq(
       evv(1, base, 10.0, "a"), evv(2, base + 1000, 10.2, "a"),
       evv(20, base + 1500, 5.0, "b"), evv(3, base + 2000, 9.9, "a"),
       evv(21, base + 2500, 5.1, "b"), evv(4, base + 3000, 10.1, "a"),
@@ -860,6 +859,20 @@ class StreamingSpec extends SparkSpec {
       evv(23, base + 4500, 5.0, "b"), evv(24, base + 5000, 5.2, "b"),
       evv(6, base + 6000, 300.0, "a"), evv(25, base + 6500, 400.0, "b"),
       evv(7, base + 7000, 10.0, "a"))
+  }
+
+  /** The prefix-stats replay of `events` through the shared kernel,
+    * whole stream per type.
+    */
+  private def anomalyReplay(events: Seq[Ev]): Seq[AnomalyStream.AnomalyFlag] =
+    events.groupBy(_.event_type).values.flatMap { g =>
+      AnomalyStream.foldSlice(g, AnomalyStream.TypeStats(0L, 0L, 0L))._1
+    }.toSeq.sortBy(_.event_id)
+
+  test("streaming anomaly flags equal the prefix-stats replay across splits") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val all = anomalyEvents
     // two different time-respecting splits must give identical output
     val outputs = Seq(Seq(all), Seq(all.take(7), all.drop(7))).map { splits =>
       val input = MemoryStream[Ev]
@@ -875,9 +888,8 @@ class StreamingSpec extends SparkSpec {
     }
     assert(outputs.head === outputs.last)
     // exact prefix replay via the shared kernel, whole stream per type
-    val expect = all.groupBy(_.event_type).values.flatMap { g =>
-      AnomalyStream.foldSlice(g, AnomalyStream.TypeStats(0L, 0L, 0L))._1
-    }.map(f => (f.event_id, (f.cents, f.n_so_far, f.is_outlier))).toSeq.sortBy(_._1)
+    val expect = anomalyReplay(all)
+      .map(f => (f.event_id, (f.cents, f.n_so_far, f.is_outlier)))
     assert(outputs.head.toSeq === expect)
     // the spike events are flagged; stable and post-spike ones aren't
     val flags = outputs.head.toMap.view.mapValues(_._3).toMap
@@ -1132,6 +1144,27 @@ class StreamingSpec extends SparkSpec {
             assert(run(op, stopAfter = i) === uninterrupted,
               s"$name, $store store, stopped after trigger $i")
           }
+        }
+      }
+  }
+
+  test("anomaly stream restarts from its checkpoint after any trigger with the " +
+    "uninterrupted run's flags, on both state stores") {
+    import spark.implicits._
+    val all = anomalyEvents
+    // time-respecting triggers; the spikes arrive in the last one
+    val triggers = Seq(all.take(3), all.slice(3, 7), all.slice(7, 10), all.drop(10))
+    val expect = anomalyReplay(all).map(f =>
+      Row(f.event_id, f.event_type, f.cents, f.n_so_far, f.is_outlier)).sortBy(_.toString)
+    assert(expect.count(_.getBoolean(4)) === 2, "no spike flagged: the spec would be vacuous")
+    def run(stopAfter: Int): Seq[Row] =
+      restartRun(triggers, stopAfter)(AnomalyStream.anomalyStream(_).toDF())
+    for ((store, confs) <- Seq("default" -> Seq.empty, "RocksDB" -> Seq(rocksDbStore)))
+      withConf(confs: _*) {
+        val uninterrupted = run(stopAfter = triggers.size)
+        assert(uninterrupted === expect, s"$store store")
+        (1 until triggers.size).foreach { i =>
+          assert(run(stopAfter = i) === uninterrupted, s"$store store, stopped after trigger $i")
         }
       }
   }

@@ -61,6 +61,14 @@ if [ -n "$detach" ]; then
   echo "$detach" >&2
   exit 1
 fi
+# One way to truncate loop lineage: loops truncate with localCheckpoint,
+# so a parquet-handoff fork keyed on a checkpointDir cannot grow back.
+ckptdir=$(grep -rn 'checkpointDir' src/main/scala || true)
+if [ -n "$ckptdir" ]; then
+  echo "[precommit] checkpointDir under src/main/scala; loops truncate with localCheckpoint:" >&2
+  echo "$ckptdir" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile
 sbt -batch 'runMain graft.Scratch'
 echo "[precommit] OK"
