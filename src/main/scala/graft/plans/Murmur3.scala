@@ -52,16 +52,15 @@ object Murmur3x64_128 {
     k
   }
 
-  /** The two 64-bit lanes (h1, h2). */
-  def hash(data: Array[Byte], seed: Int): (Long, Long) = {
+  /** The two 64-bit lanes (h1, h2) of `data(off until off + len)`, read in place. */
+  def hash(data: Array[Byte], off: Int, len: Int, seed: Int): (Long, Long) = {
     import java.lang.Long.rotateLeft
-    val len = data.length
     var h1 = seed.toLong // Guava: `this.h1 = seed` on a long field
     var h2 = seed.toLong
     val nblocks = len >>> 4
     var i = 0
     while (i < nblocks) {
-      val base = i << 4
+      val base = off + (i << 4)
       var k1 = getLongLE(data, base)
       var k2 = getLongLE(data, base + 8)
       k1 *= C1; k1 = rotateLeft(k1, 31); k1 *= C2; h1 ^= k1
@@ -70,7 +69,7 @@ object Murmur3x64_128 {
       h2 = rotateLeft(h2, 31); h2 += h1; h2 = h2 * 5 + 0x38495ab5L
       i += 1
     }
-    val tail = nblocks << 4
+    val tail = off + (nblocks << 4)
     val rem = len & 15
     if (rem > 8) {
       var k2 = 0L
@@ -92,8 +91,12 @@ object Murmur3x64_128 {
   }
 
   /** The 16 digest bytes in Guava `asBytes()` order (h1 LE, h2 LE). */
-  def hashBytes(data: Array[Byte], seed: Int): Array[Byte] = {
-    val (h1, h2) = hash(data, seed)
+  def hashBytes(data: Array[Byte], seed: Int): Array[Byte] =
+    hashBytes(data, 0, data.length, seed)
+
+  /** The 16 digest bytes of `data(off until off + len)`, read in place. */
+  def hashBytes(data: Array[Byte], off: Int, len: Int, seed: Int): Array[Byte] = {
+    val (h1, h2) = hash(data, off, len, seed)
     val out = new Array[Byte](16)
     var i = 0
     while (i < 8) { out(i) = (h1 >>> (i << 3)).toByte; i += 1 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.plans.{ByteCount, CanonicalHash128, SpaceCut}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -11,9 +12,11 @@ import org.apache.spark.sql.types._
   * payload is `{"VP": {desi dir oper veh tst tsi spd hdg lat long
   * acc dl odo drst oday jrn line start}}`).
   *
-  * All parsing is codegen'd built-ins: one split for the three
-  * space-separated parts (payload JSON contains spaces → limit 3),
-  * one split for the topic, from_json with an explicit schema for
+  * All parsing is codegen'd: one byte scan for the first two spaces
+  * cuts a line into its three parts ([[graft.plans.SpaceCut]]; payload
+  * JSON contains spaces, so the cut stops at the second), a count of
+  * `/` bytes keeps topics of at least 8 segments, one split of the
+  * topic gives its fields, and from_json with an explicit schema reads
   * the payload (schema-on-read, no sampling pass — mandatory at
   * 100 TB where schema inference would scan everything twice).
   */
@@ -42,15 +45,15 @@ object HfpSource {
     * numeric/timestamp fields go null via try_* variants.
     */
   def parseLines(lines: DataFrame): DataFrame = {
-    val parts = split(col("line"), " ", 3)
+    def part(i: Int): Column = SpaceCut(col("line"), i)
     def t(i: Int): Column = element_at(split(col("topic"), "/"), i)
     lines
-      .filter(size(split(col("line"), " ", 3)) >= 3)
+      .filter(SpaceCut.cuts(col("line")))
       .select(
-        expr("try_to_timestamp(element_at(split(line, ' ', 3), 1))").as("recv_ts"),
-        element_at(parts, 2).as("topic"),
-        element_at(parts, 3).as("payload"))
-      .filter(size(split(col("topic"), "/")) >= 8)
+        try_to_timestamp(part(1)).as("recv_ts"),
+        part(2).as("topic"),
+        part(3).as("payload"))
+      .filter(ByteCount(col("topic"), '/') >= 7)
       .withColumn("vp", from_json(col("payload"), payloadSchema).getField("VP"))
       .select(
         col("recv_ts"),
@@ -100,10 +103,10 @@ object HfpSource {
     * so hashes can be shared with external storage). Byte-for-byte
     * Guava-compatible ([[graft.plans.Murmur3x64_128]]), so a graft
     * pipeline and the reference service can dedup against the SAME
-    * external hash store.
+    * external hash store. One fused kernel: the canonical bytes are
+    * hashed where the canonicalizer wrote them.
     */
-  def contentHash128: Column =
-    graft.plans.Murmur3_128(canonicalContentKey.cast("binary"), 42)
+  def contentHash128: Column = CanonicalHash128(col("payload"), 42)
 
   /** Schema tags whose payloads are canonicalized — the analog of the
     * reference's payload dispatch (Deduplicator.parsePayload,

@@ -72,6 +72,80 @@ class HfpSourceSpec extends SparkSpec {
     assert(g.select(HfpSource.canonicalContentKey).distinct().count() === 2)
   }
 
+  test("blank payloads keep their own keys, distinct from a literal null payload") {
+    import spark.implicits._
+    val topic = "/hfp/v1/journey/ongoing/bus/0018/00640/x"
+    val payloads = Seq("", "  ", "null")
+    val df = HfpSource.parseLines(payloads.map(p => s"2018-10-09T04:32:52Z $topic $p").toDF("line"))
+    val rows = df.select(col("payload"), HfpSource.canonicalContentKey.as("key"),
+      hex(HfpSource.contentHash128).as("h")).collect()
+    assert(rows.map(_.getString(0)).sorted.toSeq === payloads.sorted)
+    // a blank payload holds no JSON value and passes through verbatim
+    rows.foreach(r => assert(r.getString(1) === r.getString(0)))
+    assert(rows.map(_.getString(1)).distinct.length === 3)
+    assert(rows.map(_.getString(2)).distinct.length === 3)
+  }
+
+  /** `parseLines` as it was written with `split(line, ' ', 3)` and
+    * `size(split(topic, "/")) >= 8`: the oracle of the byte cut.
+    */
+  private def splitParseLines(lines: org.apache.spark.sql.DataFrame) = {
+    val parts = split(col("line"), " ", 3)
+    def t(i: Int) = element_at(split(col("topic"), "/"), i)
+    lines
+      .filter(size(split(col("line"), " ", 3)) >= 3)
+      .select(
+        expr("try_to_timestamp(element_at(split(line, ' ', 3), 1))").as("recv_ts"),
+        element_at(parts, 2).as("topic"),
+        element_at(parts, 3).as("payload"))
+      .filter(size(split(col("topic"), "/")) >= 8)
+      .withColumn("vp", from_json(col("payload"), HfpSource.payloadSchema).getField("VP"))
+      .select(
+        col("recv_ts"), t(3).as("version"), t(4).as("journey_type"), t(5).as("temporal_type"),
+        t(6).as("transport_mode"), t(7).try_cast("long").as("operator_id"),
+        t(8).try_cast("long").as("vehicle_number"),
+        col("vp.desi").as("desi"), col("vp.dir").as("dir"), col("vp.oper").as("oper"),
+        col("vp.veh").as("veh"), expr("try_to_timestamp(vp.tst)").as("tst"),
+        col("vp.tsi").as("tsi"), col("vp.spd").as("spd"), col("vp.hdg").as("hdg"),
+        col("vp.lat").as("lat"), col("vp.long").as("lon"), col("vp.acc").as("acc"),
+        col("vp.dl").as("dl"), col("vp.odo").as("odo"), col("vp.drst").as("drst"),
+        col("vp.oday").as("oday"), col("vp.jrn").as("jrn"), col("vp.line").as("line"),
+        col("vp.start").as("start"), col("payload"))
+  }
+
+  test("the byte cut parses every line as split(line, ' ', 3) did") {
+    import spark.implicits._
+    val ts = "2018-10-09T04:32:52Z"
+    val t8 = "/hfp/v1/journey/ongoing/bus/0018/00640"
+    val vp = """{"VP":{"desi":"57","veh":640,"spd":8.53,"tst":"2018-10-09T04:32:52Z"}}"""
+    val text = Seq(
+      "", // empty line
+      s"$ts $t8", // one space
+      s" $t8 $vp", // leading space: empty receive time
+      s"$ts  $t8 $vp", // double space: empty topic
+      s"$ts $t8  $vp", // double space: the payload starts with one
+      s"$ts\t$t8 $vp", // a tab is no separator
+      s"$ts $t8 ${vp.replace(",", ", ")}",
+      s"$ts $t8/K\u00e4mppi/\u65e5\u672c $vp", // multi-byte UTF-8 in the topic
+      s"$ts $t8 " + "{\"VP\":{\"desi\":\"\u00e4\u65e5\ud83d\ude00\",\"veh\":1}}", // and in the payload
+      s"$ts /hfp/v1/journey/ongoing/bus/0018 $vp", // exactly 7 segments
+      s"$ts $t8 $vp", // exactly 8 segments
+      s"$ts /hfp/v1/journey/ongoing/bus/0018/ $vp", // 8 with an empty last one
+      s"$ts $t8 ")
+    val invalid = Seq( // invalid UTF-8 in the topic and in the payload
+      Array.concat(s"$ts $t8/".getBytes("UTF-8"), Array(0xff.toByte, 0xc0.toByte), s" $vp".getBytes("UTF-8")),
+      Array.concat((s"$ts $t8 " + "{\"VP\":{\"desi\":\"").getBytes("UTF-8"),
+        Array(0xed.toByte, 0xa0.toByte, 0x80.toByte), "\"}}".getBytes("UTF-8")))
+    val lines = text.toDF("line").union(invalid.toDF("b").select(col("b").cast("string").as("line")))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }).toSeq
+    val cut = rows(HfpSource.parseLines(lines))
+    assert(cut === rows(splitParseLines(lines)))
+    assert(cut.length === 10)
+  }
+
   test("multi-schema dispatch: two schemas through one dedup, unknown schema passes raw") {
     import spark.implicits._
     // one logical stream, three wire schemas (Deduplicator.parsePayload

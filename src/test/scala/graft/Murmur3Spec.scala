@@ -43,6 +43,18 @@ class Murmur3Spec extends AnyFunSuite {
     assert(Set(h(15), h(16), h(17)).size === 3)
   }
 
+  test("a slice at a non-zero offset hashes as its copy, for every tail length") {
+    val data = Array.tabulate(64)(i => (i * 37 + 11).toByte)
+    for (len <- 16 to 31; off <- Seq(1, 3, 8, 13)) { // tail lengths 0..15 after one block
+      val slice = java.util.Arrays.copyOfRange(data, off, off + len)
+      assert(Murmur3x64_128.hashBytes(data, off, len, 42).toSeq ===
+        Murmur3x64_128.hashBytes(slice, 42).toSeq, s"off=$off len=$len")
+    }
+    for (len <- 0 to 15)
+      assert(Murmur3x64_128.hashBytes(data, 5, len, 42).toSeq ===
+        Murmur3x64_128.hashBytes(java.util.Arrays.copyOfRange(data, 5, 5 + len), 42).toSeq)
+  }
+
   test("expression matches the kernel through codegen, SQL, and null paths") {
     val spark = TestSpark.spark
     import spark.implicits._

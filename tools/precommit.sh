@@ -69,6 +69,15 @@ if [ -n "$ckptdir" ]; then
   echo "$ckptdir" >&2
   exit 1
 fi
+# One canonicalizer: CanonicalJson's streaming token pass is the only
+# JSON re-serialization, so a tree rendering (readTree, ObjectNode)
+# cannot grow back beside it.
+tree=$(grep -rnE 'readTree|ObjectNode' src/main/scala || true)
+if [ -n "$tree" ]; then
+  echo "[precommit] JSON tree API under src/main/scala; canonicalize with graft.plans.CanonicalJson:" >&2
+  echo "$tree" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile
 sbt -batch 'runMain graft.Scratch'
 echo "[precommit] OK"
