@@ -22,7 +22,6 @@ object MovementBaseline {
     val out = if (args.length > 1) args(1) else "tools/movement_baseline_sf0001.json"
     val spark = Session.local(4)
     graft.plans.GraftFunctions.register(spark)
-    graft.plans.GraftFunctions.installOptimizations(spark)
 
     val mv = new MovementMeter
     spark.sparkContext.addSparkListener(mv)

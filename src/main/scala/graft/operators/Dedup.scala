@@ -28,29 +28,6 @@ object Dedup {
 
   private def contentKey: Seq[Column] = contentCols.map(col)
 
-  /** Canonical re-serialization of a JSON column — the events-side
-    * analog of the reference's re-serialize-before-hash
-    * (Deduplicator.java:71-106; see also
-    * HfpSource.canonicalContentKey). Two props payloads that differ
-    * only in key order or whitespace become one content identity;
-    * nested objects sort recursively; unparseable input passes
-    * through VERBATIM so distinct garbage stays distinct (see
-    * [[graft.plans.CanonicalJson]] — a schema-based from_json would
-    * null out both cases and merge unrelated payloads).
-    */
-  def canonicalJson(c: Column): Column = graft.plans.CanonicalJson(c)
-
-  /** The reference's storable content hash: murmur3_128(seed) of a
-    * content column's bytes (Deduplicator.java:27-28 pins seed 42 so
-    * hash VALUES can live in external storage and match across
-    * engines). Dedup itself keys on the raw content columns — a
-    * 128-bit digest buys nothing inside one job — but pipelines that
-    * exchange hashes with the reference service (or a shared Redis)
-    * key on this instead: `events.groupBy(contentHash128(col(...)))`.
-    */
-  def contentHash128(c: Column, seed: Int = 42): Column =
-    graft.plans.Murmur3_128(c.cast("binary"), seed)
-
   /** Arrival order within a content group: reference processes in
     * message order; (ts, event_id) is the deterministic batch analog.
     */

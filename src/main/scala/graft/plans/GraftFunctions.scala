@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, BitwiseAnd, BitwiseOr, Cast, Divide, Expression, ExpressionInfo, Literal, Multiply, NullIf, ShiftLeft, ShiftRight, Size, Sqrt}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, BitwiseAnd, BitwiseOr, Cast, Divide, Expression, Literal, Multiply, NullIf, ShiftLeft, ShiftRight, Size, Sqrt}
 import org.apache.spark.sql.types.DoubleType
 
 /** SQL-surface registration of graft's custom Catalyst kernels, so
@@ -25,11 +24,8 @@ import org.apache.spark.sql.types.DoubleType
   *  - `audio_fp(bin)` — 4×16-bit chromaprint-shaped audio
   *    fingerprint bands (the mm_audio_fp kernel, SQL-driven)
   *
-  * Two entry points: [[GraftFunctions.register]] installs into an
-  * already-running session (temp functions); [[GraftExtensions]] is a
-  * `SparkSessionExtensions` injector for
-  * `spark.sql.extensions=graft.plans.GraftExtensions` at session
-  * build time.
+  * One entry point: [[GraftFunctions.register]] installs them into a
+  * running session as temp functions.
   */
 object GraftFunctions {
 
@@ -39,7 +35,7 @@ object GraftFunctions {
       s"$what must be an integer literal, got $other")
   }
 
-  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "vec_dot" -> { args => VecDot(args(0), args(1)) },
     "vec_l2sq" -> { args => VecL2Sq(args(0), args(1)) },
     "vec_floor_scale" -> { args =>
@@ -109,25 +105,5 @@ object GraftFunctions {
     builders.foreach { case (name, b) =>
       registry.createOrReplaceTempFunction(name, b, "built-in")
     }
-  }
-
-  /** Install graft's optimizer rules on a LIVE session (idempotent) —
-    * `experimental.extraOptimizations` runs them after the built-in
-    * optimizer batches. Session-build-time installs go through
-    * [[GraftExtensions]] instead.
-    */
-  def installOptimizations(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      (spark.experimental.extraOptimizations :+ VecDotRewrite).distinct
-}
-
-/** `spark.sql.extensions` injector: functions + optimizer rules. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.builders.foreach { case (name, b) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft", name), b))
-    }
-    ext.injectOptimizerRule(_ => VecDotRewrite)
   }
 }

@@ -1,78 +1,30 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** CSV/TSV document source — the other interchange format corpora
   * actually arrive in (metadata dumps, crawl indexes, labeling
-  * exports). Same design rules as [[JsonlSource]]: an EXPLICIT
-  * schema (never inference — that is a full extra pass at 100 TB),
-  * PERMISSIVE parsing with corrupt-record capture so a mangled row
-  * quarantines instead of failing the job, and the `documents`
-  * contract shape so the whole dedup/quality/packing surface runs
-  * unchanged on CSV ingest.
+  * exports), on the [[DocumentSource]] contract.
   *
   * CSV-specific scale notes baked in: `multiLine` stays OFF (a
   * multi-line CSV file cannot split across executors — one file
   * becomes one task; quoted newlines belong in JSONL, not CSV at
   * scale), and the header row is declared, not sniffed.
   */
-object CsvSource {
+object CsvSource extends DocumentSource {
 
-  val CorruptCol = "_corrupt"
+  private def options(sep: String): Map[String, String] =
+    permissive ++ Map("header" -> "true", "sep" -> sep)
 
-  /** documents-contract schema + the corrupt-record capture column. */
-  val schema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType),
-    StructField(CorruptCol, StringType)))
-
-  private def reader(spark: SparkSession, sep: String) =
-    spark.read
-      .schema(schema)
-      .option("header", "true")
-      .option("sep", sep)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-
-  /** Batch read: well-formed rows carry null [[CorruptCol]]; rows
-    * that fail to parse against the schema carry the raw line there.
+  /** Batch read: a row that fails to parse against the schema lands
+    * in [[CorruptCol]].
     */
   def read(spark: SparkSession, path: String, sep: String = ","): DataFrame =
-    reader(spark, sep).csv(path)
+    spark.read.schema(schema).options(options(sep)).csv(path)
 
   /** Streaming read over a drop folder (file-arrival stream). */
   def readStream(spark: SparkSession, path: String, sep: String = ","): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("header", "true")
-      .option("sep", sep)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .csv(path)
-
-  /** The clean rows, contract-shaped (corrupt column dropped). */
-  def clean(df: DataFrame): DataFrame =
-    df.filter(col(CorruptCol).isNull && col("doc_id").isNotNull)
-      .drop(CorruptCol)
-
-  /** Quarantine rows from a PRE-PERSISTED parse — same
-    * QUERY_ONLY_CORRUPT_RECORD_COLUMN lifecycle as
-    * [[JsonlSource.corrupt]]; use [[withCorrupt]] unless the caller
-    * already owns a persisted frame.
-    */
-  def corrupt(df: DataFrame): DataFrame =
-    df.filter(col(CorruptCol).isNotNull).select(col(CorruptCol).as("raw_line"))
-
-  /** Cache-owning bracket over [[corrupt]] (cannot leak a cache). */
-  def withCorrupt[A](df: DataFrame)(use: DataFrame => A): A = {
-    df.cache()
-    try use(corrupt(df)) finally df.unpersist()
-  }
+    spark.readStream.schema(schema).options(options(sep)).csv(path)
 
   /** Write a contract-shaped frame as headered CSV shards. */
   def write(df: DataFrame, path: String, sep: String = ",", shards: Int = 0): Unit = {

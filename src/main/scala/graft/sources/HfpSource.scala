@@ -43,6 +43,24 @@ object HfpSource {
     * job or permanently fail the streaming query (which re-reads the
     * same file on restart). Malformed lines are dropped; malformed
     * numeric/timestamp fields go null via try_* variants.
+    *
+    * This is the ingest seam, batch or streaming: everything
+    * downstream (dedup, analytics) sees only the parsed frame, never
+    * the bus. [[readFeedStream]] feeds it text files; the reference's
+    * Pulsar consumer (Main.java:17-24, `environment.conf` pulsar
+    * block) maps onto it 1:1 with the public StreamNative
+    * `pulsar-spark` connector, which this offline build does not ship:
+    * {{{
+    * spark.readStream.format("pulsar")
+    *   .option("service.url", serviceUrl)          // pulsar://host:6650
+    *   .option("topicsPattern", topicsPattern)     // multi-topic merge
+    *   .load()
+    *   .selectExpr("CAST(value AS STRING) AS line")
+    * }}}
+    * (same for batch `spark.read`). The reference's `multipleTopics`
+    * merge is the connector's `topics`/`topicsPattern` option; its
+    * producer side is `writeStream.format("pulsar")` on the deduped
+    * frame.
     */
   def parseLines(lines: DataFrame): DataFrame = {
     def part(i: Int): Column = SpaceCut(col("line"), i)
@@ -74,13 +92,6 @@ object HfpSource {
         col("vp.line").as("line"), col("vp.start").as("start"),
         col("payload"))
   }
-
-  /** Content identity of an HFP message for dedup: the raw payload
-    * bytes. Sensitive to JSON key order / whitespace — prefer
-    * [[canonicalContentKey]], the analog of the reference's
-    * re-serialization.
-    */
-  def contentKey: Column = col("payload")
 
   /** CANONICAL content identity: the payload re-serialized with
     * recursively sorted keys ([[graft.plans.CanonicalJson]]) — the
@@ -145,13 +156,5 @@ object HfpSource {
     * messages; downstream dedup/analytics are identical).
     */
   def readFeedStream(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    readStreamVia(spark, FileFeed(path))
-
-  /** Parse any [[FeedSource]] (batch). */
-  def readVia(spark: org.apache.spark.sql.SparkSession, src: FeedSource): DataFrame =
-    parseLines(src.read(spark))
-
-  /** Parse any [[FeedSource]] (streaming). */
-  def readStreamVia(spark: org.apache.spark.sql.SparkSession, src: FeedSource): DataFrame =
-    parseLines(src.readStream(spark))
+    parseLines(spark.readStream.text(path).withColumnRenamed("value", "line"))
 }

@@ -1,82 +1,28 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** JSONL document source — the interchange format LLM data pipelines
   * actually ship (one JSON object per line: Common Crawl derivatives,
-  * RedPajama/Dolma-style corpora). Batch + streaming readers over an
-  * explicit schema (NEVER schema inference at 100 TB: inference is a
-  * full extra pass over the data before the real one), with
-  * PERMISSIVE corrupt-record capture so one mangled line quarantines
-  * instead of failing a 1000-executor job.
+  * RedPajama/Dolma-style corpora), on the [[DocumentSource]] contract.
   *
-  * The schema matches the `documents` contract table, so everything
-  * downstream (dedup, quality, packing) runs unchanged on JSONL
-  * ingest. Scale notes: line-delimited JSON splits at newlines, so
-  * files parallelize across executors without coordination
-  * (multiline JSON does NOT — one file = one task); compressed
-  * inputs should be zstd/bzip2 (splittable-friendly blocks) or
-  * many-file gzip, never one giant .gz.
+  * Scale notes: line-delimited JSON splits at newlines, so files
+  * parallelize across executors without coordination (multiline JSON
+  * does NOT — one file = one task); compressed inputs should be
+  * zstd/bzip2 (splittable-friendly blocks) or many-file gzip, never
+  * one giant .gz.
   */
-object JsonlSource {
+object JsonlSource extends DocumentSource {
 
-  val CorruptCol = "_corrupt"
-
-  /** documents-contract schema + the corrupt-record capture column. */
-  val schema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType),
-    StructField(CorruptCol, StringType)))
-
-  /** Batch read: well-formed rows carry null [[CorruptCol]]; corrupt
-    * lines carry the raw line there with null data columns.
-    */
+  /** Batch read: a corrupt line lands in [[CorruptCol]]. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(path)
+    spark.read.schema(schema).options(permissive).json(path)
 
   /** Streaming read over a directory (file-arrival stream) — the
     * JSONL drop-folder ingest; same schema and corrupt capture.
     */
   def readStream(spark: SparkSession, path: String): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(path)
-
-  /** The clean rows, contract-shaped (corrupt column dropped). */
-  def clean(df: DataFrame): DataFrame =
-    df.filter(col(CorruptCol).isNull && col("doc_id").isNotNull)
-      .drop(CorruptCol)
-
-  /** The quarantine rows: raw corrupt lines for repair/audit, from a
-    * PRE-PERSISTED parse. Spark refuses to answer a query that
-    * references ONLY the corrupt column of a raw scan
-    * (QUERY_ONLY_CORRUPT_RECORD_COLUMN — it would have to re-parse
-    * pruned rows), so the caller must hold `df` cached while this
-    * result is consumed; [[withCorrupt]] brackets that lifecycle so
-    * nothing stays pinned in executor memory afterwards.
-    */
-  def corrupt(df: DataFrame): DataFrame =
-    df.filter(col(CorruptCol).isNotNull).select(col(CorruptCol).as("raw_line"))
-
-  /** Cache-owning bracket over [[corrupt]]: persist the parse, run
-    * `use` on the quarantine rows, always unpersist. The only path
-    * that caches on the caller's behalf — and it cannot leak.
-    */
-  def withCorrupt[A](df: DataFrame)(use: DataFrame => A): A = {
-    df.cache()
-    try use(corrupt(df)) finally df.unpersist()
-  }
+    spark.readStream.schema(schema).options(permissive).json(path)
 
   /** Write a contract-shaped frame as JSONL shards. */
   def write(df: DataFrame, path: String, shards: Int = 0): Unit = {

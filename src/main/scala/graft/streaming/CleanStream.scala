@@ -22,20 +22,15 @@ import graft.operators.TextAnalysis
   */
 object CleanStream {
 
-  /** [[TextAnalysis.docsGopherRulesOn]] over a streaming frame: the
-    * per-rule evidence columns plus the conjunctive `pass` flag,
-    * emitted per arriving document.
-    */
-  def gopherGate(docs: DataFrame,
-                 minWords: Int = 25, maxWords: Int = 80): DataFrame =
-    TextAnalysis.docsGopherRulesOn(docs, minWords, maxWords)
-
-  /** The gate reduced to the keep decision — the shape an ingest
-    * pipeline chains into a streaming dedup stage.
+  /** [[TextAnalysis.docsGopherRulesOn]] over a streaming frame (the
+    * gate itself: per-rule evidence columns plus the conjunctive
+    * `pass` flag, per arriving document) reduced to the keep decision
+    * — the shape an ingest pipeline chains into a streaming dedup
+    * stage.
     */
   def gopherKeep(docs: DataFrame,
                  minWords: Int = 25, maxWords: Int = 80): DataFrame =
-    gopherGate(docs, minWords, maxWords)
+    TextAnalysis.docsGopherRulesOn(docs, minWords, maxWords)
       .filter(org.apache.spark.sql.functions.col("pass"))
       .select("doc_id", "n_words")
 

@@ -71,12 +71,11 @@ object DedupStream {
     def anchorMs: Option[Long] = a
   }
 
-  /** Walk a content-key group, continuing from an optional anchor:
-    * emit primes, drop duplicates. Returns (emitted primes, final
-    * anchor). Seq-based, for [[dedupTtlChain]]'s bounded per-key slice
-    * and the replay oracles; the batch operator walks pre-sorted
-    * partitions with a bare [[ChainWalker]] and never materializes a
-    * group.
+  /** Walk a content-key group in any order, continuing from an
+    * optional anchor: sort it by (ts ms, event_id), emit primes, drop
+    * duplicates. Returns (emitted primes, final anchor). Seq-based, for
+    * the replay oracles; [[dedupTtlChain]] and the batch operator drive
+    * a bare [[ChainWalker]] over input that is already sorted.
     */
   def chainPrimes(events: Seq[Ev], ttlMs: Long,
                   anchor: Option[Long]): (Seq[Ev], Option[Long]) = {
@@ -133,7 +132,7 @@ object DedupStream {
     * the reference's `multipleTopics` / `topicsPattern` consumer
     * (environment.conf:7-10; a Pulsar connector surfaces the merged
     * stream directly via its `topicsPattern` option, see
-    * [[graft.sources.FeedSource]]): N per-topic streams unioned BY
+    * [[graft.sources.HfpSource.parseLines]]): N per-topic streams unioned BY
     * NAME into ONE logical stream. A streaming union is free — no
     * shuffle, no state of its own — and the downstream stateful dedup
     * keys on CONTENT, so cross-topic duplicates (the redundant-feed
@@ -231,8 +230,9 @@ object DedupStream {
                     watermark: String = "10 minutes"): Dataset[Ev] = {
     import events.sparkSession.implicits._
     walkKeyed[String, PrimeAnchor, Ev](events, watermark, contentKeyOf) { (batch, st) =>
-      val (emitted, anchor) = chainPrimes(batch, ttlMs, st.map(_.primeTsMs))
-      (emitted, anchor.map(p => (PrimeAnchor(p), p + ttlMs)))
+      val w = new ChainWalker(ttlMs, st.map(_.primeTsMs))
+      val primes = batch.filter(e => w.admit(e.ts.getTime))
+      (primes, w.anchorMs.map(p => (PrimeAnchor(p), p + ttlMs)))
     }
   }
 

@@ -58,7 +58,7 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq("""{"a":1,"b":2}""", """{ "b":2, "a":1 }""", """{"a":1,"b":3}""")
       .toDF("props")
-    val c = df.select(Dedup.canonicalJson(col("props")).as("c"))
+    val c = df.select(graft.plans.CanonicalJson(col("props")).as("c"))
       .collect().map(_.getString(0))
     assert(c(0) === c(1), "key order / whitespace must not change identity")
     assert(c(0) !== c(2), "different values must stay distinct")
@@ -72,7 +72,7 @@ class DedupSpec extends SparkSpec {
       """{"z":{"b":9,"a":1},"a":"x"}""", // nested value differs → distinct
       "not json at all",
       "also { not json").toDF("props")
-    val c = df.select(Dedup.canonicalJson(col("props")).as("c"))
+    val c = df.select(graft.plans.CanonicalJson(col("props")).as("c"))
       .collect().map(_.getString(0))
     assert(c(0) === c(1), "nested key order must not change identity")
     assert(c(0) !== c(2), "nested values must stay distinct")

@@ -28,6 +28,18 @@ class HfpSourceSpec extends SparkSpec {
     assert(r1.getAs[String]("desi") === "57")
     assert(math.abs(r1.getAs[Double]("lat") - 60.237024) < 1e-9)
     assert(r1.getAs[Double]("spd") === 8.53)
+    // the same lines read from a text file parse to the same rows
+    val dir = java.nio.file.Files.createTempDirectory("hfp_text").toFile
+    try {
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(dir.getAbsolutePath, "feed.txt"),
+        sample.mkString("\n").getBytes("UTF-8"))
+      val fromFile = HfpSource.parseLines(
+        spark.read.text(dir.getAbsolutePath).withColumnRenamed("value", "line"))
+      assert(fromFile.collect().map(_.toString).sorted === rows.map(_.toString).sorted)
+    } finally {
+      dir.listFiles().foreach(_.delete()); dir.delete()
+    }
   }
 
   test("wire garbage is dropped or nulled, never a crash (ANSI mode)") {
@@ -52,7 +64,7 @@ class HfpSourceSpec extends SparkSpec {
     import spark.implicits._
     val df = HfpSource.parseLines(sample.toDF("line"))
     assert(df.count() === 3)
-    assert(df.select(HfpSource.contentKey).distinct().count() === 2)
+    assert(df.select(col("payload")).distinct().count() === 2)
   }
 
   test("canonical content key collapses key-reordered JSON payloads (re-serialize analog)") {
@@ -61,7 +73,7 @@ class HfpSourceSpec extends SparkSpec {
     val b = """2018-10-09T04:32:53.000000+0000 /hfp/v1/journey/ongoing/bus/0018/00640/x {"VP":{"veh":640,  "spd":8.53,"desi":"57","dir":"1"}}"""
     val df = HfpSource.parseLines(Seq(a, b).toDF("line"))
     // raw payload strings differ (key order + whitespace)...
-    assert(df.select(HfpSource.contentKey).distinct().count() === 2)
+    assert(df.select(col("payload")).distinct().count() === 2)
     // ...but the canonical re-serialized key collapses them to one prime
     assert(df.select(HfpSource.canonicalContentKey).distinct().count() === 1)
     // two DIFFERENT malformed payloads must NOT share a canonical key
@@ -179,21 +191,6 @@ class HfpSourceSpec extends SparkSpec {
     // bytes EQUAL payload 1's, and raw id-1 bytes were canonicalized
     // away, so both survive; 8,9 distinct garbage
     assert(survivors === Set(1L, 3L, 5L, 6L, 7L, 8L, 9L))
-  }
-
-  test("batch + streaming reads go through the FeedSource seam unchanged") {
-    import graft.sources.{FileFeed, MemoryFeed}
-    val viaMemory = HfpSource.readVia(spark, MemoryFeed(sample))
-    assert(viaMemory.count() === 3)
-    val dir = java.nio.file.Files.createTempDirectory("hfp_seam").toFile
-    try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(dir.getAbsolutePath, "feed.txt"),
-        sample.mkString("\n").getBytes("UTF-8"))
-      assert(HfpSource.readVia(spark, FileFeed(dir.getAbsolutePath)).count() === 3)
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete()
-    }
   }
 
   test("streaming feed: files -> parse -> dedup, end to end") {

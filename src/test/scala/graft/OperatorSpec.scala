@@ -2856,6 +2856,21 @@ class OperatorSpec extends SparkSpec {
       "approx retention fell back to exact distinct")
   }
 
+  test("fixed-size sample takes exactly k per stratum, hash-ranked") {
+    import graft.operators.Sampling
+    val k = 20
+    val got = Sampling.docsSampleFixed(spark, sf, k).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    val docs = Tables.documents(spark, sf).select("doc_id", "lang").collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    docs.groupBy(_._2).foreach { case (lang, ds) =>
+      val expect = ds.map(_._1).sortBy(id => (Sampling.hash32Of(id), id)).take(k)
+      val gotLang = got.filter(_._2 == lang).sortBy(_._3)
+      assert(gotLang.map(_._1).toSeq === expect.toSeq, s"lang $lang")
+      assert(gotLang.map(_._3).toSeq === (1L to math.min(k, ds.length)).toSeq)
+    }
+  }
+
   test("two-phase exactly-k sample equals the single-pass rank on any partition layout") {
     import graft.operators.Sampling
     val expect = Sampling.docsSampleFixed(spark, sf).collect()

@@ -84,51 +84,6 @@ class SqlSurfaceSpec extends SparkSpec {
       .map { case (a, b) => morton(a, b) })
   }
 
-  test("VecDotRewrite swaps the declarative HOF dot product for the kernel, semantics intact") {
-    import spark.implicits._
-    GraftFunctions.installOptimizations(spark)
-    GraftFunctions.installOptimizations(spark) // idempotent
-    val hof = "aggregate(zip_with(a, b, (x, y) -> x * y), 0.0d, (acc, v) -> acc + v)"
-
-    // parquet-backed frames (literal frames fold to a LocalRelation
-    // before the plan can be inspected)
-    val emb = Tables.embeddings(spark, sf).limit(5)
-
-    // double arrays: rewritten, result == the self dot product
-    val d = emb.selectExpr("vec_id",
-        "transform(embedding, x -> CAST(x AS DOUBLE)) AS a",
-        "transform(embedding, x -> CAST(x AS DOUBLE)) AS b")
-      .selectExpr("vec_id", s"$hof AS d")
-    assert(d.queryExecution.optimizedPlan.toString.toLowerCase.contains("vecdotstrict"),
-      s"rewrite did not fire:\n${d.queryExecution.optimizedPlan}")
-    val expect = emb.select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[Float](1).foldLeft(0.0)((s, x) => s + x.toDouble * x.toDouble)).toMap
-    d.collect().foreach(r => assert(r.getDouble(1) === expect(r.getLong(0))))
-
-    // float arrays with explicit double casts: rewritten (the kernel
-    // widens per element exactly the same way)
-    val f = emb.selectExpr("embedding AS a", "embedding AS b")
-      .selectExpr(
-        "aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0d, (acc, v) -> acc + v) AS d")
-    assert(f.queryExecution.optimizedPlan.toString.toLowerCase.contains("vecdotstrict"))
-    f.collect() // executes the codegen'd kernel path
-
-    // bare float multiply does FLOAT arithmetic — must NOT be rewritten
-    val bare = emb.selectExpr("embedding AS a", "embedding AS b")
-      .selectExpr(s"$hof AS d")
-    assert(!bare.queryExecution.optimizedPlan.toString.toLowerCase.contains("vecdotstrict"))
-
-    // HOF null semantics preserved through the rewrite: ragged arrays
-    // and null elements yield null, not a prefix dot
-    val ragged = Seq((Seq(1.0, 2.0), Seq(1.0, 2.0, 3.0))).toDF("a", "b")
-      .selectExpr(s"$hof AS d").collect()(0)
-    assert(ragged.isNullAt(0))
-    val withNull = Seq((Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](1.0, 2.0)))
-      .toDF("a", "b").selectExpr(s"$hof AS d").collect()(0)
-    assert(withNull.isNullAt(0))
-  }
-
   test("registration is idempotent and mixed float/double vec_dot works") {
     GraftFunctions.register(spark)
     GraftFunctions.register(spark)

@@ -909,7 +909,7 @@ class StreamingSpec extends SparkSpec {
     val (b1, rest) = docs.splitAt(docs.length / 3)
     val (b2, b3) = rest.splitAt(1)
     val input = MemoryStream[(Long, String)]
-    val out = CleanStream.gopherGate(input.toDF().toDF("doc_id", "text"))
+    val out = TextAnalysis.docsGopherRulesOn(input.toDF().toDF("doc_id", "text"))
     val q = out.writeStream.format("memory").queryName("gopher_gate")
       .outputMode(OutputMode.Append).start()
     try {

@@ -78,6 +78,17 @@ if [ -n "$tree" ]; then
   echo "$tree" >&2
   exit 1
 fi
+# One path per job at the library's edges: GraftFunctions.register is
+# the only SQL-surface install and HfpSource.parseLines over a one-column
+# `line` frame the only ingest seam, so an optimizer-rule rewrite or a
+# feed-source abstraction beside them cannot grow back.
+edges=$(grep -rnE 'injectOptimizerRule|extraOptimizations|FeedSource' src/main/scala || true)
+if [ -n "$edges" ]; then
+  echo "[precommit] second SQL-surface or ingest path under src/main/scala;" \
+    "install with GraftFunctions.register, ingest through HfpSource.parseLines:" >&2
+  echo "$edges" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile
 sbt -batch 'runMain graft.Scratch'
 echo "[precommit] OK"
