@@ -28,18 +28,6 @@ class HfpSourceSpec extends SparkSpec {
     assert(r1.getAs[String]("desi") === "57")
     assert(math.abs(r1.getAs[Double]("lat") - 60.237024) < 1e-9)
     assert(r1.getAs[Double]("spd") === 8.53)
-    // the same lines read from a text file parse to the same rows
-    val dir = java.nio.file.Files.createTempDirectory("hfp_text").toFile
-    try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(dir.getAbsolutePath, "feed.txt"),
-        sample.mkString("\n").getBytes("UTF-8"))
-      val fromFile = HfpSource.parseLines(
-        spark.read.text(dir.getAbsolutePath).withColumnRenamed("value", "line"))
-      assert(fromFile.collect().map(_.toString).sorted === rows.map(_.toString).sorted)
-    } finally {
-      dir.listFiles().foreach(_.delete()); dir.delete()
-    }
   }
 
   test("wire garbage is dropped or nulled, never a crash (ANSI mode)") {
@@ -191,6 +179,25 @@ class HfpSourceSpec extends SparkSpec {
     // bytes EQUAL payload 1's, and raw id-1 bytes were canonicalized
     // away, so both survive; 8,9 distinct garbage
     assert(survivors === Set(1L, 3L, 5L, 6L, 7L, 8L, 9L))
+  }
+
+  test("batch + streaming reads go through the FeedSource seam unchanged") {
+    // memory lines and a text file (what the file stream reads) take the
+    // one parseLines path and parse to the same rows
+    import spark.implicits._
+    val viaMemory = HfpSource.parseLines(sample.toDF("line")).collect()
+    assert(viaMemory.length === 3)
+    val dir = java.nio.file.Files.createTempDirectory("hfp_seam").toFile
+    try {
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(dir.getAbsolutePath, "feed.txt"),
+        sample.mkString("\n").getBytes("UTF-8"))
+      val viaFile = HfpSource.parseLines(
+        spark.read.text(dir.getAbsolutePath).withColumnRenamed("value", "line")).collect()
+      assert(viaFile.map(_.toString).sorted === viaMemory.map(_.toString).sorted)
+    } finally {
+      dir.listFiles().foreach(_.delete()); dir.delete()
+    }
   }
 
   test("streaming feed: files -> parse -> dedup, end to end") {
