@@ -146,8 +146,7 @@ object NearDup {
   }
 
   /** Span-level duplicate LOCALIZATION inside the corpus — for every
-    * near-duplicate pair (the exact-jaccard edge set, or a
-    * precomputed pair frame via the audit-family seam), the longest
+    * near-duplicate pair (the exact-jaccard edge set), the longest
     * contiguous shared token span and where it sits in both
     * documents. [[docsOverlapSpans]] answers "what leaked into the
     * eval set"; this answers "WHAT exactly do these two training
@@ -166,12 +165,11 @@ object NearDup {
     * (b-side).
     */
   def docsDupSpans(spark: SparkSession, dir: String, threshold: Double = 0.5,
-                   k: Int = 5, minRun: Int = 2,
-                   precomputedPairs: Option[DataFrame] = None): DataFrame = {
+                   k: Int = 5, minRun: Int = 2): DataFrame = {
     // pairs feed three consumers (two id-prune broadcasts + the hit
     // join) — checkpoint so the PPJoin candidate join runs once
     // (measured eager ≈ lazy here; lazy is the file convention)
-    val pairs = precomputedPairs.getOrElse(jaccardPairs(spark, dir, threshold))
+    val pairs = jaccardPairs(spark, dir, threshold)
       .select(col("a_id"), col("b_id"))
       .localCheckpoint(eager = false)
     val ps = Tables.documents(spark, dir)
@@ -221,12 +219,12 @@ object NearDup {
     * detector (exact misses paraphrases, jaccard misses short docs,
     * simhash misses low-overlap containment); the all-zeros cell is
     * the clean-corpus denominator. Three existing candidate
-    * pipelines feed three semi-join flags; one ≤8-key count.
+    * pipelines feed three semi-join flags; one ≤8-key count. The
+    * query computes its own jaccard and simhash pair sets, each
+    * materialized once, on two driver threads.
     */
   def docsDetectorVenn(spark: SparkSession, dir: String,
-                       threshold: Double = 0.5, maxHamming: Int = 3,
-                       jacPairs: Option[DataFrame] = None,
-                       simPairs: Option[DataFrame] = None): DataFrame = {
+                       threshold: Double = 0.5, maxHamming: Int = 3): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val exact = docs.select(col("doc_id"), md5(col("text")).as("h"))
       .withColumn("n", count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("h")))
@@ -235,22 +233,20 @@ object NearDup {
     def endpoints(pairs: DataFrame, a: String, b: String) =
       pairs.select(col(a).as("doc_id")).union(pairs.select(col(b).as("doc_id")))
         .distinct()
-    // The default (standalone-query) path materializes each detector's
-    // pair frame ONCE (the dedupAuditFamily seam's shape): `endpoints`
+    // Each detector's pair frame is materialized ONCE: `endpoints`
     // consumes the frame in BOTH union branches, and Catalyst plans
     // the branches as separate physical subtrees (self-join expression
     // ids defeat ReuseExchange), so without the checkpoint the whole
     // candidate join runs twice — measured at sf10 as 22.4 GB shuffle
     // for this query vs 12.0 GB for docs_jaccard_pairs alone. The
     // eager localCheckpoint pins one RDD instance, halving the
-    // dominant jaccard join. Callers passing precomputed frames (the
-    // family seam) have already materialized them.
+    // dominant jaccard join.
     // round-13 (guide §2.6 — overlap independent jobs): the two
     // detector pair sets are INDEPENDENT eager materializations, so
     // they run on two driver threads and the wall is max(jaccard,
     // simhash) instead of the sum; Spark's scheduler interleaves the
     // two job DAGs and the tail of one back-fills the other's idle
-    // cores. Precomputed frames resolve instantly on their thread.
+    // cores.
     val (jacFrame, simFrame) = {
       import scala.concurrent.{Await, Future, ExecutionContext}
       import scala.concurrent.duration.Duration
@@ -258,10 +254,10 @@ object NearDup {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       try {
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val jf = Future(jacPairs.getOrElse(
-          jaccardPairs(spark, dir, threshold).select("a_id", "b_id").localCheckpoint()))
-        val sf = Future(simPairs.getOrElse(
-          simhashPairs(spark, dir, maxHamming).select("a_id", "b_id").localCheckpoint()))
+        val jf = Future(
+          jaccardPairs(spark, dir, threshold).select("a_id", "b_id").localCheckpoint())
+        val sf = Future(
+          simhashPairs(spark, dir, maxHamming).select("a_id", "b_id").localCheckpoint())
         // round-14 (ADVICE): settle BOTH futures before rethrowing
         // either failure — an early rethrow on one leg left the other
         // leg's in-flight Spark jobs running past the exception.
@@ -405,38 +401,6 @@ object NearDup {
   def jaccardPairs(spark: SparkSession, dir: String, threshold: Double = 0.5,
                    verifyBands: Int = 0): DataFrame =
     jaccardPairsOn(Tables.documents(spark, dir), threshold, verifyBands)
-
-  /** The dedup AUDIT FAMILY (detector Venn, group-size histogram,
-    * keep/drop decision) driven through ONE shared pair computation —
-    * the seam for callers running the whole audit, who otherwise pay
-    * the jaccard candidate join once per query (the one-query-one-
-    * plan contract each `SparkEntry.queries` entry keeps). The exact
-    * jaccard edge set and the simhash edge set are each materialized
-    * once (eager localCheckpoint) and fed to all three consumers
-    * via their precomputed-pairs parameters, and the group
-    * labeling (the min-label closure) is computed once and shared by
-    * the histogram and keep/drop stages; outputs are identical to
-    * the recompute defaults (the group queries' oracle replays the
-    * exact jaccard edges, which PPJoin and verified LSH banding both
-    * produce — OperatorSpec pins the equality). Measured on sf0.1 at
-    * local[32]: the family drops from ~11.5 s (three independent
-    * plans) to ~7.2 s (−37%) through the seam — the candidate join
-    * runs once instead of three times, the closure once instead of
-    * twice.
-    */
-  def dedupAuditFamily(spark: SparkSession, dir: String,
-                       threshold: Double = 0.5, maxHamming: Int = 3)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val jac = jaccardPairs(spark, dir, threshold)
-      .select("a_id", "b_id").localCheckpoint()
-    val sim = simhashPairs(spark, dir, maxHamming)
-      .select("a_id", "b_id").localCheckpoint()
-    val groups = dedupGroups(spark, dir, threshold,
-      precomputedPairs = Some(jac)).localCheckpoint()
-    (docsDetectorVenn(spark, dir, threshold, maxHamming, Some(jac), Some(sim)),
-      docsGroupSizesOf(groups),
-      dedupKeepOf(spark, dir, groups))
-  }
 
   /** [[jaccardPairs]] over any (doc_id, text) frame — the seam the
     * randomized property tests drive with synthetic corpora.
@@ -944,13 +908,6 @@ object NearDup {
       .distinct()
   }
 
-  /** The corpus's production (wrapping-family) minhash signatures —
-    * the (doc_id, sig) frame the LSH banding consumes, exposed as
-    * the seam the streaming candidate generator's spec feeds.
-    */
-  def minhashLshSignatures(spark: SparkSession, dir: String): DataFrame =
-    minhashSignatures(shingled(spark, dir))
-
   /** The (doc_id, band, bh) LSH bucket keys of a (doc_id, sig)
     * frame — band b's key hashes that band's `rowsPerBand` signature
     * components. A STATELESS projection, so it applies unchanged to
@@ -1067,11 +1024,11 @@ object NearDup {
     * output into an actionable keep/drop decision (keep group_id ==
     * doc_id, drop the rest).
     *
-    * Edges default to the MinHash-LSH near-dup pairs — at corpus
-    * scale that is the only viable pair source (exact Jaccard is the
-    * small-scale baseline), and every emitted edge is exact-verified,
-    * so the component structure is built on true ≥-threshold pairs
-    * either way.
+    * Edges are the MinHash-LSH near-dup pairs, computed by this
+    * query itself — at corpus scale that is the only viable pair
+    * source (exact Jaccard is the small-scale baseline), and every
+    * emitted edge is exact-verified, so the component structure is
+    * built on true ≥-threshold pairs either way.
     *
     * Iterative min-label propagation (the standard Pregel-style
     * rendering): each round, every node takes the min of its own and
@@ -1081,11 +1038,12 @@ object NearDup {
     * bound, and blowing it THROWS rather than silently returning
     * half-propagated labels (a wrong group id downstream means
     * keeping multiple "canonical" docs from one duplicate cluster);
-    * raise maxIters — or use [[dedupGroupsLogRound]] (large-star/
-    * small-star alternation, O(log n) rounds, same output) — for
-    * corpora with long version chains. Min-label stays the default:
-    * near-dup clusters are usually dense (diameter 2-3), where its
-    * round count is lower and each round is cheaper.
+    * raise maxIters — or run [[starComponents]] over the same pairs
+    * (large-star/small-star alternation, O(log n) rounds, same
+    * labeling, NearDupSpec pins it) — for corpora with long version
+    * chains. Min-label stays the default: near-dup clusters are
+    * usually dense (diameter 2-3), where its round count is lower
+    * and each round is cheaper.
     * Each round is one equi-join + one map-combinable min-aggregate;
     * `localCheckpoint` truncates lineage so round N doesn't re-run
     * rounds 1..N-1 (at production scale, use reliable checkpointing
@@ -1093,17 +1051,13 @@ object NearDup {
     * label changed), not a collect.
     */
   def dedupGroups(spark: SparkSession, dir: String, threshold: Double = 0.5,
-                  maxIters: Int = 20,
-                  precomputedPairs: Option[DataFrame] = None): DataFrame = {
+                  maxIters: Int = 20): DataFrame = {
     // Materialize the pair source ONCE before the symmetric union:
     // both union branches consume `pairs`, and without the checkpoint
     // the LSH candidate join + verify executes once per branch (the
-    // same double-evaluation docsDetectorVenn documents). Seam callers
-    // pass an already-materialized frame — don't re-copy it.
-    val pairs = precomputedPairs.map(_.select("a_id", "b_id"))
-      .getOrElse(
-        minhashLshPairs(spark, dir, threshold).select("a_id", "b_id")
-          .localCheckpoint())
+    // same double-evaluation docsDetectorVenn documents).
+    val pairs = minhashLshPairs(spark, dir, threshold).select("a_id", "b_id")
+      .localCheckpoint()
     val edges = pairs
       .union(pairs.select(col("b_id"), col("a_id")))
       .toDF("src", "dst")
@@ -1165,17 +1119,9 @@ object NearDup {
     * and partitionings. One join (groups ⋈ quality, both keyed by
     * doc_id) + one window over group_id.
     */
-  def dedupKeep(spark: SparkSession, dir: String, threshold: Double = 0.5,
-                precomputedPairs: Option[DataFrame] = None): DataFrame =
-    dedupKeepOf(spark, dir,
-      dedupGroups(spark, dir, threshold, precomputedPairs = precomputedPairs))
-
-  /** [[dedupKeep]]'s decision stage over an already-computed group
-    * labeling — the seam [[dedupAuditFamily]] drives so the closure
-    * runs once for the whole audit.
-    */
-  def dedupKeepOf(spark: SparkSession, dir: String,
-                  groups: DataFrame): DataFrame = {
+  def dedupKeep(spark: SparkSession, dir: String,
+                threshold: Double = 0.5): DataFrame = {
+    val groups = dedupGroups(spark, dir, threshold)
     val quality = TextAnalysis.textQuality(spark, dir)
       .select(col("doc_id"), col("quality_score"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1184,19 +1130,6 @@ object NearDup {
       .withColumn("keep_id", first("doc_id").over(w))
       .select(col("doc_id"), col("group_id"), col("keep_id"),
         (col("doc_id") === col("keep_id")).as("is_keep"))
-  }
-
-  /** [[dedupGroups]] in O(log n)-round form — same signature, same
-    * output contract (doc_id, group_id = min reachable doc_id). Use
-    * this over min-label when components can be LONG CHAINS
-    * (versioned documents: v1~v2~v3~…), where min-label needs
-    * diameter rounds; stars collapse a chain exponentially instead.
-    */
-  def dedupGroupsLogRound(spark: SparkSession, dir: String, threshold: Double = 0.5,
-                          maxIters: Int = 30): DataFrame = {
-    val pairs = minhashLshPairs(spark, dir, threshold).select("a_id", "b_id")
-    val nodes = Tables.documents(spark, dir).select(col("doc_id"))
-    starComponents(nodes, pairs, maxIters)._1
   }
 
   /** Connected components by LARGE-STAR / SMALL-STAR alternation
@@ -1332,16 +1265,8 @@ object NearDup {
     * claim.
     */
   def docsGroupSizes(spark: SparkSession, dir: String,
-                     threshold: Double = 0.5,
-                     precomputedPairs: Option[DataFrame] = None): DataFrame =
-    docsGroupSizesOf(
-      dedupGroups(spark, dir, threshold, precomputedPairs = precomputedPairs))
-
-  /** [[docsGroupSizes]]' histogram stage over an already-computed
-    * group labeling (the [[dedupAuditFamily]] seam).
-    */
-  def docsGroupSizesOf(groups: DataFrame): DataFrame =
-    groups
+                     threshold: Double = 0.5): DataFrame =
+    dedupGroups(spark, dir, threshold)
       .groupBy("group_id").agg(count(lit(1)).as("group_size"))
       .groupBy("group_size").agg(
         count(lit(1)).as("n_groups"),
@@ -1469,39 +1394,28 @@ object NearDup {
   /** INCREMENTAL ingest NEAR-dup — [[dedupIncremental]]'s production
     * shape lifted from exact content hashes to MinHash near-dups
     * (round-12, the one genuinely missing production dedup shape):
-    * a new batch of documents probes a PERSISTED LSH band-key
-    * MANIFEST of the already-ingested corpus, so snapshot N+1 is
-    * near-dup-checked against a 100 TB history WITHOUT re-pairing or
-    * re-scanning history — the reference's stored-hash deployment
-    * (Deduplicator.java:27 — dedup state persisted between runs)
-    * applied to near-duplicates. Output: one row per verified
-    * (batch doc, history doc) near-dup pair with its exact Jaccard.
+    * a new batch of documents probes an LSH band-key MANIFEST of the
+    * already-ingested corpus, so snapshot N+1 is near-dup-checked
+    * against history WITHOUT re-pairing history — the reference's
+    * stored-hash deployment (Deduplicator.java:27 — dedup state
+    * persisted between runs) applied to near-duplicates. Output: one
+    * row per verified (batch doc, history doc) near-dup pair with its
+    * exact Jaccard.
     *
-    * Shape: history's (doc_id, band, bh) band keys are written ONCE
-    * as a bh-bucketed sorted table ([[graft.sinks.GraftSink
-    * .writeBucketed]]) — THE manifest; in production it is
-    * maintained incrementally (append each ingested batch's keys)
-    * and read, not recomputed, exactly like [[dedupIncremental]]'s
-    * hash manifest. The batch (small by construction) sketches only
-    * itself, equi-joins the manifest scan on the single bucket key
-    * `bh` (manifest side exchange-free — the band-equality residual
-    * is a post-filter, since bh already hashes one band's signature
-    * slice), and candidates — bounded by banding, never
-    * batch×history — are verified with the family's shared exact-
-    * Jaccard two-phase seam ([[verifiedJaccard]]). History text is
-    * touched only for verify payloads of candidate ids.
+    * Shape: [[neardupAgainstManifest]] with history's (doc_id, band,
+    * bh) keys ([[bandManifestKeys]]) as the manifest frame — the one
+    * probe [[graft.streaming.NearDupStream.startManifestLoop]] also
+    * runs, there over its persisted table's scan. The batch (small by
+    * construction) sketches only itself and equi-joins the manifest
+    * on `bh`; candidates — bounded by banding, never batch×history —
+    * are verified with the family's shared exact-Jaccard two-phase
+    * seam ([[verifiedJaccard]]). Building the query writes nothing
+    * and creates no table.
     *
     * Recall contract = [[minhashLshPairs]]'s (a pair is missed only
     * if all 32 bands miss). The 20% batch split (doc_id % 5 == 0)
     * mirrors [[dedupIncremental]]'s deterministic arrival-date
-    * stand-in. NOTE: the manifest write + candidate materialization
-    * run at plan-BUILD time (the [[phase1Banded]] pattern — the
-    * returned frame must outlive the dropped temp table), so
-    * constructing this query executes jobs; plan-only consumers and
-    * production callers use the LAZY seams instead (round-13):
-    * [[writeBandManifest]] creates/appends the permanent table once,
-    * [[neardupAgainstManifest]] probes it with nothing executing
-    * until an action.
+    * stand-in.
     */
   def neardupIncremental(spark: SparkSession, dir: String,
                          threshold: Double = 0.5,
@@ -1511,14 +1425,8 @@ object NearDup {
     // payloads (the dedupIncremental materialize-once rule)
     val docs = shingled(spark, dir).localCheckpoint(eager = false)
     val isBatch = pmod(col("doc_id"), lit(5L)) === 0
-    val table = s"graft_nd_manifest_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
-    writeBandManifest(spark, bandManifestKeys(docs.filter(!isBatch)), table)
-    val cand =
-      try manifestCandidates(spark, docs.filter(isBatch), table)
-        .localCheckpoint() // eager: candidates must outlive the DROP below
-      finally spark.sql(s"DROP TABLE IF EXISTS $table")
-    verifiedJaccard(cand, docs, threshold, vb)
-      .select(col("a_id").as("doc_id"), col("b_id").as("hist_id"), col("jaccard"))
+    neardupAgainstManifest(docs.filter(isBatch),
+      bandManifestKeys(docs.filter(!isBatch)), docs, threshold, vb)
   }
 
   /** The MANIFEST PAYLOAD for a shingled corpus slice — one (doc_id,
@@ -1529,63 +1437,56 @@ object NearDup {
   def bandManifestKeys(shingledDocs: DataFrame): DataFrame =
     minhashBandKeys(minhashSignatures(shingledDocs))
 
-  /** Create (`append = false`) or MAINTAIN (`append = true`) the
-    * persisted bh-bucketed band-key manifest — the round-13
-    * write-back seam closing [[neardupIncremental]]'s production
-    * N+1 loop: after a batch is near-dup-checked and ACCEPTED, its
-    * band keys are APPENDED to the manifest (one bounded bucketed
-    * write, batch-sized), so the next batch probes history ∪ batch
-    * without the full-history rebuild each probe used to pay.
+  /** Create (`append = false`) or MAINTAIN (`append = true`) a
+    * persisted bh-bucketed band-key manifest — the stored state of
+    * the streaming N+1 loop
+    * ([[graft.streaming.NearDupStream.startManifestLoop]]): after a
+    * batch is near-dup-checked and ACCEPTED, its band keys are
+    * APPENDED (one bounded bucketed write, batch-sized), so the next
+    * batch probes history ∪ batch without a full-history rebuild.
     * Equivalence is structural: the manifest is a plain row set
     * keyed on bh, and bucketed append preserves the layout contract
     * ([[graft.sinks.GraftSink.appendBucketed]]), so probe(manifest₀
     * ++ append(keys(b₁)), b₂) ≡ probe(rebuild(h ∪ b₁), b₂) — the
-    * two-batch equality Round13Spec pins. `buckets` must match the
-    * existing table on append (0 = the session shuffle-partition
-    * default, the [[neardupIncremental]] convention).
+    * two-batch equality Round13Spec pins. The bucket count is the
+    * session's shuffle-partition count, the same on create and on
+    * every append.
     */
   def writeBandManifest(spark: SparkSession, keys: DataFrame,
-                        table: String, append: Boolean = false,
-                        buckets: Int = 0): Unit = {
-    val b = if (buckets > 0) buckets
-            else spark.sessionState.conf.numShufflePartitions
+                        table: String, append: Boolean = false): Unit = {
+    val b = spark.sessionState.conf.numShufflePartitions
     if (append) graft.sinks.GraftSink.appendBucketed(keys, table, "bh", b)
     else graft.sinks.GraftSink.writeBucketed(keys, table, "bh", b)
   }
 
   /** Banding-bounded candidate pairs of a shingled batch against a
-    * persisted manifest table: equi-join on the single bucket key
-    * `bh` (manifest side exchange-free over the bucketed scan), the
-    * band-equality residual as a post-filter, distinct-ed. Lazy —
-    * the caller decides whether to materialize (the contract query
-    * must, before dropping its temp manifest) or compose further
-    * (the production probe, whose manifest is permanent).
+    * (doc_id, band, bh) manifest frame — [[bandManifestKeys]] of
+    * history, or the scan of a [[writeBandManifest]] table:
+    * equi-join on the single key `bh`, the band-equality residual as
+    * a post-filter, distinct-ed. Lazy.
     */
-  def manifestCandidates(spark: SparkSession, batchShingled: DataFrame,
-                         table: String): DataFrame = {
-    val manifest = spark.table(table)
+  def manifestCandidates(batchShingled: DataFrame,
+                         manifest: DataFrame): DataFrame = {
+    val m = manifest
       .select(col("doc_id").as("b_id"), col("band").as("h_band"), col("bh"))
     bandManifestKeys(batchShingled)
-      .join(manifest, "bh")
+      .join(m, "bh")
       .filter(col("band") === col("h_band"))
       .select(col("doc_id").as("a_id"), col("b_id"))
       .distinct()
   }
 
-  /** The PRODUCTION probe: verified near-dup pairs of a shingled
-    * batch against a PERMANENT manifest table — [[neardupIncremental]]
-    * without the per-call manifest rebuild (ADVICE round-12: the
-    * contract query builds and drops a temp manifest at plan time;
-    * a real N+1 loop holds the table across runs, probes it here,
-    * and on accept appends the batch's keys via
-    * [[writeBandManifest]]). `verifyDocs` supplies shingle payloads
+  /** Verified near-dup pairs of a shingled batch against a band-key
+    * manifest frame — the one probe behind [[neardupIncremental]]
+    * (history's keys as a frame) and the streaming loop (its
+    * persisted table's scan). `verifyDocs` supplies shingle payloads
     * for every candidate id (batch ∪ history). Fully lazy.
     */
-  def neardupAgainstManifest(spark: SparkSession, batchShingled: DataFrame,
-                             table: String, verifyDocs: DataFrame,
+  def neardupAgainstManifest(batchShingled: DataFrame, manifest: DataFrame,
+                             verifyDocs: DataFrame,
                              threshold: Double = 0.5,
                              verifyBands: Int = 1): DataFrame =
-    verifiedJaccard(manifestCandidates(spark, batchShingled, table),
+    verifiedJaccard(manifestCandidates(batchShingled, manifest),
         verifyDocs, threshold, verifyBands)
       .select(col("a_id").as("doc_id"), col("b_id").as("hist_id"), col("jaccard"))
 

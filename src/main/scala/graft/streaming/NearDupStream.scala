@@ -137,7 +137,10 @@ object NearDupStream {
     * history ∪ batch N. History is never re-sketched or re-paired —
     * per-batch work is O(batch) sketches + banding-bounded verifies
     * at ANY history size, which is what makes this the 100 TB
-    * rolling-ingest shape.
+    * rolling-ingest shape. The probe is the one
+    * [[NearDup.neardupIncremental]] runs, given the table's scan as
+    * its manifest frame; the table is persisted because the manifest
+    * outlives every batch.
     *
     * Failure/replay semantics (foreachBatch is at-least-once): the
     * pair output is IDEMPOTENT (overwrite of the batch's own
@@ -169,7 +172,7 @@ object NearDupStream {
         // shingle ONCE; the frame feeds probe + verify + two appends
         val b = NearDup.shingledDocs(batch).localCheckpoint()
         val verify = b.unionByName(spark.table(corpusTable))
-        NearDup.neardupAgainstManifest(spark, b, manifestTable, verify,
+        NearDup.neardupAgainstManifest(b, spark.table(manifestTable), verify,
             threshold, verifyBands)
           .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
         NearDup.writeBandManifest(spark, NearDup.bandManifestKeys(b),

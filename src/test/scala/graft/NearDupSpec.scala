@@ -69,7 +69,8 @@ class NearDupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === expect)
     // the log-round star rendering is a drop-in: identical labeling
-    val star = NearDup.dedupGroupsLogRound(spark, sf)
+    val star = NearDup.starComponents(Tables.documents(spark, sf).select("doc_id"),
+        NearDup.minhashLshPairs(spark, sf).select("a_id", "b_id"))._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star === expect)
   }

@@ -2045,18 +2045,6 @@ class OperatorSpec extends SparkSpec {
     assert(r1 <= r3 && r3 <= r5)
   }
 
-  test("dedup audit family through the shared pair seam equals recompute") {
-    import graft.operators.NearDup
-    val (venn, sizes, keep) = NearDup.dedupAuditFamily(spark, sf)
-    def key(r: org.apache.spark.sql.Row) = r.toSeq.map(String.valueOf).mkString("|")
-    assert(venn.collect().map(key).sorted.toSeq ===
-      NearDup.docsDetectorVenn(spark, sf).collect().map(key).sorted.toSeq)
-    assert(sizes.collect().map(key).sorted.toSeq ===
-      NearDup.docsGroupSizes(spark, sf).collect().map(key).sorted.toSeq)
-    assert(keep.collect().map(key).sorted.toSeq ===
-      NearDup.dedupKeep(spark, sf).collect().map(key).sorted.toSeq)
-  }
-
   test("merged interval spans cover events and never overlap") {
     import graft.operators.Relational
     val spans = Relational.qMergeIntervals(spark, sf).collect()

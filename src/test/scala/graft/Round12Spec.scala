@@ -152,6 +152,43 @@ class Round12Spec extends SparkSpec {
     assert(inc.count() > 0, "fixture produced no cross-split near-dups — spec is vacuous")
   }
 
+  test("building the incremental near-dup query runs no write command and adds no table") {
+    import graft.operators.NearDup
+    import org.apache.spark.sql.catalyst.plans.logical.Command
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val commands = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      private def seen(qe: QueryExecution): Unit =
+        if (qe.logical.isInstanceOf[Command]) commands.add(qe.logical.nodeName)
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen(qe)
+    }
+    def tables() = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables()
+    val ctl = "graft_r12_build_ctl"
+    spark.listenerManager.register(listener)
+    try {
+      val jobs = jobsScheduledBy(NearDup.neardupIncremental(spark, sf))
+      info(s"building neardupIncremental scheduled $jobs jobs")
+      // jobsScheduledBy returns after its marker job is delivered, and the
+      // listener shares that in-order bus, so every command event of the
+      // build has been seen by now
+      val duringBuild = commands.toArray.toSeq
+      assert(duringBuild.isEmpty, s"plan construction ran commands: $duringBuild")
+      assert(tables() === before, "plan construction changed the catalog")
+      // control: the listener does see a bucketed table write
+      jobsScheduledBy(graft.sinks.GraftSink.writeBucketed(
+        spark.range(4).toDF("k"), ctl, "k", 2))
+      assert(!commands.isEmpty, "the listener saw no command for a table write")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.sql(s"DROP TABLE IF EXISTS $ctl")
+    }
+  }
+
   test("label propagation: hand-computed majority, ties, clamping, unreachable nodes") {
     import graft.operators.Ann
     import spark.implicits._

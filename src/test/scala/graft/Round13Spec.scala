@@ -27,9 +27,9 @@ class Round13Spec extends SparkSpec {
       // the from-scratch control: one manifest over history ∪ b1
       NearDup.writeBandManifest(spark,
         NearDup.bandManifestKeys(h.unionByName(b1)), tRebuild)
-      val maint = NearDup.neardupAgainstManifest(spark, b2, tMaint, sliced)
+      val maint = NearDup.neardupAgainstManifest(b2, spark.table(tMaint), sliced)
         .localCheckpoint()
-      val rebuild = NearDup.neardupAgainstManifest(spark, b2, tRebuild, sliced)
+      val rebuild = NearDup.neardupAgainstManifest(b2, spark.table(tRebuild), sliced)
       assert(maint.exceptAll(rebuild).isEmpty && rebuild.exceptAll(maint).isEmpty,
         "appended manifest must probe identically to a full rebuild")
       assert(maint.count() > 0,
@@ -79,11 +79,11 @@ class Round13Spec extends SparkSpec {
       val b1s = NearDup.shingledDocs(b1.toDF("doc_id", "text")).localCheckpoint()
       val b2s = NearDup.shingledDocs(b2.toDF("doc_id", "text")).localCheckpoint()
       NearDup.writeBandManifest(spark, NearDup.bandManifestKeys(hs), tCtl)
-      val e1 = NearDup.neardupAgainstManifest(spark, b1s, tCtl,
+      val e1 = NearDup.neardupAgainstManifest(b1s, spark.table(tCtl),
         b1s.unionByName(hs)).localCheckpoint()
       NearDup.writeBandManifest(spark, NearDup.bandManifestKeys(b1s), tCtl,
         append = true)
-      val e2 = NearDup.neardupAgainstManifest(spark, b2s, tCtl,
+      val e2 = NearDup.neardupAgainstManifest(b2s, spark.table(tCtl),
         b2s.unionByName(hs).unionByName(b1s)).localCheckpoint()
       val expect = e1.unionByName(e2)
       assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty,

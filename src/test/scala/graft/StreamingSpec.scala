@@ -186,7 +186,8 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.NearDupStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val sigs = NearDup.minhashLshSignatures(spark, sf).collect()
+    val corpusSigs = NearDup.minhashSignatures(NearDup.shingledDocs(Tables.documents(spark, sf)))
+    val sigs = corpusSigs.collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1)
     val (b1, b2) = sigs.splitAt(sigs.length / 2)
     val input = MemoryStream[(Long, Seq[Long])]
@@ -198,7 +199,7 @@ class StreamingSpec extends SparkSpec {
       input.addData(b2.toSeq: _*); q.processAllAvailable()
       val got = spark.table("minhash_cand").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val bands = NearDup.minhashBandKeys(NearDup.minhashLshSignatures(spark, sf))
+      val bands = NearDup.minhashBandKeys(corpusSigs)
       val expect = bands.as("a").join(bands.as("b"),
           col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
             col("a.doc_id") < col("b.doc_id"))
@@ -218,7 +219,8 @@ class StreamingSpec extends SparkSpec {
     def thirds[T](xs: Seq[T]): Seq[Seq[T]] = xs.grouped((xs.size + 2) / 3).toSeq
     val fps = thirds(NearDup.simhashFingerprints(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq)
-    val sigs = thirds(NearDup.minhashLshSignatures(spark, sf).collect()
+    val sigs = thirds(NearDup.minhashSignatures(NearDup.shingledDocs(Tables.documents(spark, sf)))
+      .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq)
     // the triggers through a checkpointed file sink; the query stops
     // after trigger `stopAfter`, the next trigger's rows arrive while it

@@ -89,6 +89,18 @@ if [ -n "$edges" ]; then
   echo "$edges" >&2
   exit 1
 fi
+# One path per near-dup job: every near-dup query computes its own pairs
+# and the incremental query probes its manifest as a frame through
+# NearDup.manifestCandidates, so a precomputed-pair seam, a test-only
+# wrapper or a per-call temp manifest cannot grow back.
+neardup=$(grep -rnE 'dedupAuditFamily|precomputedPairs|dedupGroupsLogRound|graft_nd_manifest' \
+  src/main/scala || true)
+if [ -n "$neardup" ]; then
+  echo "[precommit] second near-dup path under src/main/scala;" \
+    "probe manifests as frames, compute pairs per query:" >&2
+  echo "$neardup" >&2
+  exit 1
+fi
 sbt -batch compile Test/compile
 sbt -batch 'runMain graft.Scratch'
 echo "[precommit] OK"
